@@ -19,7 +19,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * text/dedup family's whole tokenize+md5 compute ran 1-of-32 cores).
   * When the table's on-disk size is inside
   * [spark.graft.spread.minBytes, spark.graft.spread.maxBytes]
-  * (defaults 64 KB..64 MB), the load round-robin-repartitions to the
+  * (defaults 16 KB..64 MB), the load round-robin-repartitions to the
   * session's default parallelism: the exchange moves ≤ maxBytes once
   * (milliseconds) and unlocks full-width execution of the per-row
   * work. SCALE-ADAPTIVE by construction: above maxBytes (any

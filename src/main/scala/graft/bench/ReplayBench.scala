@@ -55,48 +55,10 @@ object ReplayBench {
     def throughput: Double = (scheduled + fetched) / wallSec
   }
 
-  /** Env-gated (SPARK_GRAFT_STAGE_DUMP=1) per-Spark-stage metrics via
-    * a listener: wall (submit→complete), summed task run time, max
-    * task time, task count — the scaling-limiter microscope (which
-    * stages stop parallelizing between local[N] and local[4N]).
-    */
-  private final class StageDump extends org.apache.spark.scheduler.SparkListener {
-    val rows = scala.collection.mutable.ArrayBuffer
-      .empty[(Int, String, Int, Double, Double, Double, Double, Double, Double)]
-    override def onStageCompleted(
-        sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-      val i = sc.stageInfo
-      val wall = (for {a <- i.submissionTime; b <- i.completionTime} yield (b - a) / 1e3)
-        .getOrElse(-1.0)
-      val m = i.taskMetrics
-      rows += ((i.stageId, i.name.takeWhile(_ != '\n').take(60), i.numTasks,
-        wall, m.executorRunTime / 1e3, m.executorCpuTime / 1e9,
-        m.shuffleWriteMetrics.bytesWritten / 1e6,
-        m.shuffleReadMetrics.totalBytesRead / 1e6,
-        (m.memoryBytesSpilled + m.diskBytesSpilled) / 1e6))
-    }
-    def dump(tag: String): Unit = {
-      rows.sortBy(-_._4).take(14).foreach {
-        case (id, name, nt, wall, run, cpu, sw, sr, sp) =>
-          System.err.println(f"[stagedump $tag] id=$id tasks=$nt wall=$wall%.2fs " +
-            f"taskRunSum=$run%.2fs taskCpuSum=$cpu%.2fs " +
-            f"shWr=${sw}%.0fMB shRd=${sr}%.0fMB spill=${sp}%.0fMB $name")
-      }
-      rows.clear()
-    }
-  }
-
-  /** One full pipeline pass; returns counts + wall time.
-    * `fineStages`: also time each sub-pipeline with its own action
-    * (debugging only — recomputes prefixes, inflates wall time).
-    */
+  /** One full pipeline pass; returns counts + wall time. */
   def run(spark: SparkSession, n: Long, saltCount: Int = 256,
           tokensPerTick: Int = 16, ticksFetchable: Long = 256,
-          bloomP: Int = 64, fineStages: Boolean = false): PipelineStats = {
-    val stageDump =
-      if (sys.env.get("SPARK_GRAFT_STAGE_DUMP").contains("1")) {
-        val l = new StageDump; spark.sparkContext.addSparkListener(l); Some(l)
-      } else None
+          bloomP: Int = 64): PipelineStats = {
     import spark.implicits._
     val stages = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     var tPrev = System.nanoTime()
@@ -152,17 +114,11 @@ object ReplayBench {
     // where the state is ~12 GB). The cogroup costs a full-width
     // candidate shuffle — A/B at 2M URLs: broadcast 13.9s / cogroup
     // 19.9s at local[8], N→4N efficiency 0.80 vs 0.64.
-    // SPARK_GRAFT_PROBE=broadcast|cogroup forces a path for A/Bs.
     // persisted: BOTH branches of the bloom split consume it — without
     // the persist the probe shuffle (and everything upstream) runs twice
     val sketchStateBytes = bloomP.toLong * (params.numBits / 8)
-    val useBroadcast = sys.env.get("SPARK_GRAFT_PROBE") match {
-      case Some("broadcast") => true
-      case Some("cogroup") => false
-      case _ => sketchStateBytes <= (8L << 20)
-    }
     val probed =
-      (if (useBroadcast)
+      (if (sketchStateBytes <= (8L << 20))
         SeenFilter.probeBloom(first, "seen_key", bloomP, params,
           SeenFilter.collectSketches(sketchDf))
       else
@@ -189,14 +145,6 @@ object ReplayBench {
     // schedule→fetch→extract leg is ONE action; the intermediate
     // counts come from observe() metrics instead of extra jobs or
     // persisted stage boundaries (no cache pressure, one pipeline).
-    if (fineStages) {
-      cand.agg(count(lit(1))).collect(); mark("f_gen")
-      kept.agg(count(lit(1))).collect(); mark("f_filter")
-      first.agg(count(lit(1))).collect(); mark("f_firstwins")
-      newKeys.agg(count(lit(1))).collect(); mark("f_seen")
-      allowed.agg(count(lit(1))).collect(); mark("f_robots")
-      assigned.groupBy().count().collect(); mark("f_sched")
-    }
     val obsSched = org.apache.spark.sql.Observation()
     val obsFetch = org.apache.spark.sql.Observation()
     val docs = assigned
@@ -213,11 +161,6 @@ object ReplayBench {
       .observe(obsFetch, count(lit(1)).as("fetched"), sum(size(col("spans"))).as("spans"))
     Extract.extractLongRows(docs).count()
     mark("schedule_fetch_extract")
-    stageDump.foreach { l =>
-      Thread.sleep(500) // let the async listener bus drain
-      l.dump(s"cores=${spark.sparkContext.defaultParallelism}")
-      spark.sparkContext.removeSparkListener(l)
-    }
     val scheduled = obsSched.get("scheduled").asInstanceOf[Long]
     val fetched = obsFetch.get("fetched").asInstanceOf[Long]
     val spans = obsFetch.get("spans").asInstanceOf[Long]

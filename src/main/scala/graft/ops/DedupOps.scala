@@ -384,7 +384,6 @@ object DedupOps {
           col("x.label") === col("lid"), "left")
         .select(col("x.id").as("id"),
           coalesce(col("llabel"), col("x.label")).as("label"))
-      val t0 = System.nanoTime()
       val next = truncated(next0).persist(StorageLevel.MEMORY_AND_DISK)
       val newSum = labelSum(next) // materializes `next`; one narrow agg
       labels.unpersist()
@@ -392,8 +391,6 @@ object DedupOps {
       converged = newSum.compareTo(prevSum) == 0
       prevSum = newSum
       iter += 1
-      if (sys.env.get("SPARK_GRAFT_CC_DEBUG").contains("1"))
-        System.err.println(f"[cc] iter=$iter sum=$newSum wall=${(System.nanoTime() - t0) / 1e9}%.2fs")
     }
     if (!converged)
       System.err.println(s"[graft] WARNING: connectedComponents hit maxIter=$maxIter " +

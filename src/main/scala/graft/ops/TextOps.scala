@@ -125,7 +125,7 @@ object TextOps {
     * only to read two of them once).
     *
     * THE REPEATED tokens(text) IS FREE AT RUNTIME (VERDICT r6 #4,
-    * A/B'd in GateABProbe): whole-stage codegen eliminates the common
+    * A/B'd): whole-stage codegen eliminates the common
     * subexpression across the two conjuncts, so the inline gate times
     * identically to a single-regexp formulation — sf0.1 noop sink:
     * inline 0.21–0.23 s vs a one-pass aggregate(tokens, (n,hit),

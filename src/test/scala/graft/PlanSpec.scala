@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * (SURVEY.md §4.2, VERDICT r1 follow-ups) asserted against the
   * executed plan string, so a future edit that silently reintroduces
   * a shuffle / drops a broadcast / breaks pushdown fails `sbt test`,
-  * not a bench round later. (graft.bench.ExplainCheck remains the
+  * not a bench round later. (`graft.bench.Probe plan` remains the
   * human-readable audit over the same plans.)
   */
 class PlanSpec extends SparkSpec {
