@@ -1,7 +1,7 @@
 package graft.extract
 
+import graft.model.Span
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Span-pipeline scalar functions + the interleaved-document
@@ -16,11 +16,24 @@ import org.apache.spark.sql.functions._
   *    (page, table, row) lexicographic position is the spans array's
   *    `offset` field; extraction must respect it.
   *
-  * All scalar pieces are built-in expressions (codegen'd, no UDFs).
-  * The per-document "nearest prior category span" scan is a window
-  * over posexplode(spans) partitioned by doc_id — one hash shuffle on
-  * doc_id, no global sort, which is the scalable formulation (each
-  * doc's spans are bounded; docs are the parallelism unit).
+  * Extraction is one deterministic Scala UDF per document: a stable
+  * sort of its spans by `offset`, then a single left fold built from
+  * the Scala twins (`normalizeTextScala`, `extractFirstNumberScala`,
+  * `positiveAmountScala`), exploded next to the untouched doc_id —
+  * a narrow map-only pass, no shuffle (each doc's spans are bounded;
+  * docs are the parallelism unit). The same fold written as built-in
+  * higher-order functions (`aggregate` over `array_sort`) is
+  * CodegenFallback in Spark 4.1: it ran interpreted per span, with no
+  * common-subexpression elimination, and made the extract layer of
+  * perfbench's frontier_1host workload 2.5× slower (median traced self
+  * time 1.08 s vs 0.44 s over four runs, 4 vCPU). CanonExtractSpec
+  * keeps that form as the differential oracle.
+  *
+  * The Column helpers remain: `extractFirstNumber`, `parseAmount` and
+  * `cleanSentinel` serve `Report`, `RelationalQueries` and
+  * `CrawlQueries`; `normalizeText` is E-str4 as a Column, which that
+  * oracle uses. CanonExtractSpec pins each helper that has a Scala
+  * twin against it.
   */
 object Extract {
 
@@ -38,8 +51,10 @@ object Extract {
   def normalizeText(c: Column): Column =
     regexp_replace(translate(c, ":", "："), "\\s+", "")
 
+  private val Whitespace = "\\s+".r
+
   def normalizeTextScala(s: String): String =
-    s.replace(":", "：").replaceAll("\\s+", "")
+    Whitespace.replaceAllIn(s.replace(":", "："), "")
 
   /** E-str6: ordered regex ladder, first match wins:
     * grouped-decimal-2dp → grouped-decimal → grouped-int →
@@ -66,10 +81,10 @@ object Extract {
   def extractFirstNumber(c: Column): Column =
     coalesce(LadderPatterns.map(p => nullif(regexp_extract(c, p, 0), lit(""))): _*)
 
+  private val LadderRegexes = LadderPatterns.map(_.r)
+
   def extractFirstNumberScala(s: String): Option[String] =
-    LadderPatterns.view
-      .map(p => p.r.findFirstIn(s))
-      .collectFirst { case Some(m) => m }
+    LadderRegexes.iterator.flatMap(_.findFirstIn(s)).nextOption()
 
   /** E-str8: comma/space-strip then exact decimal parse. try_cast:
     * Spark 4 runs ANSI mode, and sentinel junk must yield null, not
@@ -77,6 +92,22 @@ object Extract {
     */
   def parseAmount(c: Column): Column =
     regexp_replace(c, "[,\\s]", "").try_cast("decimal(20,2)")
+
+  private val AmountJunk = "[,\\s]".r
+
+  /** Scala twin of `parseAmount(c) > 0` (null counts as false): the
+    * same strip, then decimal(20,2) — round HALF_UP to 2 places, null
+    * past 20 digits of precision. The integral-digit test first keeps
+    * junk like "1e999999999" from being expanded by `setScale`.
+    */
+  def positiveAmountScala(s: String): Boolean =
+    try {
+      val d = new java.math.BigDecimal(AmountJunk.replaceAllIn(s, "").trim)
+      d.precision - d.scale <= 18 && {
+        val r = d.setScale(2, java.math.RoundingMode.HALF_UP)
+        r.precision <= 20 && r.signum > 0
+      }
+    } catch { case _: NumberFormatException => false }
 
   /** F8: sentinel → '0', else unchanged. */
   def cleanSentinel(c: Column): Column =
@@ -114,53 +145,51 @@ object Extract {
     *    report_info_collection.py:124-139), so a category header can
     *    never be inherited across a table break.
     */
-  def extractLongRows(docs: DataFrame): DataFrame = {
-    // Single NARROW pass: the per-document "nearest prior non-empty
-    // span" scan is a left fold over the spans array (higher-order
-    // aggregate), not a posexplode + window — no shuffle at all, and
-    // each document's state is one (current_category, emitted) pair.
-    // At the 10^10 design point this is the difference between a
-    // map-only stage and re-sorting every span row by doc_id.
-    val outType = "array<struct<item:string,amount_str:string,offset:int>>"
-    val folded = aggregate(
-      array_sort(col("spans"), (l, r) => l.getField("offset") - r.getField("offset")),
-      struct(lit(null).cast("string").as("cat"),
-        array().cast(outType).as("out")),
-      (acc, s) => {
-        val n = normalizeText(s.getField("text"))
-        val isBreak = s.getField("kind") === "break"
-        val nonEmpty = s.getField("kind") === "text" && n.isNotNull && (n =!= "")
-        val hasK = nonEmpty && n.contains(TargetKeyword)
-        // marker for ANY non-empty text span: the first named category
-        // (reference scans normalized_cells for each PARENT_CATEGORY
-        // in order), null when none — null RESETS the parent state
-        val marker = Categories.foldRight(lit(null).cast("string")) { (c, alt) =>
-          when(n.contains(c), lit(c)).otherwise(alt)
-        }
-        // first POSITIVE number, scanning '|'-cells after the keyword
-        // (reference: per-cell extract, skip cells whose number is
-        // not > 0, report_info_collection.py:177-184)
-        val cellNums = transform(split(substring_index(n, TargetKeyword, -1), "\\|"),
-          c => extractFirstNumber(c))
-        val amount = get(filter(cellNums, x => x.isNotNull && parseAmount(x) > 0), lit(0))
-        val emit = hasK && acc.getField("cat").isNotNull && amount.isNotNull
-        val newOut = when(emit,
-          concat(acc.getField("out"), array(struct(
-            acc.getField("cat").as("item"), amount.as("amount_str"),
-            s.getField("offset").as("offset")))))
-          .otherwise(acc.getField("out"))
-        struct(
-          when(isBreak, lit(null).cast("string")) // table boundary: reset
-            .when(nonEmpty, marker)
-            .otherwise(acc.getField("cat")).as("cat"),
-          newOut.as("out"))
-      },
-      acc => acc.getField("out"))
+  def extractLongRows(docs: DataFrame): DataFrame =
+    // Single NARROW pass: one per-document fold, exploded next to the
+    // untouched doc_id (whatever its type) — no shuffle at all.
     docs
-      .select(col("doc_id"), explode(folded).as("r"))
+      .select(col("doc_id"), explode(foldSpansUdf(col("spans"))).as("r"))
       .select(col("doc_id"), col("r.item").as("item"),
         col("r.amount_str").as("amount_str"),
         lit("table_scan").as("method"), col("r.offset").as("offset"))
+
+  /** One accepted keyword row of a document (the fold's output). */
+  final case class SpanHit(item: String, amount_str: String, offset: Int)
+
+  private val foldSpansUdf = udf((spans: Seq[Span]) => foldSpans(spans))
+
+  /** The per-document left fold behind [[extractLongRows]]: spans in
+    * `offset` order (stable, so equal offsets keep array order;
+    * `Ordering.Int` compares without subtracting, so no overflow), each
+    * span's text normalized once, state = the current parent category.
+    */
+  private def foldSpans(spans: Seq[Span]): Seq[SpanHit] = {
+    if (spans == null) return Nil
+    val out = Seq.newBuilder[SpanHit]
+    var cat: String = null
+    for (s <- spans.sortBy(_.offset)) {
+      if (s.kind == "break") cat = null // table boundary: reset
+      else if (s.kind == "text" && s.text != null) {
+        val n = normalizeTextScala(s.text)
+        if (n.nonEmpty) {
+          val k = n.lastIndexOf(TargetKeyword)
+          if (k >= 0 && cat != null) {
+            // first POSITIVE number, scanning '|'-cells after the
+            // keyword (reference: per-cell extract, skip cells whose
+            // number is not > 0, report_info_collection.py:177-184)
+            val amount = n.substring(k + TargetKeyword.length).split("\\|", -1).iterator
+              .flatMap(extractFirstNumberScala).find(positiveAmountScala)
+            amount.foreach(a => out += SpanHit(cat, a, s.offset))
+          }
+          // any non-empty text span: the first named category
+          // (reference scans normalized_cells for each PARENT_CATEGORY
+          // in order), null when none — null RESETS the parent state
+          cat = Categories.find(c => n.contains(c)).orNull
+        }
+      }
+    }
+    out.result()
   }
 
   /** J5: dense long output — every (doc, category) pair present,

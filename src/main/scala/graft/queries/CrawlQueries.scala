@@ -178,7 +178,7 @@ object CrawlQueries {
 
     // The interleaved-spans extraction operator (E-arr1/2, F7,
     // E-str4/6) — the input_hint table shape end-to-end: derived
-    // spans array → higher-order fold → long rows, vs a pure-SQL
+    // spans array → per-document fold → long rows, vs a pure-SQL
     // window restatement in DuckDB.
     "extract_long_rows" -> ((s, d) =>
       Extract.extractLongRows(deriveSpanDocs(s, d))

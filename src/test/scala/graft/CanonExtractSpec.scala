@@ -2,6 +2,10 @@ package graft
 
 import graft.canon.Canon
 import graft.extract.Extract
+import graft.extract.Extract.{Categories, TargetKeyword, extractFirstNumber, normalizeText, parseAmount}
+import graft.gen.Fixtures
+import graft.model.{Doc, Span}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 
@@ -14,6 +18,78 @@ class CanonExtractSpec extends SparkSpec {
   private def evalStr(c: org.apache.spark.sql.Column, input: Seq[String]): Seq[String] = {
     val s = spark; import s.implicits._
     input.toDF("v").select(c).collect().map(r => if (r.isNullAt(0)) null else r.getString(0)).toSeq
+  }
+
+  /** Test-only oracle: the former `Extract.extractLongRows`, the same
+    * fold as built-in higher-order functions (interpreted per span),
+    * kept verbatim as the differential reference for the Scala fold.
+    */
+  private def hofExtractLongRows(docs: DataFrame): DataFrame = {
+    // Single NARROW pass: the per-document "nearest prior non-empty
+    // span" scan is a left fold over the spans array (higher-order
+    // aggregate), not a posexplode + window — no shuffle at all, and
+    // each document's state is one (current_category, emitted) pair.
+    // At the 10^10 design point this is the difference between a
+    // map-only stage and re-sorting every span row by doc_id.
+    val outType = "array<struct<item:string,amount_str:string,offset:int>>"
+    val folded = aggregate(
+      array_sort(col("spans"), (l, r) => l.getField("offset") - r.getField("offset")),
+      struct(lit(null).cast("string").as("cat"),
+        array().cast(outType).as("out")),
+      (acc, s) => {
+        val n = normalizeText(s.getField("text"))
+        val isBreak = s.getField("kind") === "break"
+        val nonEmpty = s.getField("kind") === "text" && n.isNotNull && (n =!= "")
+        val hasK = nonEmpty && n.contains(TargetKeyword)
+        // marker for ANY non-empty text span: the first named category
+        // (reference scans normalized_cells for each PARENT_CATEGORY
+        // in order), null when none — null RESETS the parent state
+        val marker = Categories.foldRight(lit(null).cast("string")) { (c, alt) =>
+          when(n.contains(c), lit(c)).otherwise(alt)
+        }
+        // first POSITIVE number, scanning '|'-cells after the keyword
+        // (reference: per-cell extract, skip cells whose number is
+        // not > 0, report_info_collection.py:177-184)
+        val cellNums = transform(split(substring_index(n, TargetKeyword, -1), "\\|"),
+          c => extractFirstNumber(c))
+        val amount = get(filter(cellNums, x => x.isNotNull && parseAmount(x) > 0), lit(0))
+        val emit = hasK && acc.getField("cat").isNotNull && amount.isNotNull
+        val newOut = when(emit,
+          concat(acc.getField("out"), array(struct(
+            acc.getField("cat").as("item"), amount.as("amount_str"),
+            s.getField("offset").as("offset")))))
+          .otherwise(acc.getField("out"))
+        struct(
+          when(isBreak, lit(null).cast("string")) // table boundary: reset
+            .when(nonEmpty, marker)
+            .otherwise(acc.getField("cat")).as("cat"),
+          newOut.as("out"))
+      },
+      acc => acc.getField("out"))
+    docs
+      .select(col("doc_id"), explode(folded).as("r"))
+      .select(col("doc_id"), col("r.item").as("item"),
+        col("r.amount_str").as("amount_str"),
+        lit("table_scan").as("method"), col("r.offset").as("offset"))
+  }
+
+  /** Fold and oracle agree row for row: equal counts, empty
+    * `exceptAll` both ways. Returns the row count.
+    */
+  private def assertSameAsOracle(docs: Seq[Doc]): Long = {
+    val s = spark; import s.implicits._
+    val df = docs.toDS().toDF().cache()
+    try {
+      val got = Extract.extractLongRows(df)
+      val want = hofExtractLongRows(df)
+      val n = got.count()
+      assert(n == want.count())
+      val extra = got.exceptAll(want).take(5)
+      val missing = want.exceptAll(got).take(5)
+      assert(extra.isEmpty && missing.isEmpty,
+        s"fold only: ${extra.mkString(", ")}; oracle only: ${missing.mkString(", ")}")
+      n
+    } finally df.unpersist()
   }
 
   test("F1 titleFilter: empty targetYears degrades to the digit-free branch (ADVICE r5)") {
@@ -201,5 +277,77 @@ class CanonExtractSpec extends SparkSpec {
     val got = evalStr(Extract.extractFirstNumber(col("v")),
       Seq("1234.56", "共 98765.43 元", "1,234.56"))
     assert(got == Seq("1234.56", "98765.43", "1,234.56"))
+  }
+
+  test("parseAmount > 0: column == Scala twin positiveAmountScala (E-str8)") {
+    val gen = Gen.oneOf(
+      Gen.const("0.005"), Gen.const("0.001"), Gen.const("1234567890123456789"),
+      Gen.const("999999999999999999.99"), Gen.const("999999999999999999.995"),
+      Gen.const("1,234.56"), Gen.const(" 7 "), Gen.const("0"), Gen.const("0.00"),
+      Gen.const("-5"), Gen.const("N/A"), Gen.const(""), Gen.const("abc"),
+      Gen.const("1,2,3"), Gen.const("1.2.3"), Gen.const("元"), Gen.const("1e3"),
+      Gen.const("1e999999999"), Gen.const("5e-3"),
+      Gen.chooseNum(0, 99999999).map(n => f"$n%,d"),
+      Gen.chooseNum(0L, 99999999999L).map(n => s"${n / 1000}.${n % 1000}"),
+      Gen.alphaNumStr.map(_.take(6)))
+    val samples = Gen.listOfN(120, gen).sample.get ++
+      Seq("0.005", "0.001", "1234567890123456789", "junk")
+    val s = spark; import s.implicits._
+    val got = samples.toDF("v").select(coalesce(parseAmount(col("v")) > 0, lit(false)))
+      .collect().map(_.getBoolean(0)).toSeq
+    assert(got == samples.map(Extract.positiveAmountScala))
+    assert(Extract.positiveAmountScala("0.005"))               // rounds up to 0.01
+    assert(!Extract.positiveAmountScala("0.001"))              // rounds to 0
+    assert(!Extract.positiveAmountScala("1234567890123456789")) // overflows decimal(20,2)
+    assert(!Extract.positiveAmountScala("junk"))
+  }
+
+  test("extractLongRows: offsets far apart sort without ANSI overflow") {
+    // a comparator that subtracts offsets overflows here
+    // (Int.MaxValue - Int.MinValue): ARITHMETIC_OVERFLOW under ANSI
+    // mode fails the whole task
+    val s = spark; import s.implicits._
+    val doc = Doc("o1", Seq(
+      Span("text", "其中：数据资源 | 5 | 元", null, Int.MaxValue),
+      Span("text", "存货", null, Int.MinValue),
+      Span("text", "其中：数据资源 | 6 | 元", null, 0)))
+    val got = Extract.extractLongRows(Seq(doc).toDS().toDF())
+      .select("item", "amount_str", "offset").collect()
+      .map(r => (r.getString(0), r.getString(1), r.getInt(2)))
+    // sorted: 存货 (MinValue) parents the row at 0; that keyword row
+    // names no category, so the row at MaxValue aborts
+    assert(got.toSeq == Seq(("存货", "6", 0)))
+  }
+
+  test("extractLongRows: Scala fold == higher-order oracle on fixture docs") {
+    val docs = (0 until 6000).map(i => Fixtures.docFor(f"${Fixtures.UrlBase}$i%08d.PDF"))
+    assert(assertSameAsOracle(docs) > 0)
+  }
+
+  test("extractLongRows: Scala fold == higher-order oracle on generated span arrays") {
+    val cell = Gen.oneOf("5", "0", "0.00", "0.005", "0.001", "N/A", "", "  ", "1,234.56",
+      "12345.67", "1234567890123456789", "约 3 元", "元")
+    val keyword = for {
+      colon <- Gen.oneOf(":", "：", " : ")
+      pre <- Gen.oneOf("", "2023年", "存货", "开发支出 ")
+      cells <- Gen.listOfN(3, cell)
+      trail <- Gen.oneOf("", "|", " | ")
+      twice <- Gen.oneOf(false, false, true)
+      body = s"其中${colon}数据资源 | ${cells.mkString(" | ")}$trail"
+    } yield pre + (if (twice) s"$body 其中：数据资源 | 7" else body)
+    val text = Gen.frequency(
+      3 -> keyword,
+      2 -> Gen.oneOf(Categories).map(c => s"第1节 ${c}明细"),
+      1 -> Gen.oneOf("补充说明若干", "无形资产与存货", "  \n\t ", "", "　"),
+      1 -> Gen.const(null: String))
+    val span = for {
+      kind <- Gen.frequency(6 -> Gen.const("text"), 1 -> Gen.const("media"),
+        1 -> Gen.const("break"), 1 -> Gen.const(null: String))
+      t <- text
+      off <- Gen.chooseNum(-3, 12)
+    } yield Span(kind, t, null, off)
+    val docs = Gen.listOfN(800, Gen.choose(0, 14).flatMap(Gen.listOfN(_, span))).sample.get
+      .zipWithIndex.map { case (sp, i) => Doc(s"g$i", sp) }
+    assert(assertSameAsOracle(docs) > 0)
   }
 }
