@@ -1,5 +1,7 @@
 package graft.ops
 
+import java.nio.charset.StandardCharsets.UTF_8
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -421,61 +423,68 @@ object DedupOps {
     * md5/ascii/substring. 64 bits (vs 32) is what makes the banded
     * pair blocking scale: see [[simhashPairs]].
     * Returns (id, simhash: long), the fingerprint in two's complement
-    * (bit 63 is the sign bit — engine-portable as plain int64).
+    * (bit 63 is the sign bit — engine-portable as plain int64). A null
+    * or token-free text yields no row.
+    *
+    * Precondition: `idCol` is a row key of `docs` — each row is
+    * fingerprinted on its own, so rows sharing an id are not merged.
     */
-  def simhash(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    // ONE groupBy(id) with 64 sum() aggregates — no 64× bit-index
-    // explode; map-side combine collapses each partition to one row
-    // per doc before the exchange. Codegen subexpression elimination
-    // shares each digest across its 32 aggregates.
-    //
-    // The digests are paid once per DISTINCT token per doc, not once
-    // per occurrence (VERDICT r5 #4): simhash is a count-weighted sum,
-    // Σ_occurrences (2·parity−1) ≡ Σ_distinct cnt·(2·parity−1), so the
-    // (token, cnt) pairs are built NARROWLY — sort the token array,
-    // run starts via transform+filter over indices, run lengths from
-    // consecutive starts (all O(len) higher-order ops, zero extra
-    // exchange) — and each distinct token is hashed once. The DuckDB
-    // oracle keeps the per-occurrence formulation: same fixed point.
-    // A/B at sf0.1 (local[32], noop-sink full evaluation, warm min of
-    // 3, quiet box): dedup_simhash 5.50 → 3.17 s, dedup_simhash_pairs
-    // 5.77 → 3.90 s vs the r5 per-occurrence shape; the same distinct
-    // arithmetic on shingles left minhash_lsh flat (2.46 → 2.42 —
-    // 3-gram shingles rarely repeat within a doc) and jaccard slightly
-    // better (2.98 → 2.57, its global distinct exchange removed).
-    val toks = docs
-      .select(col(idCol), array_sort(TextOps.tokens(col(textCol))).as("__st"))
-      // token-free/null docs emitted no row in the explode shape and
-      // must not here either (zip_with null-pads the shorter side, so
-      // an empty __starts would otherwise yield one garbage row)
-      .where(size(col("__st")) > 0)
-      .withColumn("__starts", expr(
-        // IF (not OR) so element_at is never evaluated at i = 0 —
-        // ANSI mode rejects index 0
-        "filter(transform(__st, (x, i) -> " +
-          "IF(i = 0, 0, IF(element_at(__st, i) != x, i, -1))), b -> b >= 0)"))
-      .select(col(idCol), explode(expr(
-        "zip_with(__starts, " +
-          "concat(slice(__starts, 2, size(__starts)), array(size(__st))), " +
-          "(b, e) -> struct(element_at(__st, b + 1) AS tok, CAST(e - b AS BIGINT) AS cnt))"))
-        .as("tc"))
-      .select(col(idCol), col("tc.tok").as("tok"), col("tc.cnt").as("cnt"))
-      .withColumn("h", md5(col("tok")))
-      .withColumn("h2", md5(concat(lit("b:"), col("tok"))))
-    val sumCols = (0 until 64).map { j =>
-      val digit = if (j < 32) substring(col("h"), j + 1, 1)
-                  else substring(col("h2"), j - 32 + 1, 1)
-      sum((ascii(digit) % 2 * 2 - 1) * col("cnt")).as(s"s$j")
+  def simhash(docs: DataFrame, idCol: String, textCol: String): DataFrame =
+    // ONE narrow per-row map: tokenizing stays a Spark expression
+    // (exact `lower` + regex semantics); the fingerprint is a compiled
+    // Scala kernel over the token array — no exchange, no aggregate.
+    // Built-in formulations cost more: 64 `sum()` aggregates over a
+    // groupBy(id) compile to 5-9k-line janino classes every sweep, and
+    // a run-length build from array_sort + transform/filter/zip_with
+    // runs interpreted per row. SimhashIvfKernelSpec keeps that form
+    // as the differential oracle; the DuckDB oracle keeps the
+    // per-occurrence formulation. The kernel returns 0 or 1 values,
+    // so the explode drops token-free rows; a `where` on its result
+    // would be pushed below the projection and run the kernel twice.
+    docs.select(col(idCol), explode(simhashUdf(TextOps.tokens(col(textCol)))).as("simhash"))
+
+  private val simhashUdf = udf((toks: Seq[String]) => simhashOf(toks).toSeq)
+
+  private val BPrefix = "b:".getBytes(UTF_8)
+
+  private val md5Digest = ThreadLocal.withInitial[java.security.MessageDigest](
+    () => java.security.MessageDigest.getInstance("MD5"))
+
+  /** The fingerprint of one token array; None when it is null or empty.
+    * Simhash is a count-weighted sum, Σ_occurrences (2·parity − 1) ≡
+    * Σ_distinct cnt·(2·parity − 1), so each distinct token is hashed
+    * once. Hex char j of a digest is nibble j of its bytes (high
+    * nibble first); its ascii parity is the nibble's low bit for
+    * '0'..'9' and the inverse for 'a'..'f' (ascii 97..102). Bits
+    * 0..62 contribute 2^j and bit 63 the sign bit, so setting bits is
+    * the two's complement assembly.
+    */
+  private def simhashOf(toks: Seq[String]): Option[Long] = {
+    if (toks == null || toks.isEmpty) return None
+    val counts = scala.collection.mutable.HashMap.empty[String, Long]
+    toks.foreach(t => if (t != null) counts.update(t, counts.getOrElse(t, 0L) + 1L))
+    val acc = new Array[Long](64)
+    val d = md5Digest.get()
+    def add(digest: Array[Byte], base: Int, cnt: Long): Unit = {
+      var j = 0
+      while (j < 32) {
+        val b = digest(j >> 1)
+        val nib = if ((j & 1) == 0) (b >> 4) & 0xF else b & 0xF
+        val parity = if (nib < 10) nib & 1 else (nib + 1) & 1
+        acc(base + j) += (if (parity == 1) cnt else -cnt)
+        j += 1
+      }
     }
-    // Two's complement assembly: bits 0..62 contribute +2^j, bit 63
-    // contributes Long.MinValue. Partial sums stay in range by
-    // construction (≤ 2^63−1 before the sign bit lands), so this is
-    // ANSI-overflow-safe.
-    val fp = (0 until 64).map(j =>
-      when(col(s"s$j") > 0, lit(1L << j)).otherwise(0L)).reduce(_ + _)
-    toks.groupBy(col(idCol))
-      .agg(sumCols.head, sumCols.tail: _*)
-      .select(col(idCol), fp.as("simhash"))
+    counts.foreach { case (t, cnt) =>
+      val bytes = t.getBytes(UTF_8)
+      add(d.digest(bytes), 0, cnt)
+      d.update(BPrefix)
+      add(d.digest(bytes), 32, cnt)
+    }
+    var fp = 0L
+    var j = 0
+    while (j < 64) { if (acc(j) > 0) fp |= 1L << j; j += 1 }
+    Some(fp)
   }
 
   /** SimHash near-dup pairs within `maxHamming`, blocked on 4
@@ -518,9 +527,10 @@ object DedupOps {
                                       maxHamming: Int): (DataFrame, DataFrame) = {
     require(maxHamming <= 3, s"4-band pigeonhole guarantees only maxHamming <= 3, got $maxHamming")
     // The fingerprint table feeds BOTH sides of the band self-join;
-    // without a persist each side re-runs the 64-aggregate build over
-    // every token row (measured warm 5.5 s → 1.0-1.5 s at sf0.1). The
-    // cache is one long per doc — negligible against the corpus.
+    // without a persist each side re-tokenizes and re-hashes every doc
+    // (measured warm 5.5 s → 1.0-1.5 s at sf0.1, when the build was
+    // still a 64-aggregate groupBy). The cache is one long per doc —
+    // negligible against the corpus.
     val fp = simhash(docs, idCol, textCol)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // band value via AND-mask, not %: shiftright is an ARITHMETIC

@@ -1,7 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, Encoder}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.expressions.{Aggregator, Window}
 import org.apache.spark.sql.functions._
 
 /** Similarity search over an embedding column (array<float>).
@@ -50,12 +51,15 @@ object SimilarityOps {
 
   /** Cosine from exact integer dot/norms: one division + one sqrt on
     * exact int64 inputs (< 2^53, so the int→double casts are exact).
+    * A zero norm gives null, as in DuckDB, and null ranks last under
+    * `cos DESC` in both engines; a plain divide would fail the whole
+    * query with DIVIDE_BY_ZERO under ANSI mode.
     */
   def cosineQ(dot: Column, na: Column, nb: Column): Column =
-    dot.cast("double") / sqrt((na * nb).cast("double"))
+    try_divide(dot.cast("double"), sqrt((na * nb).cast("double")))
 
-  private def quantized(df: DataFrame, idCol: String, vecCol: String,
-                        extra: Seq[String] = Nil): DataFrame =
+  private[graft] def quantized(df: DataFrame, idCol: String, vecCol: String,
+                               extra: Seq[String] = Nil): DataFrame =
     df.select((Seq(col(idCol)) ++ extra.map(col) :+ quantize(col(vecCol)).as("qv")): _*)
       .withColumn("nsq", normSqQ(col("qv")))
 
@@ -103,40 +107,16 @@ object SimilarityOps {
     * Plan shape at scale: seed selection is a TakeOrderedAndProject
     * (per-partition top-K heaps, no full sort); each Lloyd step is a
     * NARROW broadcast argmax over the big side followed by ONE
-    * groupBy(cell) whose `dims` sum aggregates combine map-side down
-    * to K rows; the search is an equi-join on cell id with the
-    * nprobe-expanded query set broadcast. A candidate lives in
-    * exactly one cell, so probe results need no pair dedup.
+    * groupBy(cell) whose single typed aggregate ([[CentroidMean]])
+    * combines map-side down to K rows; the search is an equi-join on
+    * cell id with the nprobe-expanded query set broadcast. A
+    * candidate lives in exactly one cell, so probe results need no
+    * pair dedup.
     */
   def annIvfCentroids(queries: DataFrame, candidates: DataFrame,
                       idCol: String, vecCol: String, k: Int,
                       numCentroids: Int, nprobe: Int,
                       dims: Int = 64, lloydSteps: Int = 1): DataFrame = {
-    // Centroids ride as ONE broadcast row holding an array —
-    // assignment is then a per-row argmax over that array: a NARROW
-    // map over the big side (no shuffle, no window; a row_number
-    // formulation would re-shuffle every vector just to rank K=8
-    // centroids).
-    def centArrOf(cents: DataFrame): DataFrame =
-      cents.agg(collect_list(struct(col("cid"), col("cent_qv"),
-        col("cent_nsq"))).as("__cents"))
-    def assignCells(df: DataFrame, probes: Int, centArr: DataFrame): DataFrame = {
-      val scored = transform(col("__cents"), c => struct(
-        cosineQ(dotQ(col("qv"), c.getField("cent_qv")), col("nsq"),
-          c.getField("cent_nsq")).as("cos"),
-        c.getField("cid").as("cid")))
-      val byCosDescCidAsc = (l: Column, r: Column) =>
-        when(l.getField("cos") > r.getField("cos"), -1)
-          .when(l.getField("cos") < r.getField("cos"), 1)
-          .when(l.getField("cid") < r.getField("cid"), -1)
-          .when(l.getField("cid") > r.getField("cid"), 1)
-          .otherwise(0)
-      quantized(df, idCol, vecCol)
-        .crossJoin(broadcast(centArr))
-        .withColumn("__probe", explode(slice(array_sort(scored, byCosDescCidAsc),
-          1, probes)))
-        .select(col(idCol), col("__probe.cid").as("cell"), col("qv"), col("nsq"))
-    }
     val seeds = quantized(candidates, idCol, vecCol)
       .withColumn("__h", md5(col(idCol).cast("string")))
       .orderBy(col("__h"), col(idCol))
@@ -145,27 +125,105 @@ object SimilarityOps {
         col("nsq").as("cent_nsq"))
     var centArr = centArrOf(seeds)
     (0 until lloydSteps).foreach { _ =>
-      val member = assignCells(candidates, 1, centArr)
-      val sumCols = (0 until dims).map(i => sum(get(col("qv"), lit(i))).as(s"s$i")) :+
-        count(lit(1)).as("cnt")
-      val refined = member.groupBy(col("cell"))
-        .agg(sumCols.head, sumCols.tail: _*)
-        .select(col("cell").as("cid"),
-          array((0 until dims).map(i =>
-            floor(col(s"s$i").cast("double") / col("cnt"))): _*).as("cent_qv"))
-        .withColumn("cent_nsq", normSqQ(col("cent_qv")))
-      centArr = centArrOf(refined)
+      centArr = centArrOf(refineCells(assignCells(candidates, idCol, vecCol, 1, centArr), dims))
     }
-    val idx = assignCells(candidates, 1, centArr)
+    val idx = assignCells(candidates, idCol, vecCol, 1, centArr)
       .select(col(idCol).as("neighbor_id"), col("cell"),
         col("qv").as("c_qv"), col("nsq").as("c_nsq"))
-    val qs = assignCells(queries, nprobe, centArr)
+    val qs = assignCells(queries, idCol, vecCol, nprobe, centArr)
       .select(col(idCol).as("query_id"), col("cell"),
         col("qv").as("q_qv"), col("nsq").as("q_nsq"))
     topK(idx.join(broadcast(qs), Seq("cell")), k)
   }
 
-  private def topK(joined: DataFrame, k: Int): DataFrame = {
+  /** Centroids ride as ONE broadcast row holding an array
+    * `__cents: array<struct<cid, cent_qv, cent_nsq>>` — assignment is
+    * then a per-row argmax over that array: a NARROW map over the big
+    * side (no shuffle, no window; a row_number formulation would
+    * re-shuffle every vector just to rank K=8 centroids).
+    */
+  private[graft] def centArrOf(cents: DataFrame): DataFrame =
+    cents.agg(collect_list(struct(col("cid"), col("cent_qv"),
+      col("cent_nsq"))).as("__cents"))
+
+  /** One element of the broadcast centroid array. */
+  final case class Centroid(cid: Long, cent_qv: Array[Long], cent_nsq: Long)
+
+  /** (id, cell, qv, nsq): each row of `df` once per cell among its
+    * `probes` nearest centroids of `centArr`, by (cosine desc, cid
+    * asc) with a null cosine (zero norm) after every real one.
+    */
+  private[graft] def assignCells(df: DataFrame, idCol: String, vecCol: String,
+                                 probes: Int, centArr: DataFrame): DataFrame = {
+    val nearest = udf((qv: Array[Long], nsq: java.lang.Long, cents: Seq[Centroid]) =>
+      nearestCells(qv, nsq, cents, probes))
+    quantized(df, idCol, vecCol)
+      .crossJoin(broadcast(centArr))
+      .select(col(idCol), explode(nearest(col("qv"), col("nsq"), col("__cents"))).as("cell"),
+        col("qv"), col("nsq"))
+  }
+
+  /** The cids of the `probes` centroids nearest to `qv`: the same
+    * exact int64 dot as [[dotQ]] (min length), then the [[cosineQ]]
+    * op sequence. A null cosine sorts as -∞ (cosines are finite), so
+    * it ranks last and ties among nulls fall to cid.
+    */
+  private def nearestCells(qv: Array[Long], nsq: java.lang.Long, cents: Seq[Centroid],
+                           probes: Int): Seq[Long] =
+    cents.map { c =>
+      val den = if (qv == null || nsq == null) 0L else nsq * c.cent_nsq
+      val cos =
+        if (den == 0L) Double.NegativeInfinity
+        else {
+          val n = math.min(qv.length, c.cent_qv.length)
+          var dot = 0L
+          var i = 0
+          while (i < n) { dot += qv(i) * c.cent_qv(i); i += 1 }
+          dot.toDouble / math.sqrt(den.toDouble)
+        }
+      (-cos, c.cid)
+    }.sorted(Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Long))
+      .iterator.take(probes).map(_._2).toSeq
+
+  /** One Lloyd step's new centroids from (cell, qv) members:
+    * (cid, cent_qv, cent_nsq), cent_qv the exact integer mean.
+    */
+  private[graft] def refineCells(member: DataFrame, dims: Int): DataFrame =
+    member.groupBy(col("cell"))
+      .agg(udaf(new CentroidMean(dims)).apply(col("qv")).as("cent_qv"))
+      .select(col("cell").as("cid"), col("cent_qv"))
+      .withColumn("cent_nsq", normSqQ(col("cent_qv")))
+
+  /** Exact integer mean of a cell's vectors over the first `dims`
+    * components: the buffer holds the `dims` long sums and the count
+    * (`long[dims + 1]`, a flat copy to ser/de — the same public
+    * `Aggregator` + `functions.udaf` API as `SeenFilter.BloomAgg`);
+    * `finish` gives floor(sum_i / count) in double, as the DuckDB
+    * oracle does. A component no member has comes out 0 (a per-dimension
+    * `sum` gives null there, which the dot products read as 0 too).
+    */
+  private class CentroidMean(dims: Int)
+      extends Aggregator[Array[Long], Array[Long], Array[Long]] {
+    def zero: Array[Long] = new Array[Long](dims + 1)
+    def reduce(b: Array[Long], qv: Array[Long]): Array[Long] = {
+      if (qv != null) {
+        val n = math.min(dims, qv.length)
+        var i = 0
+        while (i < n) { b(i) += qv(i); i += 1 }
+      }
+      b(dims) += 1
+      b
+    }
+    def merge(a: Array[Long], b: Array[Long]): Array[Long] = {
+      var i = 0; while (i <= dims) { a(i) += b(i); i += 1 }; a
+    }
+    def finish(b: Array[Long]): Array[Long] =
+      Array.tabulate(dims)(i => math.floor(b(i).toDouble / b(dims)).toLong)
+    def bufferEncoder: Encoder[Array[Long]] = ExpressionEncoder[Array[Long]]()
+    def outputEncoder: Encoder[Array[Long]] = ExpressionEncoder[Array[Long]]()
+  }
+
+  private[graft] def topK(joined: DataFrame, k: Int): DataFrame = {
     val scored = joined
       .where(col("query_id") =!= col("neighbor_id"))
       .withColumn("dot", dotQ(col("q_qv"), col("c_qv")))

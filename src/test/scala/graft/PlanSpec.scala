@@ -98,6 +98,10 @@ class PlanSpec extends SparkSpec {
     assert(count(p, "BroadcastNestedLoopJoin") >= 1,
       s"the 1-row centroid-array attach must broadcast:\n$p")
     assert(count(p, "CartesianProduct") == 0, p)
+    // assignment and refine are compiled kernels: no interpreted
+    // centroid sort, no per-dimension sum aggregates
+    assert(!p.contains("array_sort("), s"interpreted centroid sort:\n$p")
+    assert(!p.contains("sum("), s"per-dimension sum aggregates:\n$p")
   }
 
   test("crawl_wide_report: flag join carries no forced broadcast hint (J3)") {
@@ -121,13 +125,19 @@ class PlanSpec extends SparkSpec {
   test("dedup_simhash_pairs: banded equi-join, never a cartesian, filter before distinct") {
     // the query entry returns a materialized checkpoint (cache
     // lifecycle, VERDICT r4 #4) — gate the LAZY plan behind it
-    val docs = Tables.load(spark, d, "documents")
+    val docs = Tables.load(noSpread, d, "documents")
     val (fp, lazyPairs) = graft.ops.DedupOps.simhashPairsLazy(docs, "doc_id", "text", 3)
     try {
+      // the fingerprint build is one narrow per-row map: no shuffle,
+      // no aggregate, no interpreted higher-order function
+      val f = fp.queryExecution.executedPlan.toString
+      assert(f.contains("Generate"), s"the cached build must be in the plan:\n$f")
+      for (op <- Seq("Exchange", "HashAggregate", "lambdafunction"))
+        assert(count(f, op) == 0, s"$op in the fingerprint build:\n$f")
       val p = lazyPairs.queryExecution.executedPlan.toString
       assert(count(p, "CartesianProduct") == 0 && count(p, "BroadcastNestedLoopJoin") == 0,
         s"the 4x16-bit band blocking must plan as an equi-join:\n$p")
-      // the fingerprint build is one partial-aggregated groupBy(id)
+      // the pair distinct aggregates map-side before its exchange
       assert(count(p, "HashAggregate") >= 2, s"map-side partial agg expected:\n$p")
       // the hamming verify must run BELOW the pair-dedup so the
       // distinct exchange carries only qualifying pairs — Catalyst in

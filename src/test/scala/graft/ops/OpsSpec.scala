@@ -251,6 +251,44 @@ class OpsSpec extends SparkSpec {
     assert(ivf.forall(_.getLong(1) != 3L), "IVF restricts to the query's bucket")
   }
 
+  test("ANN: a zero-norm vector gets a null cosine and ranks last (ANSI)") {
+    val s = spark; import s.implicits._
+    // 3 is all zero and 4 rounds to zero at ×1000: cosine is 0/0 —
+    // NULL in DuckDB, DIVIDE_BY_ZERO under ANSI before try_divide
+    val vecs = Seq(
+      (0L, Array(1.0f, 0.0f, 0.0f)),
+      (1L, Array(1.0f, 0.0f, 0.0f)),
+      (2L, Array(0.9f, 0.1f, 0.0f)),
+      (3L, Array(0.0f, 0.0f, 0.0f)),
+      (4L, Array(0.0001f, 0.0f, 0.0f)),
+      (5L, Array(0.0f, 1.0f, 0.0f))).toDF("vec_id", "embedding")
+    val qs = vecs.where(col("vec_id") === 0 || col("vec_id") === 3)
+    def rows(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Long, Option[Long])] =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+        if (r.isNullAt(3)) None else Some(r.getLong(3)))).toSet
+    val bf = rows(SimilarityOps.annBruteForce(qs, vecs, "vec_id", "embedding", k = 5))
+    assert(bf == Set(
+      (0L, 1L, 1L, Some(1000000L)), (0L, 2L, 2L, Some(993883L)), (0L, 5L, 3L, Some(0L)),
+      (0L, 3L, 4L, None), (0L, 4L, 5L, None),
+      // a zero query: every cosine null, ranked by neighbor id
+      (3L, 0L, 1L, None), (3L, 1L, 2L, None), (3L, 2L, 3L, None),
+      (3L, 4L, 4L, None), (3L, 5L, 5L, None)))
+    // probing every cell makes IVF exact: the same rows
+    for (kc <- Seq(1, 3))
+      assert(rows(SimilarityOps.annIvfCentroids(qs, vecs, "vec_id", "embedding", k = 5,
+        numCentroids = kc, nprobe = kc, dims = 3)) == bf, s"K = $kc")
+    // cell assignment: a zero-norm centroid (cid 3) ranks after the
+    // real ones; a zero-norm vector's cosines are all null, so cid decides
+    val cents = SimilarityOps.quantized(vecs.where(col("vec_id").isin(1, 3, 5)),
+        "vec_id", "embedding")
+      .select(col("vec_id").as("cid"), col("qv").as("cent_qv"), col("nsq").as("cent_nsq"))
+    val cells = SimilarityOps.assignCells(vecs, "vec_id", "embedding", 2,
+        SimilarityOps.centArrOf(cents))
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(cells.filter(_._1 == 2L) == Set((2L, 1L), (2L, 5L)))
+    assert(cells.filter(_._1 == 4L) == Set((4L, 1L), (4L, 3L)))
+  }
+
   test("IVF ANN: hash-sampled + Lloyd-refined centroids — recall@5 vs brute force") {
     val s = spark; import s.implicits._
     import graft.gen.Fixtures
