@@ -12,16 +12,10 @@ import org.apache.spark.sql.functions._
   */
 object Canon {
 
-  val UrlBase = "https://static.cninfo.com.cn/"
-
-  /** E-str1: canonical URL for an announcement attachment
-    * (cninfo_report_crawler.py:69), extended to a full canonicalizer
-    * because the frontier's seen-filter keys on canonical URLs:
-    * lower-case scheme+host, strip fragment, drop default port.
+  /** E-str1 (cninfo_report_crawler.py:69) extended to a full URL
+    * canonicalizer: lower-case scheme+host, strip fragment, drop
+    * default port.
     */
-  def canonicalUrl(adjunctUrl: Column): Column =
-    canonicalizeFull(concat(lit(UrlBase), adjunctUrl))
-
   def canonicalizeFull(url: Column): Column = {
     // scheme+host lowered; fragment stripped; default :80/:443 dropped.
     val noFrag = substring_index(url, "#", 1)
@@ -34,13 +28,7 @@ object Canon {
     concat(scheme, lit("://"), host, path)
   }
 
-  /** Host component of a canonical URL (politeness-scheduler key). */
-  def hostOf(url: Column): Column =
-    lower(substring_index(substring_index(substring_index(url, "://", -1), "/", 1), ":", 1))
-
   /** Pure-Scala twins for driver-side oracles / the scheduler. */
-  def canonicalUrlScala(adjunctUrl: String): String = canonicalizeFullScala(UrlBase + adjunctUrl)
-
   def canonicalizeFullScala(url: String): String = {
     val noFrag = url.split("#", 2)(0)
     val i = noFrag.indexOf("://")

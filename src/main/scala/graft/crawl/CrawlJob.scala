@@ -5,7 +5,9 @@ import graft.model._
 import graft.sched.Scheduler
 import graft.seen.SeenFilter
 import graft.snapshot.SnapshotLog
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.util.{Collections, WeakHashMap}
+import java.util.concurrent.ConcurrentHashMap
+import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -47,7 +49,7 @@ object CrawlJob {
     * discovered, and the listing loop is serial so that is also the
     * HOST-wide discovery ceiling on its single host), ≤10 concurrent
     * HEAD probes, and ≤5 concurrent PDF GETs. The default Config maps
-    * onto them as: (a) tickMs = 300 IS the reference sleep — the
+    * onto them as: (a) TickMs = 300 IS the reference sleep — the
     * virtual clock's quantum equals the reference's politeness
     * quantum; (b) per (host,salt) queue, tokensPerTick = 4 < 5 = the
     * reference GET pool, so no sub-queue ever issues more per quantum
@@ -59,7 +61,7 @@ object CrawlJob {
     * (fetch ceiling ≥ discovery ceiling; a budget below discovery
     * backs the frontier up without bound); (d) the listing leg
     * itself pages each stream once per round = every ticksPerRound ×
-    * tickMs = 2.4 virtual seconds — 8× POLITER than the reference's
+    * TickMs = 2.4 virtual seconds — 8× POLITER than the reference's
     * 0.3 s/page/stream ceiling, never ruder. The bench overrides
     * (saltCount=256, tokensPerTick=16) scale ceilings (b)/(c) for a
     * 32-thread box and are politeness-budget-EQUIVALENT only under
@@ -68,11 +70,6 @@ object CrawlJob {
   final case class Config(
       targetYears: Seq[Int] = Seq(2023, 2024),
       maxPagesCap: Int = 500,        // O4 hard page cap (reference: 500)
-      emptyRunLimit: Int = 3,        // O4 consecutive-empty stop
-      overshootPages: Int = 3,       // O4: keep paging past totalpages up
-                                     // to +3 (the API lies about totals)
-      overshootEmptyLimit: Int = 2,  // O4: past-end soft stop after 2
-                                     // consecutive empty pages
       // ST2 hot-host salt fan-out. SIZING RULE: the politeness/fetch
       // leg's parallelism is bounded by the number of (host, salt)
       // queues, so for a single-hot-host workload set
@@ -81,12 +78,8 @@ object CrawlJob {
       saltCount: Int = 8,
       tokensPerTick: Int = 4,        // ST1 budget per (host,salt) per tick
       ticksPerRound: Int = 8,        // politeness ticks per round
-      tickMs: Long = 300L,           // reference politeness delay (:331)
       bloomP: Int = 32,              // seen-domain partition count
       bloomBits: Int = 1 << 16,      // bits per partition sketch
-      bloomHashes: Int = 4,
-      sketchCompactEvery: Int = 4,   // OR-merge sketch deltas when the
-                                     // table reaches this many dirs
       commitFiles: Int = 8,          // file fan-in for small round tables
       // Probe-strategy threshold, the exact analog of Spark's
       // autoBroadcastJoinThreshold: when the WHOLE sketch state fits
@@ -118,6 +111,20 @@ object CrawlJob {
       // ~6s round); small-batch configs set false.
       roundAdaptive: Boolean = true,
       maxRounds: Int = 1000)
+
+  // Constants, not Config knobs: the O4 listing guards and the tick
+  // quantum are fixed by reference parity (see Config and
+  // nextListingTask); the Bloom hash count and the sketch compaction
+  // cadence are internal sizing choices.
+  val EmptyRunLimit = 3         // O4 consecutive-empty stop
+  val OvershootPages = 3        // O4: keep paging past totalpages up
+                                // to +3 (the API lies about totals)
+  val OvershootEmptyLimit = 2   // O4: past-end soft stop after 2
+                                // consecutive empty pages
+  val TickMs = 300L             // reference politeness delay (:331)
+  val BloomHashes = 4           // hash functions per seen-key probe
+  val SketchCompactEvery = 4    // OR-merge sketch deltas when the
+                                // table reaches this many dirs
 
   /** Global lineage totals for one round (the per-partition rows live
     * in the metrics table; these are the reconciliation sums).
@@ -184,7 +191,7 @@ object CrawlJob {
     *    breaks on `if not announcements` before any tolerance counts.
     *  - `newKept == 0` with rawRows > 0 (every row on the page was
     *    dropped by dedup/filters) increments the consecutive-empty
-    *    counter: `emptyRunLimit` (3) such pages stop the stream
+    *    counter: `EmptyRunLimit` (3) such pages stop the stream
     *    regardless of position (reference empty_pages_count /
     *    max_empty_pages, :317-328).
     * The claimed `totalpages` is NOT a hard stop: the reference pages
@@ -219,9 +226,9 @@ object CrawlJob {
     else {
       val emptyRun = if (newKept == 0) t.emptyRun + 1 else 0
       val next = t.page + 1
-      val withinHard = totalPages > 0 && next <= totalPages + cfg.overshootPages
-      val softStop = next > totalPages && emptyRun >= cfg.overshootEmptyLimit
-      val runStop = emptyRun >= cfg.emptyRunLimit
+      val withinHard = totalPages > 0 && next <= totalPages + OvershootPages
+      val softStop = next > totalPages && emptyRun >= OvershootEmptyLimit
+      val runStop = emptyRun >= EmptyRunLimit
       if (withinHard && !softStop && !runStop && next <= cfg.maxPagesCap)
         Some(t.copy(page = next, emptyRun = emptyRun))
       else None
@@ -239,7 +246,7 @@ object CrawlJob {
       cat <- Fixtures.Categories
     } yield Seed(rank, ex, day, cat)
 
-  private def bloomParams(cfg: Config) = SeenFilter.BloomParams(cfg.bloomBits, cfg.bloomHashes)
+  private def bloomParams(cfg: Config) = SeenFilter.BloomParams(cfg.bloomBits, BloomHashes)
 
   /** Run (or resume) the crawl to frontier exhaustion. `net` is the
     * crawl's network edge (see [[CrawlNet]]) — the default is the
@@ -284,18 +291,8 @@ object CrawlJob {
     var round = crawlProps("round").toInt + 1
     var done = crawlProps.get("done").contains("true")
     var carry = Carry() // first round reads the snapshot (resume path)
-    // ONE isolated session for the whole run when the config overrides
-    // session knobs (see runRound): a session per ROUND would register
-    // one ExecutionListenerBus per round on the shared listener bus —
-    // a crawl is O(100s) of rounds, and bus fan-out grows with every
-    // live session. Isolation only needs caller/run separation, which
-    // one session per run() provides.
-    val roundSession =
-      if (cfg.roundShufflePartitions > 0 || !cfg.roundWholeStageCodegen ||
-          !cfg.roundAdaptive) isolatedSession(spark)
-      else spark
     while (!done && round < cfg.maxRounds) {
-      val r = runRoundInner(roundSession, cfg, log, snap, round, net, carry)
+      val r = runRound(spark, cfg, log, snap, round, net, carry)
       results += r
       snap = log.read(r.snapshotId)
       done = snap.props("done") == "true"
@@ -305,91 +302,71 @@ object CrawlJob {
     results.result()
   }
 
-  /** One scheduler round: expand listings, filter, dedup, gate,
-    * schedule under the politeness budget, fetch, commit.
+  /** The session a round of `cfg` runs on. A config that overrides
+    * none of the three per-round knobs (roundShufflePartitions,
+    * roundWholeStageCodegen, roundAdaptive) runs on the caller itself.
+    * One that overrides some runs on an isolated sibling session —
+    * same SparkContext, cached blocks and codegen cache, but its OWN
+    * SQLConf — so the caller's conf is never mutated, and crawls with
+    * different override sets can run concurrently on one caller.
+    *
+    * The sibling is cached per (caller, override set). A newSession()
+    * per round would register one ExecutionListenerBus per round on
+    * the shared context bus, and a crawl is O(100s) of rounds; keying
+    * by the override set means one config's overrides never reach
+    * another config's rounds. Weak keys: the entries die with the
+    * caller session.
+    *
+    * Every call re-syncs the sibling to the caller's CURRENT runtime
+    * conf, then applies the overrides: a new session seeds its SQLConf
+    * from the SparkConf only, so the caller's runtime `spark.conf.set`
+    * values (time zone, broadcast thresholds, ...) would otherwise be
+    * dropped, and later caller changes would go stale. The re-sync
+    * never touches the overridden keys, so a round running
+    * concurrently on the same sibling never sees them flip. Keys that
+    * cannot be changed at runtime (static or context conf) agree
+    * through the shared context and are skipped.
     */
-  def runRound(spark: SparkSession, cfg: Config, log: SnapshotLog,
-               snap: SnapshotLog.Snapshot, round: Int,
-               net: CrawlNet = FixtureNet,
-               carry: Carry = Carry()): RoundResult = {
-    if (cfg.roundShufflePartitions > 0 || !cfg.roundWholeStageCodegen ||
-        !cfg.roundAdaptive) {
-      // ISOLATED round session (VERDICT r5 #6): a config that overrides
-      // session knobs runs on an isolated sibling session — same
-      // SparkContext, cached blocks and codegen cache, but its OWN
-      // SQLConf — so the caller's session is never mutated. ONE such
-      // session per CALLER session, cached (ADVICE r6): a newSession()
-      // per call registers one ExecutionListenerBus per call on the
-      // shared context bus, so an external caller looping runRound
-      // over O(100s) of rounds grew the bus fan-out round after round
-      // — the exact leak run() closes with its one-session-per-run
-      // pattern. runRoundInner only sets a knob when THIS cfg
-      // overrides it, and the cached session remembers knobs set by
-      // PREVIOUS cfgs — so every knob this cfg leaves at its default
-      // is first restored to the caller's current value (which also
-      // re-inherits caller-side changes made between calls).
-      // CONCURRENT runRound calls with DIFFERENT override configs
-      // against the SAME caller session would share one SQLConf —
-      // use run(), or distinct caller sessions (spark.newSession()),
-      // for that shape.
-      val rs = roundSessionFor(spark)
-      if (cfg.roundShufflePartitions <= 0)
-        rs.conf.set("spark.sql.shuffle.partitions",
-          spark.conf.get("spark.sql.shuffle.partitions"))
-      if (cfg.roundWholeStageCodegen)
-        rs.conf.set("spark.sql.codegen.wholeStage",
-          spark.conf.get("spark.sql.codegen.wholeStage", "true"))
-      if (cfg.roundAdaptive)
-        rs.conf.set("spark.sql.adaptive.enabled",
-          spark.conf.get("spark.sql.adaptive.enabled", "true"))
-      runRoundInner(rs, cfg, log, snap, round, net, carry)
-    } else runRoundInner(spark, cfg, log, snap, round, net, carry)
-  }
-
-  /** One isolated round session per caller session, created lazily and
-    * reused (see runRound). Weak keys: the cache entry dies with the
-    * caller session, so long-lived JVMs hosting many short-lived
-    * sessions don't accumulate entries.
-    */
-  private val roundSessionCache =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession, SparkSession]())
-
-  private[graft] def roundSessionFor(spark: SparkSession): SparkSession =
-    roundSessionCache.computeIfAbsent(spark, s => isolatedSession(s))
-
-  /** `newSession()` plus runtime-conf inheritance (ADVICE r6): a new
-    * session seeds its SQLConf from the SparkContext's SparkConf, so
-    * any `spark.conf.set` the CALLER made at runtime (time zone, AQE
-    * toggles, broadcast thresholds, ...) would be silently dropped for
-    * the whole crawl — a behavior change from the old
-    * mutate-and-restore shape, which ran on the caller's live conf.
-    * Copy the caller's runtime view over, skipping keys whose value
-    * already matches and swallowing non-modifiable (static/context)
-    * keys, which by construction already agree through the shared
-    * context. The three per-round knobs are then overridden per call
-    * in runRoundInner.
-    */
-  private[graft] def isolatedSession(caller: SparkSession): SparkSession = {
-    val s = caller.newSession()
-    val base = s.conf.getAll
-    caller.conf.getAll.foreach { case (k, v) =>
-      if (!base.get(k).contains(v)) {
-        try s.conf.set(k, v)
-        catch { case _: org.apache.spark.sql.AnalysisException => () }
-      }
+  private[graft] def roundSession(caller: SparkSession, cfg: Config): SparkSession = {
+    val overrides = Seq(
+      (cfg.roundShufflePartitions > 0,
+        "spark.sql.shuffle.partitions" -> cfg.roundShufflePartitions.toString),
+      (!cfg.roundWholeStageCodegen, "spark.sql.codegen.wholeStage" -> "false"),
+      (!cfg.roundAdaptive, "spark.sql.adaptive.enabled" -> "false"))
+      .collect { case (true, kv) => kv }.toMap
+    if (overrides.isEmpty) caller
+    else {
+      val s = roundSessions
+        .computeIfAbsent(caller, _ => new ConcurrentHashMap[Map[String, String], SparkSession]())
+        .computeIfAbsent(overrides, _ => caller.newSession())
+      val want = caller.conf.getAll -- overrides.keys
+      val have = s.conf.getAll -- overrides.keys
+      def quietly(change: => Unit): Unit =
+        try change catch { case _: AnalysisException => () }
+      want.foreach { case (k, v) => if (!have.get(k).contains(v)) quietly(s.conf.set(k, v)) }
+      (have.keySet -- want.keySet).foreach(k => quietly(s.conf.unset(k)))
+      overrides.foreach { case (k, v) => s.conf.set(k, v) }
+      s
     }
-    s
   }
+
+  private val roundSessions = Collections.synchronizedMap(
+    new WeakHashMap[SparkSession, ConcurrentHashMap[Map[String, String], SparkSession]]())
 
   /** Env-gated round tracing (SPARK_GRAFT_ROUND_DEBUG=1): stderr
     * timing of the three blocking driver actions per round.
     */
   private val roundDebug = sys.env.get("SPARK_GRAFT_ROUND_DEBUG").contains("1")
 
-  private def runRoundInner(spark: SparkSession, cfg: Config, log: SnapshotLog,
-                            snap: SnapshotLog.Snapshot, round: Int,
-                            net: CrawlNet, carry: Carry): RoundResult = {
+  /** One scheduler round: expand listings, filter, dedup, gate,
+    * schedule under the politeness budget, fetch, commit. Runs on
+    * [[roundSession]]`(caller, cfg)`.
+    */
+  def runRound(caller: SparkSession, cfg: Config, log: SnapshotLog,
+               snap: SnapshotLog.Snapshot, round: Int,
+               net: CrawlNet = FixtureNet,
+               carry: Carry = Carry()): RoundResult = {
+    val spark = roundSession(caller, cfg)
     import spark.implicits._
     var tMark = System.nanoTime()
     def mark(what: String): Unit = if (roundDebug) {
@@ -397,12 +374,6 @@ object CrawlJob {
       System.err.println(f"[round $round] $what ${(now - tMark) / 1e9}%.2fs")
       tMark = now
     }
-    if (cfg.roundShufflePartitions > 0)
-      spark.conf.set("spark.sql.shuffle.partitions", cfg.roundShufflePartitions)
-    if (!cfg.roundWholeStageCodegen)
-      spark.conf.set("spark.sql.codegen.wholeStage", "false")
-    if (!cfg.roundAdaptive)
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
     val params = bloomParams(cfg)
 
     // The LISTING state is O(active streams) — exchange × date ×
@@ -556,7 +527,7 @@ object CrawlJob {
       concat_ws("|", col("secCode"), lpad(col("pageDepth").cast("string"), 6, "0"),
         col("seenKey")).as("tiebreak"))
     val assigned = Scheduler
-      .assignVirtualTicksCols(schedIn, cfg.saltCount, cfg.tokensPerTick, cfg.tickMs)
+      .assignVirtualTicksCols(schedIn, cfg.saltCount, cfg.tokensPerTick, TickMs)
       .persist(StorageLevel.MEMORY_AND_DISK)
     mark("pb_sched")
     val docTaskCols = Seq("url", "host", "announceEpochDay", "secCode",
@@ -707,10 +678,10 @@ object CrawlJob {
     val totals = Totals(urlsSeenCnt, filtered, dupDropped, newUnique,
       deniedCnt, fetchedCnt, invalidCnt, deferredCnt)
     // Sketch-table compaction: delta dirs accumulate one per round;
-    // once `sketchCompactEvery` exist, OR-merge them (one row per
+    // once `SketchCompactEvery` exist, OR-merge them (one row per
     // pid) and re-commit as a full rewrite, so reads stay O(P) rows
     // however long the crawl runs.
-    val compactSketch = sketchDirs > 0 && sketchDirs + 1 >= cfg.sketchCompactEvery
+    val compactSketch = sketchDirs > 0 && sketchDirs + 1 >= SketchCompactEvery
     // Broadcast regime: the round's sketch delta is COLLECTED once
     // (one small job over the cached new keys — the map also feeds
     // the next round's carry) and committed as a locally-built frame,

@@ -31,9 +31,8 @@ import org.apache.spark.sql.functions._
   *
   * The Column helpers remain: `extractFirstNumber`, `parseAmount` and
   * `cleanSentinel` serve `Report`, `RelationalQueries` and
-  * `CrawlQueries`; `normalizeText` is E-str4 as a Column, which that
-  * oracle uses. CanonExtractSpec pins each helper that has a Scala
-  * twin against it.
+  * `CrawlQueries`. CanonExtractSpec pins each helper that has a Scala
+  * twin against it; it also keeps E-str4 as a Column for its oracle.
   */
 object Extract {
 
@@ -45,14 +44,11 @@ object Extract {
     */
   val Sentinels: Seq[String] = Seq("", "N/A", "空值", "-", "nan", "None")
 
+  private val Whitespace = "\\s+".r
+
   /** E-str4: drop newlines, half→full-width colon, strip all
     * whitespace.
     */
-  def normalizeText(c: Column): Column =
-    regexp_replace(translate(c, ":", "："), "\\s+", "")
-
-  private val Whitespace = "\\s+".r
-
   def normalizeTextScala(s: String): String =
     Whitespace.replaceAllIn(s.replace(":", "："), "")
 

@@ -55,14 +55,3 @@ final case class Span(kind: String, text: String, media_ref: String, offset: Int
 
 /** The interleaved text+media document (BASELINE input_hint). */
 final case class Doc(doc_id: String, spans: Seq[Span])
-
-/** Extraction output row (reference item dict {category, value,
-  * method, page}, report_info_collection.py:192-197).
-  */
-final case class LongRow(doc_id: String, item: String, amount_str: String,
-                         method: String, offset: Int)
-
-/** Per-partition lineage counter row (north rule: urls_seen, fetched,
-  * deferred, robots_denied — plus the reconciliation members).
-  */
-final case class LineageRow(round: Int, counter: String, partition_id: Int, n: Long)

@@ -255,13 +255,14 @@ object DedupOps {
     * plan tree doubles every round and Catalyst analysis alone goes
     * exponential (measured: a 60-node graph ran the driver at
     * 2^rounds plan nodes and 20 GB of heap). Two truncation modes:
-    *  - default (checkpointDir = None): an RDD round-trip gives a
-    *    fresh LogicalRDD — zero I/O, but the cached lineage dies with
-    *    an executor (fine in local mode / tests);
-    *  - checkpointDir = Some(dir): `Dataset.checkpoint(eager)` into
-    *    reliable storage — the hardened cluster variant (a lost
-    *    executor recovers the round state from the checkpoint files
-    *    instead of recomputing the whole loop).
+    *  - no SparkContext checkpoint dir (the default): an RDD
+    *    round-trip gives a fresh LogicalRDD — zero I/O, but the cached
+    *    lineage dies with an executor (fine in local mode / tests);
+    *  - a checkpoint dir set on the SparkContext:
+    *    `Dataset.checkpoint(eager)` into reliable storage — the
+    *    hardened cluster variant (a lost executor recovers the round
+    *    state from the checkpoint files instead of recomputing the
+    *    whole loop). Same rule as Checkpoints.materialize.
     *
     * Fixpoint detection is MONOTONE: labels only ever decrease (the
     * min includes self, and the jump follows a min-of-mins), so the
@@ -271,7 +272,7 @@ object DedupOps {
     * ids × 10^19 max label overflows int64).
     *
     * Returns (idCol, cluster_rep), MATERIALIZED as a checkpoint
-    * (local by default, reliable when `checkpointDir` is set) with
+    * (local by default, reliable when a checkpoint dir is set) with
     * every internal cache released before return — callers own no
     * cleanup (r4's leak: the persisted labels outlived the call and
     * accumulated across bench sweeps; checkpoint blocks are
@@ -283,17 +284,12 @@ object DedupOps {
   def connectedComponents(ids: DataFrame, idCol: String, pairs: DataFrame,
                           aCol: String, bCol: String,
                           maxIter: Int = 25,
-                          checkpointDir: Option[String] = None,
                           smallGraphMaxPairs: Long = 1L << 20): DataFrame = {
     import org.apache.spark.storage.StorageLevel
     val spark = ids.sparkSession
-    checkpointDir.foreach(spark.sparkContext.setCheckpointDir)
-    // reliable mode also engages when the SESSION already has a
-    // checkpoint dir (a cluster deployment configures it once) — the
-    // explicit param remains the per-call override (ADVICE r5 parity
-    // with Checkpoints.materialize)
-    val reliable = checkpointDir.isDefined ||
-      spark.sparkContext.getCheckpointDir.isDefined
+    // reliable mode when the context has a checkpoint dir (a cluster
+    // deployment configures it once) — the Checkpoints.materialize rule
+    val reliable = spark.sparkContext.getCheckpointDir.isDefined
     def truncated(df: DataFrame): DataFrame =
       if (reliable) df.checkpoint(eager = false)
       else spark.createDataFrame(df.rdd, df.schema)

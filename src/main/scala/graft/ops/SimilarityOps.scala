@@ -196,8 +196,8 @@ object SimilarityOps {
 
   /** Exact integer mean of a cell's vectors over the first `dims`
     * components: the buffer holds the `dims` long sums and the count
-    * (`long[dims + 1]`, a flat copy to ser/de — the same public
-    * `Aggregator` + `functions.udaf` API as `SeenFilter.BloomAgg`);
+    * (`long[dims + 1]`, a flat copy to ser/de, through the public
+    * `Aggregator` + `functions.udaf` API);
     * `finish` gives floor(sum_i / count) in double, as the DuckDB
     * oracle does. A component no member has comes out 0 (a per-dimension
     * `sum` gives null there, which the dot products read as 0 too).

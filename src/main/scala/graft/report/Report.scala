@@ -112,15 +112,6 @@ object Report {
   def presentStage1(df: DataFrame): DataFrame =
     df.select(Stage1ChineseColumns.map { case (a, c) => col(a).as(c) }: _*)
 
-  /** Long-report layout (report_info_collection.py:672-676):
-    * 证券代码,公司名称,报告名称,报告日期,项目名称,金额,PDF链接
-    * (+ _has_data_resource as 0/1 when present).
-    */
-  val LongChineseColumns: Seq[(String, String)] = Seq(
-    "sec_code" -> "证券代码", "company" -> "公司名称", "title" -> "报告名称",
-    "report_date" -> "报告日期", "item" -> "项目名称", "amount_str" -> "金额",
-    "pdf_url" -> "PDF链接", "has_flag" -> "_has_data_resource")
-
   /** Wide-report layout (report_info_collection.py:537-546): base
     * info → amount columns → 是否包含数据资产 → PDF链接, keeping only
     * the columns that exist (the reference filters final_columns the

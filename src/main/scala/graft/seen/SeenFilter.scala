@@ -1,8 +1,7 @@
 package graft.seen
 
-import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders}
-import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-import org.apache.spark.sql.expressions.{Aggregator, Window}
+import org.apache.spark.sql.{Column, DataFrame, Encoders}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** URL-seen filtering: the frontier's dedup identity (SURVEY.md §2.4
@@ -46,13 +45,6 @@ object SeenFilter {
       .agg(min_by(struct(others.map(col): _*), col(seqCol)).as("__row"))
     packed.select(keyCols.map(col) ++ others.map(c => col(s"__row.$c").as(c)): _*)
   }
-
-  /** J1: exact not-seen filter — candidates whose key is absent from
-    * the seen table. Catalyst plans a shuffled (or broadcast, when
-    * seen is small) left-anti hash join.
-    */
-  def notSeen(candidates: DataFrame, seen: DataFrame, keyCols: Seq[String]): DataFrame =
-    candidates.join(seen.select(keyCols.map(col): _*).distinct(), keyCols, "left_anti")
 
   /** Stable partition id for the bloom domain — MUST be the same
     * expression on the build and probe sides across rounds/snapshots.
@@ -113,28 +105,13 @@ object SeenFilter {
     true
   }
 
-  /** Typed aggregator building one Bloom sketch per group (public
-    * `Aggregator` + `functions.udaf` per SURVEY.md §2.10; buffer is a
-    * primitive long array so ser/de is a flat copy).
-    */
-  class BloomAgg(params: BloomParams) extends Aggregator[String, Array[Long], Array[Long]] {
-    def zero: Array[Long] = new Array[Long](params.numBits / 64)
-    def reduce(b: Array[Long], key: String): Array[Long] = { setBits(b, params, key); b }
-    def merge(a: Array[Long], b: Array[Long]): Array[Long] = {
-      var i = 0; while (i < a.length) { a(i) |= b(i); i += 1 }; a
-    }
-    def finish(b: Array[Long]): Array[Long] = b
-    def bufferEncoder: Encoder[Array[Long]] = ExpressionEncoder[Array[Long]]()
-    def outputEncoder: Encoder[Array[Long]] = ExpressionEncoder[Array[Long]]()
-  }
-
   /** Build per-partition sketches: (bloom_pid, bits). One hash
     * exchange on the stable partition id, then a tight imperative
     * per-partition build (mapPartitions) — all rows of a pid land in
     * one task, so each sketch is built exactly once with zero buffer
     * serialization. (A udaf(Aggregator) formulation is semantically
     * identical but pays an encoder round-trip of the multi-KB bit
-    * array per input row — measured 10-50× slower; see BloomAgg.)
+    * array per input row — measured 10-50× slower.)
     */
   def buildPartitionedBloom(seen: DataFrame, urlCol: String, p: Int,
                             params: BloomParams): DataFrame = {

@@ -56,7 +56,7 @@ object SnapshotLog {
   final class CommitPreconditionFailed(msg: String) extends RuntimeException(msg)
 }
 
-final class SnapshotLog(val root: String) extends SnapshotTable {
+final class SnapshotLog(val root: String) {
   import SnapshotLog.Snapshot
 
   private val rootPath = Paths.get(root)
@@ -348,6 +348,20 @@ final class SnapshotLog(val root: String) extends SnapshotTable {
   def readTable(spark: SparkSession, snap: Snapshot, name: String): Option[DataFrame] =
     snap.tables.get(name).filter(_.nonEmpty).map(dirs => spark.read.parquet(dirs: _*))
 
+  /** Register every table of `snap` as a temp view named
+    * `<prefix><table>`, so the snapshot is queryable with plain
+    * `spark.sql` (and a specific snapshot id gives time-travel SQL).
+    */
+  def registerViews(spark: SparkSession, snap: Snapshot,
+                    prefix: String = "snap_"): Seq[String] =
+    snap.tables.keys.toSeq.sorted.flatMap { name =>
+      readTable(spark, snap, name).map { df =>
+        val view = prefix + name
+        df.createOrReplaceTempView(view)
+        view
+      }
+    }
+
   /** Data-file compaction for an accumulating table: rewrite all of
     * its delta dirs as ONE replace commit. Old snapshots still
     * reference the old dirs (history is immutable — time travel to a
@@ -355,7 +369,7 @@ final class SnapshotLog(val root: String) extends SnapshotTable {
     * list shrinks. At the design point an accumulating table gains a
     * dir per round, so un-compacted reads pay O(rounds) directory
     * listings and footer fetches — run this (or the sketch table's
-    * automatic equivalent, CrawlJob.Config.sketchCompactEvery) on a
+    * automatic equivalent, CrawlJob.SketchCompactEvery) on a
     * maintenance cadence. `targetFiles` bounds the rewrite fan-in.
     * Returns the new snapshot (None if the table is absent/empty).
     */

@@ -2,7 +2,7 @@ package graft
 
 import graft.canon.Canon
 import graft.extract.Extract
-import graft.extract.Extract.{Categories, TargetKeyword, extractFirstNumber, normalizeText, parseAmount}
+import graft.extract.Extract.{Categories, TargetKeyword, extractFirstNumber, parseAmount}
 import graft.gen.Fixtures
 import graft.model.{Doc, Span}
 import org.apache.spark.sql.DataFrame
@@ -19,6 +19,12 @@ class CanonExtractSpec extends SparkSpec {
     val s = spark; import s.implicits._
     input.toDF("v").select(c).collect().map(r => if (r.isNullAt(0)) null else r.getString(0)).toSeq
   }
+
+  /** E-str4 as a Column, the oracle's normalizer (twin of
+    * `Extract.normalizeTextScala`).
+    */
+  private def normalizeText(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+    regexp_replace(translate(c, ":", "："), "\\s+", "")
 
   /** Test-only oracle: the former `Extract.extractLongRows`, the same
     * fold as built-in higher-order functions (interpreted per span),
@@ -145,7 +151,7 @@ class CanonExtractSpec extends SparkSpec {
 
   test("normalizeText: column == Scala twin (E-str4)") {
     val samples = Seq("a b\tc\nd", "其中: 数据资源", "  x　y ", "no-ws", "a:b:c")
-    assert(evalStr(Extract.normalizeText(col("v")), samples) ==
+    assert(evalStr(normalizeText(col("v")), samples) ==
       samples.map(Extract.normalizeTextScala))
   }
 

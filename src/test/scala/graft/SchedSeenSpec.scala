@@ -1,5 +1,6 @@
 package graft
 
+import graft.crawl.CrawlJob
 import graft.sched.Scheduler
 import graft.seen.SeenFilter
 import org.apache.spark.sql.functions._
@@ -49,9 +50,9 @@ class SchedSeenSpec extends SparkSpec {
     // 0.3 s/page/stream listing sleep, 30 URLs/page (⇒ ≤100 URLs/s
     // discovered host-wide — the listing loop is serial), ≤5
     // concurrent PDF GETs, ≤10 HEAD probes.
-    val cfg = graft.crawl.CrawlJob.Config()
+    val cfg = CrawlJob.Config()
     // (a) the virtual-clock quantum IS the reference sleep
-    assert(cfg.tickMs == 300L, "tick quantum must equal the reference's 0.3 s sleep")
+    assert(CrawlJob.TickMs == 300L, "tick quantum must equal the reference's 0.3 s sleep")
     // (b) per-queue budget never exceeds the reference GET pool
     assert(cfg.tokensPerTick <= 5, "per-queue issue budget must fit the 5-GET pool")
     // (c) host-wide ceiling ≈ the discovery ceiling: 32 per quantum
@@ -63,7 +64,7 @@ class SchedSeenSpec extends SparkSpec {
       s"host budget/quantum $hostPerTick must cover one 30-URL page, within 2x")
     // (d) listing cadence: one page per stream per round = 2.4
     // virtual seconds ≥ the reference's 0.3 s/page — politer, never ruder
-    assert(cfg.ticksPerRound * cfg.tickMs >= 300L)
+    assert(cfg.ticksPerRound * CrawlJob.TickMs >= 300L)
 
     // and the SCHEDULE actually honors those ceilings on a hot-host
     // workload: max per (queue, tick) == tokensPerTick; the gap
@@ -72,7 +73,7 @@ class SchedSeenSpec extends SparkSpec {
     val in = (1 to 400).map(i => Scheduler.SchedIn(s"u$i", "static.cninfo.com.cn",
       (i % 7).toLong, f"t$i%03d"))
     val out = Scheduler.assignVirtualTicks(in.toDS(), cfg.saltCount,
-      cfg.tokensPerTick, cfg.tickMs).collect()
+      cfg.tokensPerTick, CrawlJob.TickMs).collect()
     val perQueueTick = out.groupBy(o => (o.salt, o.tick_index)).view.mapValues(_.length)
     assert(perQueueTick.values.max == cfg.tokensPerTick,
       "a saturated queue must issue exactly tokensPerTick per quantum")
@@ -80,7 +81,7 @@ class SchedSeenSpec extends SparkSpec {
     assert(perTick.values.max <= hostPerTick, "host-wide budget per quantum")
     out.groupBy(_.salt).values.foreach { g =>
       g.sortBy(_.rank).foreach { o =>
-        assert(o.scheduled_ms == ((o.rank - 1) / cfg.tokensPerTick) * cfg.tickMs,
+        assert(o.scheduled_ms == ((o.rank - 1) / cfg.tokensPerTick) * CrawlJob.TickMs,
           "cadence: the k-th token window of a queue opens at k x 300 ms exactly")
       }
     }

@@ -116,7 +116,7 @@ class CrawlReplaySpec extends SparkSpec {
   }
 
   test("O4 page-growth guards: raw-empty break, overshoot +3, soft stop, empty-run, cap") {
-    val cfg2 = CrawlJob.Config(emptyRunLimit = 3, maxPagesCap = 10)
+    val cfg2 = CrawlJob.Config(maxPagesCap = 10)
     val t = graft.model.ListingTask(0, "sse", 19800, "annual", page = 1, emptyRun = 0)
     // normal growth resets the empty-run counter
     assert(CrawlJob.nextListingTask(t.copy(emptyRun = 2), 30, 12, 5, cfg2)

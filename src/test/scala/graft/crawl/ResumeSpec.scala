@@ -86,9 +86,9 @@ class ResumeSpec extends SparkSpec {
     assert(fetched == 1, "the legacy task must be probed")
   }
 
-  test("SnapshotTable seam: SQL views over a snapshot + time travel by id") {
+  test("SnapshotLog views: SQL views over a snapshot + time travel by id") {
     val root = Files.createTempDirectory("crawl-views").toString
-    val log: graft.snapshot.SnapshotTable = new SnapshotLog(root)
+    val log: SnapshotLog = new SnapshotLog(root)
     import spark.implicits._
     val s0 = log.commit(
       deltas = Map("t" -> Seq(("a", 1)).toDF("k", "v")),
@@ -447,28 +447,28 @@ class ResumeSpec extends SparkSpec {
     // (b) newSession() seeds SQLConf from the context's SparkConf, so
     // the caller's runtime spark.conf.set values were silently dropped
     // inside the round — the isolated session now copies the caller's
-    // runtime view (modulo the three per-round knobs runRoundInner
-    // sets explicitly).
+    // runtime view (modulo the per-round knobs the config overrides).
     val caller = spark.newSession()
     caller.conf.set("spark.sql.session.timeZone", "America/New_York")
     caller.conf.set("spark.sql.autoBroadcastJoinThreshold", "12345678")
-    val iso1 = CrawlJob.roundSessionFor(caller)
-    val iso2 = CrawlJob.roundSessionFor(caller)
+    val cfgA = cfg.copy(roundAdaptive = false)
+    val iso1 = CrawlJob.roundSession(caller, cfgA)
+    val iso2 = CrawlJob.roundSession(caller, cfgA)
     assert(iso1 eq iso2, "one isolated session per caller, reused across rounds")
     assert(!(iso1 eq caller), "the round session must not BE the caller")
     assert(iso1.conf.get("spark.sql.session.timeZone") == "America/New_York")
     assert(iso1.conf.get("spark.sql.autoBroadcastJoinThreshold") == "12345678")
     // distinct callers get distinct isolated sessions
     val other = spark.newSession()
-    assert(!(CrawlJob.roundSessionFor(other) eq iso1))
+    assert(!(CrawlJob.roundSession(other, cfgA) eq iso1))
   }
 
   test("sequential runRound calls with different configs do not leak knobs through the cached session") {
-    // The isolated round session is cached across runRound calls, and
-    // runRoundInner only sets a knob when the CURRENT cfg overrides
-    // it — so a knob overridden by an earlier cfg must be restored to
-    // the caller's value when a later cfg leaves it at default,
-    // or cfgA's adaptive=false would silently apply to cfgB's rounds.
+    // The isolated round session is cached across runRound calls, so
+    // a knob overridden by an earlier cfg must not reach a later cfg
+    // that leaves it at default, or cfgA's adaptive=false would
+    // silently apply to cfgB's rounds: the later cfg's knobs are the
+    // caller's values.
     val caller = spark.newSession()
     val root = Files.createTempDirectory("crawl-knobs").toString
     val log = new SnapshotLog(root)
@@ -484,17 +484,55 @@ class ResumeSpec extends SparkSpec {
       roundWholeStageCodegen = false, roundAdaptive = false)
     val rr = CrawlJob.runRound(caller, cfgA, log, snap, 0)
     snap = log.read(rr.snapshotId)
-    val iso = CrawlJob.roundSessionFor(caller)
-    assert(iso.conf.get("spark.sql.adaptive.enabled") == "false")
+    val isoA = CrawlJob.roundSession(caller, cfgA)
+    assert(isoA.conf.get("spark.sql.adaptive.enabled") == "false")
     // cfgB overrides only the partition count; the other two knobs
     // must come back to the CALLER's values, not cfgA's leftovers
     val cfgB = cfg.copy(roundShufflePartitions = 5)
     CrawlJob.runRound(caller, cfgB, log, snap, 1)
+    val iso = CrawlJob.roundSession(caller, cfgB)
     assert(iso.conf.get("spark.sql.shuffle.partitions") == "5")
     assert(iso.conf.get("spark.sql.adaptive.enabled") ==
       caller.conf.get("spark.sql.adaptive.enabled"))
     assert(iso.conf.get("spark.sql.codegen.wholeStage") ==
       caller.conf.get("spark.sql.codegen.wholeStage", "true"))
+  }
+
+  test("roundSession: the caller without overrides, one session per override set, re-synced per call") {
+    val caller = spark.newSession()
+    // no overrides: the round runs on the caller itself
+    assert(CrawlJob.roundSession(caller, cfg) eq caller)
+    // one cached session per override set; the other Config fields do
+    // not take part in the key
+    val cfgA = cfg.copy(roundShufflePartitions = 3, roundAdaptive = false)
+    val cfgB = cfg.copy(roundShufflePartitions = 5)
+    val cfgC = cfg.copy(roundWholeStageCodegen = false)
+    val a = CrawlJob.roundSession(caller, cfgA)
+    assert(CrawlJob.roundSession(caller, cfgA) eq a)
+    assert(CrawlJob.roundSession(caller, cfgA.copy(maxRounds = 7, saltCount = 2)) eq a)
+    val sessions = Seq(a, CrawlJob.roundSession(caller, cfgB), CrawlJob.roundSession(caller, cfgC))
+    assert(sessions.combinations(2).forall { case Seq(x, y) => !(x eq y) },
+      "different override sets must get different sessions")
+    assert(sessions.forall(x => !(x eq caller)), "an override session must not BE the caller")
+    // caller changes made after the session was created reach the next
+    // call; the overridden keys keep cfgA's values
+    caller.conf.set("spark.sql.session.timeZone", "Asia/Shanghai")
+    caller.conf.set("spark.sql.shuffle.partitions", "11")
+    caller.conf.set("spark.sql.adaptive.enabled", "true")
+    caller.conf.set("spark.sql.codegen.wholeStage", "false")
+    val a2 = CrawlJob.roundSession(caller, cfgA)
+    assert(a2 eq a)
+    assert(a2.conf.get("spark.sql.session.timeZone") == "Asia/Shanghai")
+    assert(a2.conf.get("spark.sql.codegen.wholeStage") == "false")
+    assert(a2.conf.get("spark.sql.shuffle.partitions") == "3")
+    assert(a2.conf.get("spark.sql.adaptive.enabled") == "false")
+    // a key the caller unsets is unset in the round session too
+    caller.conf.unset("spark.sql.codegen.wholeStage")
+    assert(CrawlJob.roundSession(caller, cfgA).conf.get("spark.sql.codegen.wholeStage") ==
+      caller.conf.get("spark.sql.codegen.wholeStage"))
+    // and the caller never sees an override
+    assert(caller.conf.get("spark.sql.shuffle.partitions") == "11")
+    assert(caller.conf.get("spark.sql.adaptive.enabled") == "true")
   }
 
   test("torn manifest write does not corrupt the log (atomic commit)") {

@@ -82,20 +82,27 @@ class DedupSkewSpec extends SparkSpec {
     }
     val want = (0 until n).map(i => i.toLong -> find(i).toLong).toMap
     val ckDir = java.nio.file.Files.createTempDirectory("cc-ck").toString
-    // smallGraphMaxPairs = 0 forces the DISTRIBUTED loop so reliable
-    // checkpointing is actually exercised (the default path would run
-    // the driver union-find and write no checkpoint files)
-    val gotCk = DedupOps.connectedComponents(ids, "doc_id", pairs, "id_a", "id_b",
-        checkpointDir = Some(ckDir), smallGraphMaxPairs = 0L)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(gotCk == want, "checkpoint mode diverged from union-find oracle")
-    // the size-adaptive driver path must agree as well
-    val gotSmall = DedupOps.connectedComponents(ids, "doc_id", pairs, "id_a", "id_b")
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(gotSmall == want, "small-graph driver path diverged from union-find oracle")
-    // checkpoint files actually landed in the reliable dir
-    val wrote = java.nio.file.Files.walk(java.nio.file.Paths.get(ckDir))
-      .filter(java.nio.file.Files.isRegularFile(_)).count()
-    assert(wrote > 0, s"no checkpoint files under $ckDir")
+    // the context checkpoint dir selects reliable mode; it is cleared
+    // in the finally so later suites on the shared context keep the
+    // local-checkpoint path
+    s.sparkContext.setCheckpointDir(ckDir)
+    try {
+      // smallGraphMaxPairs = 0 forces the DISTRIBUTED loop so reliable
+      // checkpointing is actually exercised (the default path would run
+      // the driver union-find and write no checkpoint files)
+      val gotCk = DedupOps.connectedComponents(ids, "doc_id", pairs, "id_a", "id_b",
+          smallGraphMaxPairs = 0L)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(gotCk == want, "checkpoint mode diverged from union-find oracle")
+      // the size-adaptive driver path must agree as well
+      val gotSmall = DedupOps.connectedComponents(ids, "doc_id", pairs, "id_a", "id_b")
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(gotSmall == want, "small-graph driver path diverged from union-find oracle")
+      // checkpoint files actually landed in the reliable dir
+      val wrote = java.nio.file.Files.walk(java.nio.file.Paths.get(ckDir))
+        .filter(java.nio.file.Files.isRegularFile(_)).count()
+      assert(wrote > 0, s"no checkpoint files under $ckDir")
+    } finally org.apache.spark.CheckpointDirAccess.clear(s.sparkContext)
+    assert(s.sparkContext.getCheckpointDir.isEmpty, "the shared context must keep no checkpoint dir")
   }
 }
