@@ -159,31 +159,6 @@ object CrawlJob {
   def seedListing(seeds: Seq[Seed]): Seq[ListingTask] =
     seeds.map(s => ListingTask(s.exchangeRank, s.exchange, s.epochDay, s.category, 1, 0))
 
-  /** Typed defaults for DocTask columns absent from an OLDER snapshot
-    * log's frontier table (the result payload rode onto the task in a
-    * later format): resume keeps working across versions — legacy
-    * rows fetch with an empty payload instead of failing analysis.
-    */
-  private val frontierColumnDefaults: Seq[(String, org.apache.spark.sql.Column)] = Seq(
-    "arrivalSeq" -> lit(0L),
-    "company" -> lit(""),
-    "title" -> lit(""),
-    "timeMs" -> lit(-1L),
-    "timeStr" -> lit(null).cast("string"))
-
-  /** Schema-tolerant frontier read (see [[frontierColumnDefaults]]). */
-  private[crawl] def readFrontier(spark: SparkSession, log: SnapshotLog,
-                                  snap: SnapshotLog.Snapshot)
-      : org.apache.spark.sql.Dataset[DocTask] = {
-    import spark.implicits._
-    log.readTable(spark, snap, DocsFrontierTable).map { df0 =>
-      val present = df0.columns.toSet
-      frontierColumnDefaults.foldLeft(df0) { case (d, (name, default)) =>
-        if (present(name)) d else d.withColumn(name, default)
-      }.as[DocTask]
-    }.getOrElse(spark.emptyDataset[DocTask])
-  }
-
   /** O4 frontier-growth guards (cninfo_report_crawler.py:249-328).
     * Two distinct empty-page signals, exactly as the reference:
     *  - `rawRows == 0` (the API served an empty announcements list)
@@ -266,30 +241,18 @@ object CrawlJob {
         DocsFrontierTable -> spark.emptyDataset[DocTask].toDF()),
       props = Map("round" -> "-1", "done" -> "false"))
 
-    var snap = log.latest().getOrElse(seedCommit())
     // HEAD may be a NON-CRAWL commit — table compaction, snapshot
     // expiry maintenance, a streaming-sink micro-batch, a DSv2 save,
     // a SQL INSERT. round/done are STICKY in the commit protocol
-    // (SnapshotLog.commit carries them forward like stream_batch:*,
-    // ADVICE r5), so HEAD normally has them whatever interleaved AND
-    // whatever expired; the parent-chain walk below is belt-and-braces
-    // for logs written before stickiness. A log that never crawled
-    // (no round prop anywhere) gets seeded in place.
-    val crawlProps = {
-      var cur: Option[SnapshotLog.Snapshot] = Some(snap)
-      var found: Option[Map[String, String]] = None
-      while (found.isEmpty && cur.isDefined) {
-        if (cur.get.props.contains("round")) found = Some(cur.get.props)
-        else cur =
-          if (cur.get.parent < 0) None
-          else scala.util.Try(log.read(cur.get.parent)).toOption
-      }
-      found.getOrElse { snap = seedCommit(); snap.props }
-    }
+    // (SnapshotLog.commit carries them forward like stream_batch:*),
+    // so HEAD has them whatever interleaved and whatever expired. A
+    // HEAD without `round` means the log never crawled: it is seeded
+    // in place.
+    var snap = log.latest().filter(_.props.contains("round")).getOrElse(seedCommit())
 
     val results = Seq.newBuilder[RoundResult]
-    var round = crawlProps("round").toInt + 1
-    var done = crawlProps.get("done").contains("true")
+    var round = snap.props("round").toInt + 1
+    var done = snap.props.get("done").contains("true")
     var carry = Carry() // first round reads the snapshot (resume path)
     while (!done && round < cfg.maxRounds) {
       val r = runRound(spark, cfg, log, snap, round, net, carry)
@@ -401,7 +364,8 @@ object CrawlJob {
     // parquet listing+scan per round
     val deferredPrev =
       if (snap.props.get("deferred").contains("0")) spark.emptyDataset[DocTask]
-      else readFrontier(spark, log, snap)
+      else log.readTable(spark, snap, DocsFrontierTable).map(_.as[DocTask])
+        .getOrElse(spark.emptyDataset[DocTask])
     mark("listing_read")
 
     // ---- 1. listing expansion (synthetic S1 scan) -------------------

@@ -271,12 +271,14 @@ object DedupOps {
     * previous labels (the sum is computed in decimal(38,0): 10^10
     * ids × 10^19 max label overflows int64).
     *
-    * Returns (idCol, cluster_rep), MATERIALIZED as a checkpoint
-    * (local by default, reliable when a checkpoint dir is set) with
-    * every internal cache released before return — callers own no
-    * cleanup (r4's leak: the persisted labels outlived the call and
-    * accumulated across bench sweeps; checkpoint blocks are
-    * ContextCleaner-collected with the returned DataFrame). If
+    * Returns (idCol, cluster_rep) with every internal cache released
+    * before return — callers own no cleanup (r4's leak: the persisted
+    * labels outlived the call and accumulated across bench sweeps).
+    * The distributed loop's result is MATERIALIZED with
+    * [[Checkpoints.materialize]] (checkpoint blocks are
+    * ContextCleaner-collected with the returned DataFrame); the
+    * small-graph union-find path returns an unmaterialized plan over
+    * its driver-built label table. If
     * `maxIter` rounds pass without convergence the labels are NOT a
     * fixpoint; this logs a loud warning (pointer jumping converges in
     * O(log n) rounds, so hitting 25 means something is pathological).
@@ -405,7 +407,7 @@ object DedupOps {
       .select(col("id"), col("id").as("label"))
     val proj = labels.unionByName(singletons)
       .select(col("id").as(idCol), col("label").as("cluster_rep"))
-    val out = if (reliable) proj.checkpoint() else proj.localCheckpoint()
+    val out = Checkpoints.materialize(proj)
     labels.unpersist()
     participants.unpersist()
     out

@@ -1,6 +1,5 @@
 package graft.snapshot
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.connector.catalog.{Identifier, Table, TableCatalog, TableChange}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.types.StructType
@@ -58,21 +57,9 @@ final class SnapshotCatalog extends TableCatalog {
   private def load(ident: Identifier, asOf: Option[Long]): Table = {
     require(ident.namespace().isEmpty,
       s"SnapshotCatalog has a flat namespace, got ${ident.namespace().mkString(".")}")
-    val table = ident.name()
-    val snap = asOf match {
-      case Some(id) => Some(log.read(id))
-      case None => log.latest()
-    }
-    val r = ResolvedSnapshot(root, table, asOf, snap.map(_.id),
-      snap.map(_.tables.getOrElse(table, Seq.empty)).getOrElse(Seq.empty))
+    val r = ResolvedSnapshot.resolve(root, ident.name(), asOf)
     val options = new CaseInsensitiveStringMap(java.util.Collections.emptyMap())
-    val parquet =
-      if (r.dirs.isEmpty) None
-      else Some(org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable(
-        s"${catalogName}.${table}_s${r.snapId.getOrElse(-1L)}", SparkSession.active,
-        options, r.dirs, None,
-        classOf[org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat]))
-    new SnapshotV2Table(r, parquet)
+    new SnapshotV2Table(r, r.parquetTable(s"$catalogName.", options, None))
   }
 
   override def loadTable(ident: Identifier): Table = load(ident, None)

@@ -1,5 +1,6 @@
 package graft.snapshot
 
+import com.fasterxml.jackson.databind.{DeserializationFeature, JsonNode, ObjectMapper}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
@@ -28,10 +29,10 @@ import scala.jdk.CollectionConverters._
   */
 object SnapshotLog {
   /** `schemas` records each table's canonical column signature
-    * (lower-cased `name:type`, sorted) at this snapshot — the commit
-    * protocol enforces delta compatibility against it WITHOUT any
-    * parquet footer read (legacy manifests without the field fall
-    * back to one footer read, then carry the field forward).
+    * (lower-cased `name:type`, sorted) at this snapshot. Every commit
+    * records one for each table it writes and carries the parent's
+    * forward, and the commit protocol enforces delta compatibility
+    * against it without reading any parquet footer.
     */
   final case class Snapshot(id: Long, parent: Long,
                             tables: Map[String, Seq[String]],
@@ -54,6 +55,12 @@ object SnapshotLog {
     * concurrent driver").
     */
   final class CommitPreconditionFailed(msg: String) extends RuntimeException(msg)
+
+  /** The JSON mapper behind the manifest codec (and `graft.Verify`'s
+    * oracle dump). Thread-safe once configured.
+    */
+  private[graft] val Json: ObjectMapper =
+    new ObjectMapper().enable(DeserializationFeature.FAIL_ON_TRAILING_TOKENS)
 }
 
 final class SnapshotLog(val root: String) {
@@ -319,17 +326,14 @@ final class SnapshotLog(val root: String) {
   private var noLinkWarned = false
 
   /** Append-compatibility gate (see commit): delta schema must match
-    * the table's committed canonical signature. Manifest-recorded
-    * signature preferred; a legacy manifest (pre-`schemas`) costs one
-    * parquet footer read of the newest dir.
+    * the table's recorded canonical signature. A table that has dirs
+    * but no recorded signature fails closed.
     */
   private def checkAppendSchema(parent: Option[Snapshot], name: String,
                                 df: DataFrame): Unit = {
     val existing: Option[String] = parent.flatMap { p =>
       p.schemas.get(name).orElse(
-        p.tables.get(name).filter(_.nonEmpty).map(dirs =>
-          SnapshotLog.canonicalSchema(
-            df.sparkSession.read.parquet(dirs.last).schema)))
+        p.tables.get(name).filter(_.nonEmpty).map(_ => "(no recorded schema)"))
     }
     val incoming = SnapshotLog.canonicalSchema(df.schema)
     existing.filter(_ != incoming).foreach { exp =>
@@ -347,20 +351,6 @@ final class SnapshotLog(val root: String) {
     */
   def readTable(spark: SparkSession, snap: Snapshot, name: String): Option[DataFrame] =
     snap.tables.get(name).filter(_.nonEmpty).map(dirs => spark.read.parquet(dirs: _*))
-
-  /** Register every table of `snap` as a temp view named
-    * `<prefix><table>`, so the snapshot is queryable with plain
-    * `spark.sql` (and a specific snapshot id gives time-travel SQL).
-    */
-  def registerViews(spark: SparkSession, snap: Snapshot,
-                    prefix: String = "snap_"): Seq[String] =
-    snap.tables.keys.toSeq.sorted.flatMap { name =>
-      readTable(spark, snap, name).map { df =>
-        val view = prefix + name
-        df.createOrReplaceTempView(view)
-        view
-      }
-    }
 
   /** Data-file compaction for an accumulating table: rewrite all of
     * its delta dirs as ONE replace commit. Old snapshots still
@@ -488,137 +478,61 @@ final class SnapshotLog(val root: String) {
 
   private def manifestPath(id: Long): Path = rootPath.resolve(f"snapshot-$id%06d.json")
 
-  // -- tiny self-contained JSON (flat, string-valued) -----------------
-
-  private def q(s: String): String = "\"" + s.flatMap {
-    case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-  } + "\""
-
+  /** Manifest codec: one JSON object `{"id", "parent", "tables",
+    * "props", "schemas"}` written through Jackson's tree model. Map
+    * keys are written in sorted order, so a snapshot always renders to
+    * the same bytes (the ATOMIC_MOVE fallback's clobber check compares
+    * them).
+    */
   private[graft] def render(s: Snapshot): String = {
-    val tables = s.tables.toSeq.sortBy(_._1).map { case (n, dirs) =>
-      s"${q(n)}: [${dirs.map(q).mkString(", ")}]"
-    }.mkString("{", ", ", "}")
-    val props = s.props.toSeq.sortBy(_._1).map { case (k, v) => s"${q(k)}: ${q(v)}" }
-      .mkString("{", ", ", "}")
-    val schemas = s.schemas.toSeq.sortBy(_._1).map { case (k, v) => s"${q(k)}: ${q(v)}" }
-      .mkString("{", ", ", "}")
-    s"""{"id": ${s.id}, "parent": ${s.parent}, "tables": $tables, """ +
-      s""""props": $props, "schemas": $schemas}"""
+    val top = SnapshotLog.Json.createObjectNode().put("id", s.id).put("parent", s.parent)
+    val tables = top.putObject("tables")
+    s.tables.toSeq.sortBy(_._1).foreach { case (n, dirs) =>
+      dirs.foldLeft(tables.putArray(n))(_.add(_)) }
+    Seq("props" -> s.props, "schemas" -> s.schemas).foreach { case (field, m) =>
+      val o = top.putObject(field)
+      m.toSeq.sortBy(_._1).foreach { case (k, v) => o.put(k, v) }
+    }
+    SnapshotLog.Json.writeValueAsString(top)
   }
 
-  /** Parser for exactly the JSON subset `render` emits: a flat object
-    * of long fields (id, parent) and string-keyed maps whose values
-    * are strings (props, schemas) or string arrays (tables).
-    * Recursive descent with FULL string-escape awareness — the r5
-    * regex parser counted braces and scanned `[...]` without regard
-    * for quoting, so a `]`, `{` or `}` inside a table name or dir
-    * path mis-parsed (VERDICT r5 #7). Adversarial names round-trip
-    * now: parse(render(s)) == s is property-tested over names
-    * containing brackets, braces, quotes, backslashes, newlines and
-    * control chars (SinkSpec).
-    *
-    * FAILURE MODE (VERDICT r6 #7): a truncated or corrupted manifest
-    * — a torn write on a non-atomic filesystem, a partial copy —
-    * always throws `IllegalArgumentException` (never returns a
-    * silently-garbled Snapshot, never escapes a raw
-    * StringIndexOutOfBounds/ClassCast/NoSuchElement): the body runs
-    * under a catch that converts every internal failure, and after
-    * the top-level object the input must be fully consumed (trailing
-    * bytes = an interleaved/doubled write, rejected). Property-tested
-    * over every strict prefix of valid manifests (SnapshotParseSpec).
+  /** Inverse of [[render]]. `id` and `parent` are required integral
+    * numbers; `tables`, `props` and `schemas` default to empty. A
+    * truncated or corrupted manifest (a torn write on a non-atomic
+    * filesystem, a partial copy, a doubled write) always throws
+    * `IllegalArgumentException` whose message contains "manifest
+    * parse" — never a silently garbled Snapshot. Trailing whitespace
+    * is accepted; trailing tokens are not.
     */
   private[graft] def parse(js: String): Snapshot = try {
-    var i = 0
-    def ws(): Unit = while (i < js.length && js.charAt(i).isWhitespace) i += 1
-    def expect(c: Char): Unit = {
-      ws()
-      require(i < js.length && js.charAt(i) == c,
-        s"manifest parse: expected '$c' at offset $i")
-      i += 1
+    val top = SnapshotLog.Json.readTree(js)
+    require(top.isObject, "manifest parse: not a JSON object")
+    def long(field: String): Long = {
+      val n = top.get(field)
+      require(n != null && n.isIntegralNumber && n.canConvertToLong,
+        s"manifest parse: missing or non-integral field $field")
+      n.longValue
     }
-    def peek(): Char = { ws(); js.charAt(i) }
-    def parseString(): String = {
-      expect('"')
-      val sb = new StringBuilder
-      while (js.charAt(i) != '"') {
-        js.charAt(i) match {
-          case '\\' =>
-            js.charAt(i + 1) match {
-              case 'n' => sb += '\n'; i += 2
-              case 'u' =>
-                sb += Integer.parseInt(js.substring(i + 2, i + 6), 16).toChar; i += 6
-              case c => sb += c; i += 2 // \" and \\ (all render emits)
-            }
-          case c => sb += c; i += 1
-        }
-      }
-      i += 1
-      sb.toString
+    def obj(field: String): Map[String, JsonNode] = Option(top.get(field)).map { n =>
+      require(n.isObject, s"manifest parse: field $field is not an object")
+      n.properties().asScala.map(e => e.getKey -> e.getValue).toMap
+    }.getOrElse(Map.empty)
+    def text(n: JsonNode): String = {
+      require(n.isTextual, s"manifest parse: non-string value $n")
+      n.textValue
     }
-    def parseLong(): Long = {
-      ws()
-      val start = i
-      if (js.charAt(i) == '-') i += 1
-      while (i < js.length && js.charAt(i).isDigit) i += 1
-      js.substring(start, i).toLong
-    }
-    def parseArray(): Seq[String] = {
-      expect('[')
-      val out = Seq.newBuilder[String]
-      if (peek() == ']') { i += 1; out.result() }
-      else {
-        var more = true
-        while (more) {
-          out += parseString()
-          if (peek() == ',') i += 1 else more = false
-        }
-        expect(']')
-        out.result()
-      }
-    }
-    def parseValue(): Any = peek() match {
-      case '"' => parseString()
-      case '[' => parseArray()
-      case '{' => parseObject()
-      case _ => parseLong()
-    }
-    def parseObject(): Map[String, Any] = {
-      expect('{')
-      val out = Map.newBuilder[String, Any]
-      if (peek() == '}') { i += 1; out.result() }
-      else {
-        var more = true
-        while (more) {
-          val k = parseString()
-          expect(':')
-          out += k -> parseValue()
-          if (peek() == ',') i += 1 else more = false
-        }
-        expect('}')
-        out.result()
-      }
-    }
-    val top = parseObject()
-    ws()
-    require(i >= js.length, s"manifest parse: trailing garbage at offset $i")
-    def strMap(key: String): Map[String, String] = // schemas absent pre-r5
-      top.get(key).map(_.asInstanceOf[Map[String, Any]]
-        .map { case (k, v) => k -> v.asInstanceOf[String] }).getOrElse(Map.empty)
-    require(top.contains("id") && top.contains("parent"),
-      "manifest parse: missing required field id/parent")
-    Snapshot(
-      top("id").asInstanceOf[Long],
-      top("parent").asInstanceOf[Long],
-      top.get("tables").map(_.asInstanceOf[Map[String, Any]]
-        .map { case (k, v) => k -> v.asInstanceOf[Seq[String]] }).getOrElse(Map.empty),
-      strMap("props"),
-      strMap("schemas"))
+    Snapshot(long("id"), long("parent"),
+      obj("tables").map { case (k, v) =>
+        require(v.isArray, s"manifest parse: table $k is not an array")
+        k -> v.elements().asScala.map(text).toSeq
+      },
+      obj("props").map { case (k, v) => k -> text(v) },
+      obj("schemas").map { case (k, v) => k -> text(v) })
   } catch {
-    case e: IllegalArgumentException => throw e // our requires (and NumberFormat, an IAE subclass)
+    case e: IllegalArgumentException => throw e // the requires above
     case scala.util.control.NonFatal(e) =>
       throw new IllegalArgumentException(
-        s"manifest parse: truncated or corrupt manifest " +
-          s"(${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("")})")
+        s"manifest parse: truncated or corrupt manifest (${e.getClass.getSimpleName}: " +
+          s"${Option(e.getMessage).getOrElse("")})", e)
   }
 }

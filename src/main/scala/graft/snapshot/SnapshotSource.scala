@@ -72,23 +72,11 @@ final class SnapshotSource extends TableProvider with DataSourceRegister {
     pinned match {
       case Some(r) if r.root == root && r.table == table && r.asOf == asOf => r
       case _ =>
-        val log = new SnapshotLog(root)
-        val snap = asOf match {
-          case Some(id) => Some(log.read(id))
-          case None => log.latest()
-        }
-        val r = ResolvedSnapshot(root, table, asOf, snap.map(_.id),
-          snap.map(_.tables.getOrElse(table, Seq.empty)).getOrElse(Seq.empty))
+        val r = ResolvedSnapshot.resolve(root, table, asOf)
         pinned = Some(r)
         r
     }
   }
-
-  private def parquetTable(r: ResolvedSnapshot, options: CaseInsensitiveStringMap,
-                           userSchema: Option[StructType]): Option[ParquetTable] =
-    if (r.dirs.isEmpty) None
-    else Some(ParquetTable(s"graft_snapshot_${r.table}_s${r.snapId.getOrElse(-1L)}",
-      SparkSession.active, options, r.dirs, userSchema, classOf[ParquetFileFormat]))
 
   /** Absent table/snapshot → empty schema: the write path needs to
     * get through here for a brand-new log (the table then advertises
@@ -98,7 +86,7 @@ final class SnapshotSource extends TableProvider with DataSourceRegister {
     */
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
     val r = resolve(options)
-    parquetTable(r, options, None).map(_.schema).getOrElse(new StructType())
+    r.parquetTable("graft_snapshot_", options, None).map(_.schema).getOrElse(new StructType())
   }
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
@@ -106,7 +94,7 @@ final class SnapshotSource extends TableProvider with DataSourceRegister {
     val options = new CaseInsensitiveStringMap(properties)
     val r = resolve(options)
     val userSchema = if (schema != null && schema.nonEmpty) Some(schema) else None
-    new SnapshotV2Table(r, parquetTable(r, options, userSchema))
+    new SnapshotV2Table(r, r.parquetTable("graft_snapshot_", options, userSchema))
   }
 }
 
@@ -154,12 +142,33 @@ private[snapshot] final class SnapshotV2Table(r: ResolvedSnapshot,
 }
 
 /** One pinned resolution: (root, table, asOf) → the snapshot id and
-  * data dirs the whole load/save will see.
+  * data dirs the whole load/save will see. Shared by [[SnapshotSource]]
+  * and [[SnapshotCatalog]].
   */
 private[snapshot] final case class ResolvedSnapshot(root: String, table: String,
                                                     asOf: Option[Long],
                                                     snapId: Option[Long],
-                                                    dirs: Seq[String])
+                                                    dirs: Seq[String]) {
+
+  /** Spark's native parquet table over the resolved dirs, named
+    * `<prefix><table>_s<id>`; None when the table is absent.
+    */
+  def parquetTable(prefix: String, options: CaseInsensitiveStringMap,
+                   userSchema: Option[StructType]): Option[ParquetTable] =
+    if (dirs.isEmpty) None
+    else Some(ParquetTable(s"$prefix${table}_s${snapId.getOrElse(-1L)}",
+      SparkSession.active, options, dirs, userSchema, classOf[ParquetFileFormat]))
+}
+
+private[snapshot] object ResolvedSnapshot {
+  /** Snapshot `asOf` (latest when None) of the log under `root`. */
+  def resolve(root: String, table: String, asOf: Option[Long]): ResolvedSnapshot = {
+    val log = new SnapshotLog(root)
+    val snap = asOf.fold(log.latest())(id => Some(log.read(id)))
+    ResolvedSnapshot(root, table, asOf, snap.map(_.id),
+      snap.flatMap(_.tables.get(table)).getOrElse(Seq.empty))
+  }
+}
 
 private[snapshot] final class SnapshotWriteBuilder(root: String, table: String,
                                                    asOf: Option[Long])

@@ -50,11 +50,6 @@ object StreamingCrawl {
   final case class ScheduledFetch(url: String, host: String, salt: Int,
                                   tick_index: Long, scheduled_ms: Long)
 
-  /** ST1 streaming politeness: per micro-batch, each (host, salt)
-    * group drains its queue in priority order, continuing from the
-    * bucket state left by previous batches. State never grows — it is
-    * exactly (nextTick, usedInTick).
-    */
   /** Streaming sink into a [[graft.snapshot.SnapshotLog]]: every
     * micro-batch commits one delta dir through the same atomic
     * manifest-rename protocol as the batch writers, so a streaming
@@ -99,24 +94,10 @@ object StreamingCrawl {
     val batchKey = s"stream_batch:$queryName"
     // stream_batch:* props are STICKY in the commit protocol (every
     // commit carries the parent's forward — SnapshotLog.commit), so
-    // the watermark normally sits right at HEAD whatever interleaves,
-    // and survives expiry as long as ANY snapshot survives. The
-    // parent-chain walk below is belt-and-braces for logs written
-    // before stickiness existed.
-    def lastCommittedFrom(log: graft.snapshot.SnapshotLog,
-                          head: Option[graft.snapshot.SnapshotLog.Snapshot]): Option[Long] = {
-      var cur = head
-      while (cur.isDefined) {
-        cur.get.props.get(batchKey) match {
-          case Some(v) => return Some(v.toLong)
-          case None =>
-            cur =
-              if (cur.get.parent < 0) None
-              else scala.util.Try(log.read(cur.get.parent)).toOption
-        }
-      }
-      None
-    }
+    // the watermark sits right at HEAD whatever interleaves, and
+    // survives expiry as long as ANY snapshot survives: `fresh` reads
+    // HEAD's prop only.
+    //
     // The watermark check is ALSO the commit's precondition, re-checked
     // against the head inside the publish retry loop (ADVICE r5): a
     // zombie/failover driver replaying this batchId concurrently with
@@ -125,7 +106,7 @@ object StreamingCrawl {
     // head, its precondition sees the winner's watermark, and the
     // commit aborts (returns false) instead of double-publishing.
     def fresh(head: Option[graft.snapshot.SnapshotLog.Snapshot]): Boolean =
-      !lastCommittedFrom(log, head).exists(_ >= batchId)
+      !head.flatMap(_.props.get(batchKey)).exists(_.toLong >= batchId)
     if (!fresh(log.latest())) false
     else
       try {
@@ -137,6 +118,11 @@ object StreamingCrawl {
       }
   }
 
+  /** ST1 streaming politeness: per micro-batch, each (host, salt)
+    * group drains its queue in priority order, continuing from the
+    * bucket state left by previous batches. State never grows — it is
+    * exactly (nextTick, usedInTick).
+    */
   def politenessStream(tasks: Dataset[StreamTask], saltCount: Int, tokensPerTick: Int,
                        tickMs: Long): Dataset[ScheduledFetch] = {
     val spark = tasks.sparkSession

@@ -79,7 +79,7 @@ class StreamingSpec extends SparkSpec {
       assert(log.latest().get.id == before, "replay must not advance the log")
       assert(log.readTable(s, log.latest().get, "feed").get.count() == 3)
       // a batch-side commit interleaving does not break the guard: the
-      // sink finds its batch id through the parent chain
+      // sink's batch id is sticky, so it rides the batch commit's HEAD
       log.commit(Map("other" -> Seq(9L).toDF("x")), Map.empty, Map("round" -> "77"))
       in.addData(("d", 4L))
       q.processAllAvailable()

@@ -60,52 +60,6 @@ class ResumeSpec extends SparkSpec {
     assert(resumed.map(_.totals) == fullRounds.drop(2).map(_.totals))
   }
 
-  test("resume tolerates a legacy frontier schema (pre-payload DocTask)") {
-    // A snapshot log written BEFORE the result payload rode on the
-    // task: the frontier table lacks (arrivalSeq, company, title,
-    // timeMs, timeStr). Resume must analyze and run — legacy rows get
-    // typed defaults, not an AnalysisException.
-    val root = Files.createTempDirectory("crawl-legacy-frontier").toString
-    val log = new SnapshotLog(root)
-    log.init()
-    import spark.implicits._
-    val legacyFrontier = Seq(
-      (graft.gen.Fixtures.UrlBase + "19810/0-0001-abcd.pdf",
-        graft.gen.Fixtures.Host, 19810, "600001", 1, "k1"))
-      .toDF("url", "host", "announceEpochDay", "secCode", "pageDepth", "seenKey")
-    log.commit(
-      deltas = Map.empty,
-      replaced = Map(
-        CrawlJob.ListingTable -> spark.emptyDataset[graft.model.ListingTask].toDF(),
-        CrawlJob.DocsFrontierTable -> legacyFrontier),
-      props = Map("round" -> "0", "done" -> "false"))
-    val rounds = CrawlJob.run(spark, seeds, cfg, root)
-    assert(rounds.nonEmpty && rounds.last.docsPending == 0,
-      "legacy frontier must drain to completion")
-    val fetched = rounds.map(_.totals.fetched).sum + rounds.map(_.totals.invalid).sum
-    assert(fetched == 1, "the legacy task must be probed")
-  }
-
-  test("SnapshotLog views: SQL views over a snapshot + time travel by id") {
-    val root = Files.createTempDirectory("crawl-views").toString
-    val log: SnapshotLog = new SnapshotLog(root)
-    import spark.implicits._
-    val s0 = log.commit(
-      deltas = Map("t" -> Seq(("a", 1)).toDF("k", "v")),
-      replaced = Map.empty, props = Map("round" -> "0", "done" -> "false"))
-    val s1 = log.commit(
-      deltas = Map("t" -> Seq(("b", 2)).toDF("k", "v")),
-      replaced = Map.empty, props = Map("round" -> "1", "done" -> "true"))
-    // latest view sees both deltas
-    val views = log.registerViews(spark, log.latest().get)
-    assert(views == Seq("snap_t"))
-    assert(spark.sql("SELECT count(*) FROM snap_t").head.getLong(0) == 2)
-    // time travel: the same table as of snapshot 0 has one row
-    log.registerViews(spark, log.read(s0.id), prefix = "asof0_")
-    assert(spark.sql("SELECT k FROM asof0_t").collect().map(_.getString(0)).toSeq == Seq("a"))
-    assert(s1.parent == s0.id)
-  }
-
   test("DSv2 source: format('graft-snapshot') reads tables, time-travels, pushes down") {
     val root = Files.createTempDirectory("crawl-dsv2").toString
     val log = new SnapshotLog(root)
@@ -282,14 +236,14 @@ class ResumeSpec extends SparkSpec {
     log.commit(Map.empty, Map("t" -> Seq(("z", 9L)).toDF("k", "v")), Map("round" -> "3"))
     log.commit(Map("t" -> Seq(("w", 8L)).toDF("k", "v")), Map.empty, Map("round" -> "4"))
     assert(log.readTable(spark, log.latest().get, "t").get.count() == 2)
-    // legacy manifests (no schemas field) still enforce via one footer
-    // read: strip the field from HEAD and retry a bad append
+    // a table with dirs but no recorded schema fails closed: strip the
+    // field from HEAD and retry a bad append
     val mPath = java.nio.file.Paths.get(root).toFile.listFiles()
       .filter(_.getName.startsWith("snapshot-")).maxBy(_.getName).toPath
     val js = java.nio.file.Files.readString(mPath)
     java.nio.file.Files.writeString(mPath,
-      js.replaceAll(""", "schemas": \{[^}]*\}""", ""))
-    assert(log.latest().get.schemas.isEmpty, "legacy manifest fixture must have no schemas")
+      js.replaceAll(""","schemas":\{[^}]*\}""", ""))
+    assert(log.latest().get.schemas.isEmpty, "fixture manifest must have no schemas")
     val e3 = intercept[IllegalArgumentException] {
       log.commit(Map("t" -> Seq("x").toDF("k")), Map.empty, Map("round" -> "5"))
     }
@@ -346,17 +300,7 @@ class ResumeSpec extends SparkSpec {
     // STICKY (ADVICE r5) so the resume cursor rides it
     assert(log.latest().get.props.contains("stream_batch:q"), "HEAD must be the sink commit")
     assert(log.latest().get.props("round") == "1", "sticky round must ride HEAD")
-    // ALSO exercise the legacy walk (logs written before stickiness):
-    // strip the sticky cursor from the HEAD manifest on disk — run()
-    // must then walk the parent chain to the last crawl commit
-    val mPath = java.nio.file.Paths.get(root).toFile.listFiles()
-      .filter(_.getName.startsWith("snapshot-")).maxBy(_.getName).toPath
-    java.nio.file.Files.writeString(mPath,
-      java.nio.file.Files.readString(mPath)
-        .replaceAll(""""round": "[^"]*", """, "")
-        .replaceAll(""""done": "[^"]*", """, ""))
-    assert(!log.latest().get.props.contains("round"), "legacy fixture: HEAD must be non-crawl")
-    // run() must walk to the last crawl commit and continue at round 2
+    // run() continues at round 2 straight off the sticky HEAD
     val resumed = CrawlJob.run(spark, seeds, cfg, root)
     assert(resumed.nonEmpty && resumed.head.round == 2,
       s"resume must continue at round 2, got ${resumed.headOption.map(_.round)}")
