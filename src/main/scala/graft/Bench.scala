@@ -1,6 +1,10 @@
 package graft
 
-import graft.bench.ReplayBench
+import com.fasterxml.jackson.databind.JsonNode
+import com.fasterxml.jackson.databind.node.ObjectNode
+import graft.bench.{ReplayBench, StageMetrics}
+import graft.bench.ReplayBench.PipelineStats
+import graft.snapshot.SnapshotLog.Json
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark entry (driver-run per round → BENCH_r{N}.json).
@@ -51,6 +55,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    persistently loud box self-flags "queries_contended":true and
   *    falls back to per-query min over all attempts
   *
+  * `main` runs in three steps: measure (each phase's readings, with
+  * its re-runs), select (one function picks the scaling pair), emit
+  * (one Jackson tree; the headline is a projection of it).
+  *
   * Env knobs: SPARK_GRAFT_SF_DIR (query corpus), SPARK_GRAFT_CPUS
   * (query-phase parallelism), SPARK_GRAFT_BENCH_URLS (replay size,
   * default 2,000,000), SPARK_GRAFT_BENCH_LO/HI (parallelism pair),
@@ -69,6 +77,12 @@ object Bench {
     String.format(java.util.Locale.ROOT, "%.3f", Double.box(d))
   private[graft] def f1(d: Double): String =
     String.format(java.util.Locale.ROOT, "%.1f", Double.box(d))
+
+  /** A formatted decimal as a JSON number that keeps its digits
+    * (`"1.500"` renders as `1.500`, not `1.5`).
+    */
+  private[graft] def num(formatted: String): java.math.BigDecimal =
+    new java.math.BigDecimal(formatted)
 
   /** Contention-gate bound for a spark-canary reading: relative to
     * the larger of the calibrated quiet nominal and the SAME-JVM
@@ -110,22 +124,139 @@ object Bench {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.driver.host", "localhost")
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }
 
+  // CONTENTION GATE (VERDICT r4 #1): every reading carries box-
+  // state evidence — the parallel CPU canary AND ext_cpu_cores
+  // (external busy cores over the whole rep window, /proc/stat
+  // minus own JVM). A reading breaching either bound was measured
+  // AGAINST TENANT LOAD, not against the engine — r4's round
+  // artifact read 0.719 with inflated walls while the same HEAD
+  // read 0.916 quiet. The protocol now ACTS on the evidence:
+  // contended readings are never selected while a clean one
+  // exists; a level with no clean reading is re-run (bounded
+  // retries with spacing); if the box never quiets, the emission
+  // self-flags "contended":true so a sub-bar efficiency is never
+  // a bare number again.
+  // Quiet-box nominal MEASURED on this box class (`Probe canary`,
+  // load 0.1: par8 0.148, par2 0.142; single-thread 0.278) — env-
+  // overridable on migration. The canary alone under-detects BURSTY
+  // load (its ~0.15 s window reads near-nominal while walls inflate
+  // 40%, r4), so each reading also carries ext_cpu_cores — box-wide
+  // busy CPU minus this JVM over the WHOLE rep window (/proc/stat) —
+  // and more than 1 tenant core average marks the reading contended.
+  private val parNominal =
+    sys.env.getOrElse("SPARK_GRAFT_CANARY_PAR_NOMINAL", "0.15").toDouble
+  // Per-level mem-canary nominals "lo,hi" (the wall grows with
+  // threads even quiet — the socket saturates). Measured healthy-box
+  // best (`Probe canary` 2026-08-17: mem2 0.043, mem8 0.047 = 42.9
+  // GB/s aggregate; the burned window read 3.1 GB/s, ~10× over any
+  // sane gate).
+  private val Array(memNomLo, memNomHi) =
+    sys.env.getOrElse("SPARK_GRAFT_CANARY_MEM_NOMINALS", "0.05,0.06")
+      .split(",").map(_.trim.toDouble)
+  // SPARK-SHAPED canary nominals "lo,hi" — the gate's PRIMARY probe
+  // (BenchLevel.sparkCanary scaladoc: the register/streaming canaries
+  // provably missed a host neighbor trashing LLC/memory latency that
+  // retired the same replay instructions 1.6× slower). The fixed
+  // mini-job runs on each level's own session, so its wall shrinks
+  // with the level: nominals are per-level. Calibration (r5, no
+  // fully-quiet window was observable): two same-HEAD runs at
+  // different mild degradation levels give consistent quiet
+  // estimates via observed_canary / wall_inflation_vs_r4_quiet —
+  // lo: 7.25/1.13=6.4 and 8.36/1.23=6.8; hi: 2.20/1.29=1.70 and
+  // 2.41/1.47=1.64 (BENCH/r5_scaling_probe.json, r5_verify_bench
+  // .json vs run_r4_quiet_0916.json). The 1.3× gate then admits the
+  // 0.802-efficiency box state and flags the 0.769 one — the
+  // boundary sits where it should.
+  private val Array(sparkNomLo, sparkNomHi) =
+    sys.env.getOrElse("SPARK_GRAFT_CANARY_SPARK_NOMINALS", "6.5,1.7")
+      .split(",").map(_.trim.toDouble)
+  private val extCpuMax = sys.env.getOrElse("SPARK_GRAFT_EXT_CPU_MAX", "1.0").toDouble
+  private val contendedFactor = 1.3
+  // CROSS-LEVEL CPU CONSISTENCY (r7): the measured job's task set
+  // is identical at both levels, so the selected pair's task-CPU
+  // ratio hi/lo must sit near the quiet-box ~1.3× per-task
+  // inflation (BASELINE.md r3). Clean same-HEAD pairs measured
+  // 0.98–1.29; the r7_close3 burned pair read 1.52 and slipped the
+  // old 1.6 band, so the band is [1/1.5, 1.5]. A ratio outside it
+  // means one leg retired the same instructions materially slower —
+  // a mid-rep neighbor the bracketing canaries can miss entirely
+  // (r7: 3 of 5 full runs burned with every canary under gate).
+  // Same HEAD runs both legs, so unlike an absolute CPU nominal
+  // this check is invariant to engine changes.
+  private val cpuTol = 1.5
+
+  /** The selected scaling pair. Every flag the artifact ships is a
+    * function of the pair itself, so it always describes the pair the
+    * artifact reports, whichever re-run produced it.
+    */
+  private[graft] final case class Scaling(lo: PipelineStats, hi: PipelineStats,
+                                          loLevel: Int, hiLevel: Int, contended: Boolean) {
+    def efficiency: Double = (hi.throughput / lo.throughput) / (hiLevel.toDouble / loLevel)
+    def cpuRatio: Option[Double] =
+      for (a <- lo.stageSec.get("task_cpu_sec"); b <- hi.stageSec.get("task_cpu_sec"))
+        yield b / a
+    def cpuInconsistent: Boolean = cpuRatio.exists(r => r > cpuTol || r < 1 / cpuTol)
+    // An efficiency outside the PLAUSIBILITY band (0.25, 1.02] is a
+    // measurement pathology, not a scaling result: > 1.02 is
+    // physically impossible; ≤ 0.25 means 4× the slots delivered
+    // under 1× the throughput — essentially serial execution, which
+    // this job's plan shape (uniform queue placement, partition-
+    // parallel stages, regression-gated) rules out; the one observed
+    // instance was a tenant-load wave swallowing a level (local[8]
+    // at 273 s vs 9.0 s quiet, round 4). The two tails are kept
+    // distinct (ADVICE r4): > 1.02 is always a pathology; ≤ 0.25 is
+    // treated as one ONLY when the canaries also show load —
+    // a quiet-box collapse is reported as the regression it is.
+    def anomalous: Option[String] =
+      if (efficiency > 1.02) Some("high")
+      else if (efficiency <= 0.25 && contended) Some("low")
+      else None
+  }
+
+  /** The accepted query sweep (or, when no attempt was clean, the
+    * per-query min over all attempts) and its contention evidence.
+    */
+  private[graft] final case class Sweep(times: Map[String, Double], failed: Seq[String],
+                                        canaries: Seq[Double], contended: Boolean,
+                                        attempts: Int, floor: Double)
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val nUrls = sys.env.getOrElse("SPARK_GRAFT_BENCH_URLS", "2000000").toLong
+    // phase 1 (fresh JVM): replay scaling; phase 2 (run second: keeps
+    // the scaling JVM fresh): queries on the sf corpus
+    val scaling = measureScaling(nUrls)
+    val sweep = measureQueries(cpus, sfDir)
+    // Engine-free hardware truth for the artifact: the box's random-
+    // access latency class (BenchLevel.ptrChaseNs scaladoc). Lets a
+    // reader separate "spark-canary floor drifted with the host
+    // incarnation" (ptr chase nominal) from "neighbor trashing
+    // LLC/TLB" (ptr chase ~330 ns in r5's burned state).
+    val ptrChase = (1 to 3).map(_ => BenchLevel.ptrChaseNs()).min
+    val (full, compact) = emit(scaling, sweep, ptrChase, sfDir)
+    val json = Json.writeValueAsString(full)
+    // full JSON first, for humans and for the file artifact...
+    println(json)
+    // ...then the file artifact (sbt prefixes stdout with [info],
+    // which broke the round-1 artifact parse — the file is unwrapped).
+    val outPath = java.nio.file.Paths.get(
+      sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH/latest.json"))
+    Option(outPath.getParent).foreach(java.nio.file.Files.createDirectories(_))
+    java.nio.file.Files.writeString(outPath, json + "\n")
+    // ...and the COMPACT headline as the very LAST stdout line
+    println(Json.writeValueAsString(compact))
+  }
 
-    // ---- phase 1 (fresh JVM): replay scaling, local[8] vs local[32] ------------
-    // Identical input, fresh session per level. One full-size warm-up
-    // run first (JIT/heap warm-up is JVM-global and would otherwise
-    // flatter whichever level runs second), then min-of-2 per level.
+  /** Replay scaling, local[lo] vs local[hi]: measure, re-measure while
+    * the gate says so, and return the selected pair.
+    */
+  private def measureScaling(nUrls: Long): Scaling = {
     // N vs 4N: local[2] vs local[8] — all physical cores. (This box
     // is 16 physical cores + SMT: a pure-CPU probe scales 2→8 procs
     // at 0.98 efficiency but 8→32 at only 0.78 because the upper
@@ -135,8 +266,7 @@ object Bench {
     // Partitioning is FIXED across levels (the cluster analogy: the
     // job, its plan, and its task set are identical; only executor
     // slots change between N and 4N — exactly what changing cluster
-    // size does). min-of-2 per level; one discarded full-size run
-    // first because JIT warm-up is JVM-global.
+    // size does).
     val loLevel = sys.env.getOrElse("SPARK_GRAFT_BENCH_LO", "2").toInt
     val hiLevel = sys.env.getOrElse("SPARK_GRAFT_BENCH_HI", "8").toInt
     val parts = sys.env.getOrElse("SPARK_GRAFT_PARTS", (2 * hiLevel).toString).toInt
@@ -146,71 +276,13 @@ object Bench {
     // narrow level a large GC-thread subsidy (8 GC threads serving 2
     // worker threads) that no real cluster executor gets — executors
     // size GC to their own cores. A child JVM also isolates heap/JIT
-    // state per level; each child still discards one full-size
-    // warm-up run before its measured reps.
-    def runLevel(level: Int, reps: Int): Seq[ReplayBench.PipelineStats] =
+    // state per level; each child discards one full-size warm-up run
+    // (JIT warm-up is JVM-global) before its measured reps.
+    def runLevel(level: Int, reps: Int): Seq[PipelineStats] =
       BenchLevel.spawn(level, parts, nUrls, reps)
-    def eff(lo: ReplayBench.PipelineStats, hi: ReplayBench.PipelineStats): Double =
-      (hi.throughput / lo.throughput) / (hiLevel.toDouble / loLevel)
-    // SYMMETRIC min-of-2 per level; the hi pair brackets the lo pair
-    // so BOX drift hits both levels, not just one. (Each child does
-    // its own discarded warm-up run — see BenchLevel.)
-    var hiRuns = runLevel(hiLevel, 1)
-    var loRuns = runLevel(loLevel, 2)
-    hiRuns ++= runLevel(hiLevel, 1)
-
-    // CONTENTION GATE (VERDICT r4 #1): every reading carries box-
-    // state evidence — the parallel CPU canary AND ext_cpu_cores
-    // (external busy cores over the whole rep window, /proc/stat
-    // minus own JVM). A reading breaching either bound was measured
-    // AGAINST TENANT LOAD, not against the engine — r4's driver
-    // artifact read 0.719 with inflated walls while the same HEAD
-    // read 0.916 quiet. The protocol now ACTS on the evidence:
-    // contended readings are never selected while a clean one
-    // exists; a level with no clean reading is re-run (bounded
-    // retries with spacing); if the box never quiets, the emission
-    // self-flags "contended":true so a sub-bar efficiency is never
-    // a bare number again.
-    // Quiet-box nominal MEASURED on this box class (bench/CanaryProbe,
-    // load 0.1: par8 0.148, par2 0.142; single-thread 0.278) — env-
-    // overridable on migration. The canary alone under-detects BURSTY
-    // load (its ~0.15 s window reads near-nominal while walls inflate
-    // 40%, r4), so each reading also carries ext_cpu_cores — box-wide
-    // busy CPU minus this JVM over the WHOLE rep window (/proc/stat) —
-    // and more than 1 tenant core average marks the reading contended.
-    val parNominal =
-      sys.env.getOrElse("SPARK_GRAFT_CANARY_PAR_NOMINAL", "0.15").toDouble
-    // Per-level mem-canary nominals "lo,hi" (the wall grows with
-    // threads even quiet — the socket saturates). Measured healthy-box
-    // best (CanaryProbe 2026-08-17: mem2 0.043, mem8 0.047 = 42.9
-    // GB/s aggregate; the burned window read 3.1 GB/s, ~10× over any
-    // sane gate).
-    val memNominals = sys.env.getOrElse("SPARK_GRAFT_CANARY_MEM_NOMINALS", "0.05,0.06")
-      .split(",").map(_.trim.toDouble)
-    val (memNomLo, memNomHi) = (memNominals(0), memNominals(1))
-    // SPARK-SHAPED canary nominals "lo,hi" — the gate's PRIMARY probe
-    // (BenchLevel.sparkCanary scaladoc: the register/streaming canaries
-    // provably missed a host neighbor trashing LLC/memory latency that
-    // retired the same replay instructions 1.6× slower). The fixed
-    // mini-job runs on each level's own session, so its wall shrinks
-    // with the level: nominals are per-level. Calibration (r5, no
-    // fully-quiet window was observable): two same-HEAD runs at
-    // different mild degradation levels give consistent quiet
-    // estimates via observed_canary / wall_inflation_vs_r4_quiet —
-    // lo: 7.25/1.13=6.4 and 8.36/1.23=6.8; hi: 2.20/1.29=1.70 and
-    // 2.41/1.47=1.64 (BENCH/r5_scaling_probe.json, r5_verify_bench
-    // .json vs run_r4_quiet_0916.json). The 1.3× gate then admits the
-    // 0.802-efficiency box state and flags the 0.769 one — the
-    // boundary sits where it should.
-    val sparkNominals = sys.env.getOrElse("SPARK_GRAFT_CANARY_SPARK_NOMINALS", "6.5,1.7")
-      .split(",").map(_.trim.toDouble)
-    val (sparkNomLo, sparkNomHi) = (sparkNominals(0), sparkNominals(1))
-    val extCpuMax = sys.env.getOrElse("SPARK_GRAFT_EXT_CPU_MAX", "1.0").toDouble
-    val contendedFactor = 1.3
     // names every breached probe with its reading vs bound, so the
     // retry log says WHY a reading was discounted
-    def breaches(memNominal: Double, sparkNominal: Double)(r: ReplayBench.PipelineStats)
-        : Seq[String] = {
+    def breaches(memNominal: Double, sparkNominal: Double)(r: PipelineStats): Seq[String] = {
       // spark-canary bound is FLOOR-RELATIVE: each level JVM measures
       // its own quiet floor (min-of-3 post-warm-up, emitted as the
       // spark_canary_floor pseudo-stage) — see canaryBound.
@@ -239,201 +311,153 @@ object Bench {
         r.stageSec.get(k).filter(_ > max).map(v => s"$k=${f3(v)}>${f3(max)}")
       }
     }
-    def clean(memNominal: Double, sparkNominal: Double)(r: ReplayBench.PipelineStats): Boolean =
-      breaches(memNominal, sparkNominal)(r).isEmpty
-    def cleanMin(runs: Seq[ReplayBench.PipelineStats], memNominal: Double,
-                 sparkNominal: Double): Option[ReplayBench.PipelineStats] = {
-      val c = runs.filter(clean(memNominal, sparkNominal))
-      if (c.isEmpty) None else Some(selectRep(c))
-    }
-    def cleanHi(runs: Seq[ReplayBench.PipelineStats]) = cleanMin(runs, memNomHi, sparkNomHi)
-    def cleanLo(runs: Seq[ReplayBench.PipelineStats]) = cleanMin(runs, memNomLo, sparkNomLo)
-    def logBreaches(tag: String, runs: Seq[ReplayBench.PipelineStats],
-                    memNominal: Double, sparkNominal: Double): Unit =
+    val loBreaches = breaches(memNomLo, sparkNomLo) _
+    val hiBreaches = breaches(memNomHi, sparkNomHi) _
+    def logBreaches(tag: String, runs: Seq[PipelineStats],
+                    b: PipelineStats => Seq[String]): Unit =
       runs.foreach { r =>
-        val b = breaches(memNominal, sparkNominal)(r)
-        if (b.nonEmpty) System.err.println(
-          s"[bench] $tag wall=${f3(r.wallSec)} CONTENDED: ${b.mkString(", ")}")
+        if (b(r).nonEmpty) System.err.println(
+          s"[bench] $tag wall=${f3(r.wallSec)} CONTENDED: ${b(r).mkString(", ")}")
       }
+    // SYMMETRIC min-of-2 per level; the hi pair brackets the lo pair
+    // so BOX drift hits both levels, not just one.
+    var hiRuns = runLevel(hiLevel, 1)
+    var loRuns = runLevel(loLevel, 2)
+    hiRuns ++= runLevel(hiLevel, 1)
+    // the one selection rule: each leg's selectRep among its clean
+    // readings, else among all of them — and then the pair is contended
+    def select(): Scaling = {
+      val (cLo, cHi) = (loRuns.filter(loBreaches(_).isEmpty), hiRuns.filter(hiBreaches(_).isEmpty))
+      Scaling(selectRep(if (cLo.isEmpty) loRuns else cLo),
+        selectRep(if (cHi.isEmpty) hiRuns else cHi),
+        loLevel, hiLevel, contended = cLo.isEmpty || cHi.isEmpty)
+    }
+
+    var sel = select()
     var retries = 0
-    while ((cleanHi(hiRuns).isEmpty || cleanLo(loRuns).isEmpty) && retries < 3) {
+    while (sel.contended && retries < 3) {
       retries += 1
-      logBreaches(s"local$loLevel", loRuns, memNomLo, sparkNomLo)
-      logBreaches(s"local$hiLevel", hiRuns, memNomHi, sparkNomHi)
+      logBreaches(s"local$loLevel", loRuns, loBreaches)
+      logBreaches(s"local$hiLevel", hiRuns, hiBreaches)
       System.err.println(s"[bench] contended canaries — retry $retries/3 after spacing")
       Thread.sleep(15000)
-      if (cleanHi(hiRuns).isEmpty) hiRuns ++= runLevel(hiLevel, 1)
-      if (cleanLo(loRuns).isEmpty) loRuns ++= runLevel(loLevel, 1)
+      if (!hiRuns.exists(hiBreaches(_).isEmpty)) hiRuns ++= runLevel(hiLevel, 1)
+      if (!loRuns.exists(loBreaches(_).isEmpty)) loRuns ++= runLevel(loLevel, 1)
+      sel = select()
     }
-    var contended = cleanHi(hiRuns).isEmpty || cleanLo(loRuns).isEmpty
-    var lo = cleanLo(loRuns).getOrElse(selectRep(loRuns))
-    var hi = cleanHi(hiRuns).getOrElse(selectRep(hiRuns))
-    var efficiency = eff(lo, hi)
-    // CROSS-LEVEL CPU CONSISTENCY (r7): the measured job's task set
-    // is identical at both levels, so the selected pair's task-CPU
-    // ratio hi/lo must sit near the quiet-box ~1.3× per-task
-    // inflation (BASELINE.md r3). Clean same-HEAD pairs measured
-    // 0.98–1.29; the r7_close3 burned pair read 1.52 and slipped the
-    // old 1.6 band, so the band is [1/1.5, 1.5]. A ratio outside it
-    // means one leg retired the same instructions materially slower —
-    // a mid-rep neighbor the bracketing canaries can miss entirely
-    // (r7: 3 of 5 full runs burned with every canary under gate).
-    // Same HEAD runs both legs, so unlike an absolute CPU nominal
-    // this check is invariant to engine changes. Re-run the guilty
-    // (higher-CPU) level, bounded; if it never converges, flag
-    // `cpu_inconsistent` so the efficiency is never a bare number.
-    def taskCpu(r: ReplayBench.PipelineStats): Option[Double] =
-      r.stageSec.get("task_cpu_sec")
-    def cpuRatio: Option[Double] =
-      for (a <- taskCpu(lo); b <- taskCpu(hi)) yield b / a
-    val cpuTol = 1.5
+    // A task-CPU ratio outside the band (see cpuTol): re-run the
+    // guilty (higher-CPU) level, bounded; if it never converges, the
+    // pair ships `cpu_inconsistent` so the efficiency is never a bare
+    // number.
     var cpuRetries = 0
-    while (cpuRatio.exists(r => r > cpuTol || r < 1 / cpuTol) && cpuRetries < 2) {
+    while (sel.cpuInconsistent && cpuRetries < 2) {
       cpuRetries += 1
-      val r = cpuRatio.get
+      val r = sel.cpuRatio.get
       System.err.println(f"[bench] task-CPU ratio hi/lo=$r%.2f outside " +
         f"[${1 / cpuTol}%.2f, $cpuTol%.2f] — one leg degraded mid-rep; " +
         s"re-running the ${if (r > 1) "hi" else "lo"} level ($cpuRetries/2)")
       Thread.sleep(15000)
       if (r > 1) hiRuns ++= runLevel(hiLevel, 1) else loRuns ++= runLevel(loLevel, 1)
-      contended = cleanHi(hiRuns).isEmpty || cleanLo(loRuns).isEmpty
-      lo = cleanLo(loRuns).getOrElse(selectRep(loRuns))
-      hi = cleanHi(hiRuns).getOrElse(selectRep(hiRuns))
-      efficiency = eff(lo, hi)
+      sel = select()
     }
-    // An efficiency outside the PLAUSIBILITY band (0.25, 1.02] is a
-    // measurement pathology, not a scaling result: > 1.02 is
-    // physically impossible; ≤ 0.25 means 4× the slots delivered
-    // under 1× the throughput — essentially serial execution, which
-    // this job's plan shape (uniform queue placement, partition-
-    // parallel stages, regression-gated) rules out; the one observed
-    // instance was a tenant-load wave swallowing a level (local[8]
-    // at 273 s vs 9.0 s quiet, round 4). The two tails are kept
-    // distinct (ADVICE r4): > 1.02 is always a pathology; ≤ 0.25 is
-    // treated as one ONLY when the canaries also show load —
-    // a quiet-box collapse is reported as the regression it is.
-    // Fail loudly: dump per-level stage times, re-measure once, flag
-    // `anomalous` (+kind) if it persists — never silently discarded.
-    def dumpStages(tag: String, runs: Seq[ReplayBench.PipelineStats]): Unit =
-      runs.foreach { r =>
-        System.err.println(f"[bench] $tag wall=${r.wallSec}%.2fs thr=${r.throughput}%.0f " +
-          r.stageSec.map { case (k, v) => f"$k=$v%.2fs" }.mkString(" "))
+    // An anomalous efficiency (Scaling.anomalous) fails loudly: dump
+    // per-level stage times, re-measure once, and ship the flag (+kind)
+    // if it persists — never silently discarded.
+    def dumpStages(): Unit =
+      Seq(loLevel -> loRuns, hiLevel -> hiRuns).foreach { case (level, runs) =>
+        runs.foreach { r =>
+          System.err.println(f"[bench] local$level wall=${r.wallSec}%.2fs " +
+            f"thr=${r.throughput}%.0f " +
+            r.stageSec.map { case (k, v) => f"$k=$v%.2fs" }.mkString(" "))
+        }
       }
-    def anomalousKind(e: Double): Option[String] =
-      if (e > 1.02) Some("high")
-      else if (e <= 0.25 && contended) Some("low")
-      else None
-    if (anomalousKind(efficiency).isDefined) {
-      System.err.println(f"[bench] ANOMALOUS efficiency=$efficiency%.3f " +
-        f"(lo ${lo.wallSec}%.2fs, hi ${hi.wallSec}%.2fs) — re-measuring both levels")
-      dumpStages(s"local$loLevel", loRuns); dumpStages(s"local$hiLevel", hiRuns)
+    if (sel.anomalous.isDefined) {
+      System.err.println(f"[bench] ANOMALOUS efficiency=${sel.efficiency}%.3f " +
+        f"(lo ${sel.lo.wallSec}%.2fs, hi ${sel.hi.wallSec}%.2fs) — re-measuring both levels")
+      dumpStages()
       hiRuns ++= runLevel(hiLevel, 1)
       loRuns ++= runLevel(loLevel, 2)
       hiRuns ++= runLevel(hiLevel, 1)
-      contended = cleanHi(hiRuns).isEmpty || cleanLo(loRuns).isEmpty
-      lo = cleanLo(loRuns).getOrElse(selectRep(loRuns))
-      hi = cleanHi(hiRuns).getOrElse(selectRep(hiRuns))
-      efficiency = eff(lo, hi)
-    }
-    // Computed AFTER the anomaly re-measure above: that block can
-    // reassign lo/hi, and the flag must describe the PAIR the
-    // artifact actually ships — a flag frozen before the re-measure
-    // could mark an out-of-band replacement pair consistent (or a
-    // replaced-away pair inconsistent).
-    val cpuInconsistent = cpuRatio.exists(r => r > cpuTol || r < 1 / cpuTol)
-    val anomalous = anomalousKind(efficiency)
-    if (anomalous.isDefined) {
-      System.err.println(f"[bench] efficiency STILL anomalous after re-measure: " +
-        f"$efficiency%.3f — emitting with \"anomalous\":true; do not trust this number")
-      dumpStages(s"local$loLevel", loRuns); dumpStages(s"local$hiLevel", hiRuns)
-    }
-
-    // ---- phase 2 (run second: keeps the scaling JVM fresh): queries on the sf corpus ------------
-    // Same warm-up discipline as the scaling phase: one full DISCARDED
-    // sweep first (session/codegen/JIT/parquet-footer warm-up is
-    // JVM-global — without it the first queries in map order absorb it
-    // and per-query attribution shifts whenever the map's iteration
-    // order changes), then min-of-2 measured sweeps per query.
-    // The sweep window is BRACKETED by spark-canary readings (same
-    // frozen mini-job as the scaling gate, on the query session), so a
-    // driver-artifact per-query regression is adjudicable in-artifact:
-    // canaries at the local[32] nominal → engine; inflated → box.
-    // ACTED ON, not just recorded (VERDICT r6 #2): a sweep whose
-    // bracket breaches 1.3× the query-session nominal is re-run
-    // (bounded, with spacing) — r6's driver artifact shipped a sweep
-    // under a [1.118, 2.133] bracket and its late-sweep walls were
-    // silently ~1.5× inflated. If no clean window appears the result
-    // self-flags "queries_contended":true and times fall back to the
-    // per-query min over every attempt (min is the contention-robust
-    // statistic; the flag says how far to trust it).
-    val (results, failedQueries, queryCanaries, queriesContended, queryAttempts, queryFloor) =
-      if (sys.env.contains("SPARK_GRAFT_BENCH_SKIP_QUERIES"))
-        (Map.empty[String, Double], Seq.empty[String], Seq.empty[Double], false, 0, 0.0)
-      else {
-        val s1 = session(cpus, cpus)
-        BenchLevel.sparkCanary(s1) // codegen warm-up
-        // Bracket readings are MIN-OF-3: the local[32] spark-canary
-        // distribution is heavy-tailed even on an idle box (CanaryProbe
-        // 2026-08-18, 10 warmed readings: 1.52..5.12 s) — a single
-        // reading gates on JVM/GC jitter, not box state, and burned
-        // all three r7 sweep attempts on a quiet box. Sustained
-        // contention still inflates all three readings of a bracket.
-        def canary3() = (1 to 3).map(_ => BenchLevel.sparkCanary(s1)).min
-        // the query session runs at local[cpus] like the hi scaling
-        // level, but on a different workload mix; its own quiet
-        // nominal (local[32] ≈ 1.44, BENCH/BASELINE.md) is observed
-        // tighter than the scaling hi-leg's 1.7
-        val queryNominal =
-          sys.env.getOrElse("SPARK_GRAFT_CANARY_QUERY_NOMINAL", "1.44").toDouble
-        // Same-session measured floor (rationale: canaryBound) —
-        // ships in the artifact as "query_canary_floor".
-        val queryFloor = canary3()
-        val gate = canaryBound(queryNominal, queryFloor) * contendedFactor
-        val attempts = Seq.newBuilder[(Map[String, Double], Seq[String], Seq[Double])]
-        var accepted: Option[(Map[String, Double], Seq[String], Seq[Double])] = None
-        var n = 0
-        while (n < 3 && accepted.isEmpty) {
-          if (n > 0) {
-            System.err.println(s"[bench] query sweep contended — retry $n/2 after spacing")
-            Thread.sleep(15000)
-          }
-          val cPre = canary3()
-          val (times, failed) = runQueries(s1, sfDir, SparkEntry.queries)
-          val cPost = canary3()
-          val rec = (times, failed, Seq(cPre, cPost))
-          attempts += rec
-          if (math.max(cPre, cPost) <= gate) accepted = Some(rec)
-          else System.err.println(
-            f"[bench] query canaries [${f3(cPre)}, ${f3(cPost)}] breach gate ${f3(gate)}")
-          n += 1
-        }
-        s1.stop()
-        val all = attempts.result()
-        accepted match {
-          case Some((times, failed, canaries)) => (times, failed, canaries, false, n, queryFloor)
-          case None =>
-            // no clean window: per-query min over all attempts, a name
-            // is failed only if it failed in EVERY attempt
-            val names = all.flatMap(_._1.keySet).toSet
-            val times = names.map(nm => nm -> all.flatMap(_._1.get(nm)).min).toMap
-            val failed = all.map(_._2.toSet).reduce(_ intersect _).toSeq.sorted
-            (times, failed, all.last._3, true, n, queryFloor)
-        }
+      sel = select()
+      if (sel.anomalous.isDefined) {
+        System.err.println(f"[bench] efficiency STILL anomalous after re-measure: " +
+          f"${sel.efficiency}%.3f — emitting with \"anomalous\":true; do not trust this number")
+        dumpStages()
       }
-
-    // Engine-free hardware truth for the artifact: the box's random-
-    // access latency class (BenchLevel.ptrChaseNs scaladoc). Lets a
-    // reader separate "spark-canary floor drifted with the host
-    // incarnation" (ptr chase nominal) from "neighbor trashing
-    // LLC/TLB" (ptr chase ~330 ns in r5's burned state).
-    val ptrChase = (1 to 3).map(_ => BenchLevel.ptrChaseNs()).min
-
-    emit(hi, lo, efficiency, anomalous, contended, cpuInconsistent, parNominal,
-      extCpuMax, results, failedQueries, queryCanaries, queriesContended,
-      queryAttempts, queryFloor, ptrChase, sfDir, loLevel, hiLevel)
+    }
+    sel
   }
 
-  /** Warmed min-of-2 query sweep (see the phase-2 note in main). A
+  /** The query sweep. Same warm-up discipline as the scaling phase:
+    * one full DISCARDED sweep first (session/codegen/JIT/parquet-footer
+    * warm-up is JVM-global — without it the first queries in map order
+    * absorb it and per-query attribution shifts whenever the map's
+    * iteration order changes), then min-of-2 measured sweeps per query.
+    * The sweep window is BRACKETED by spark-canary readings (same
+    * frozen mini-job as the scaling gate, on the query session), so a
+    * per-query regression in a round artifact is adjudicable in-artifact:
+    * canaries at the local[32] nominal → engine; inflated → box.
+    * ACTED ON, not just recorded (VERDICT r6 #2): a sweep whose
+    * bracket breaches 1.3× the query-session nominal is re-run
+    * (bounded, with spacing) — r6's round artifact shipped a sweep
+    * under a [1.118, 2.133] bracket and its late-sweep walls were
+    * silently ~1.5× inflated. If no clean window appears the result
+    * self-flags "queries_contended":true and times fall back to the
+    * per-query min over every attempt (min is the contention-robust
+    * statistic; the flag says how far to trust it).
+    */
+  private def measureQueries(cpus: Int, sfDir: String): Sweep = {
+    val s1 = session(cpus, cpus)
+    BenchLevel.sparkCanary(s1) // codegen warm-up
+    // Bracket readings are MIN-OF-3: the local[32] spark-canary
+    // distribution is heavy-tailed even on an idle box (`Probe canary`
+    // 2026-08-18, 10 warmed readings: 1.52..5.12 s) — a single
+    // reading gates on JVM/GC jitter, not box state, and burned
+    // all three r7 sweep attempts on a quiet box. Sustained
+    // contention still inflates all three readings of a bracket.
+    def canary3() = (1 to 3).map(_ => BenchLevel.sparkCanary(s1)).min
+    // the query session runs at local[cpus] like the hi scaling
+    // level, but on a different workload mix; its own quiet
+    // nominal (local[32] ≈ 1.44, BENCH/BASELINE.md) is observed
+    // tighter than the scaling hi-leg's 1.7
+    val queryNominal =
+      sys.env.getOrElse("SPARK_GRAFT_CANARY_QUERY_NOMINAL", "1.44").toDouble
+    // Same-session measured floor (rationale: canaryBound) —
+    // ships in the artifact as "query_canary_floor".
+    val floor = canary3()
+    val gate = canaryBound(queryNominal, floor) * contendedFactor
+    val attempts = Seq.newBuilder[Sweep]
+    var accepted: Option[Sweep] = None
+    var n = 0
+    while (n < 3 && accepted.isEmpty) {
+      if (n > 0) {
+        System.err.println(s"[bench] query sweep contended — retry $n/2 after spacing")
+        Thread.sleep(15000)
+      }
+      val cPre = canary3()
+      val (times, failed) = runQueries(s1, sfDir, SparkEntry.queries)
+      val cPost = canary3()
+      val rec = Sweep(times, failed, Seq(cPre, cPost), contended = false, n + 1, floor)
+      attempts += rec
+      if (math.max(cPre, cPost) <= gate) accepted = Some(rec)
+      else System.err.println(
+        f"[bench] query canaries [${f3(cPre)}, ${f3(cPost)}] breach gate ${f3(gate)}")
+      n += 1
+    }
+    s1.stop()
+    accepted.getOrElse {
+      // no clean window: per-query min over all attempts, a name
+      // is failed only if it failed in EVERY attempt
+      val all = attempts.result()
+      val names = all.flatMap(_.times.keySet).toSet
+      all.last.copy(
+        times = names.map(nm => nm -> all.flatMap(_.times.get(nm)).min).toMap,
+        failed = all.map(_.failed.toSet).reduce(_ intersect _).toSeq.sorted,
+        contended = true)
+    }
+  }
+
+  /** Warmed min-of-2 query sweep (see [[measureQueries]]). A
     * query that THROWS is reported by name in the `failed` list and
     * excluded from the timings — r4 recorded a broken query's
     * time-to-exception as if it were a reading (VERDICT r4 #6).
@@ -512,105 +536,74 @@ object Bench {
     * inflate (retire_ratio ≈ 1) and scheduling slack is what remains.
     * Raw `efficiency` stays the headline; these fields make the
     * single-box concurrency tax visible instead of leaving the gap
-    * unattributed.
+    * unattributed. Returns the four fields (slot_util_lo, slot_util_hi,
+    * cpu_retire_ratio, slot_efficiency), none when either leg lacks a
+    * task-CPU reading.
     */
-  /** (slot_util_lo, slot_util_hi, cpu_retire_ratio, slot_efficiency),
-    * None when either leg lacks a task-CPU reading.
-    */
-  private[graft] def decomposition(lo: ReplayBench.PipelineStats,
-                                   hi: ReplayBench.PipelineStats,
-                                   loLevel: Int, hiLevel: Int)
-      : Option[(Double, Double, Double, Double)] =
+  private[graft] def decompositionJson(lo: PipelineStats, hi: PipelineStats,
+                                       loLevel: Int, hiLevel: Int): ObjectNode = {
+    val o = Json.createObjectNode()
     for {
       cpuLo <- lo.stageSec.get("task_cpu_sec")
       cpuHi <- hi.stageSec.get("task_cpu_sec")
       if cpuLo > 0 && cpuHi > 0
-    } yield {
+    } {
       val uLo = cpuLo / (lo.wallSec * loLevel)
       val uHi = cpuHi / (hi.wallSec * hiLevel)
-      (uLo, uHi, cpuLo / cpuHi, uHi / uLo)
+      o.put("slot_util_lo", num(f3(uLo))).put("slot_util_hi", num(f3(uHi)))
+        .put("cpu_retire_ratio", num(f3(cpuLo / cpuHi)))
+        .put("slot_efficiency", num(f3(uHi / uLo)))
     }
+    o
+  }
 
-  private[graft] def decompositionJson(lo: ReplayBench.PipelineStats,
-                                       hi: ReplayBench.PipelineStats,
-                                       loLevel: Int, hiLevel: Int): String =
-    decomposition(lo, hi, loLevel, hiLevel).map { case (uLo, uHi, retire, slotEff) =>
-      s""","slot_util_lo":${f3(uLo)},"slot_util_hi":${f3(uHi)},""" +
-        s""""cpu_retire_ratio":${f3(retire)},""" +
-        s""""slot_efficiency":${f3(slotEff)}"""
-    }.getOrElse("")
-
-  private def emit(hi: ReplayBench.PipelineStats, lo: ReplayBench.PipelineStats,
-                   efficiency: Double, anomalous: Option[String], contended: Boolean,
-                   cpuInconsistent: Boolean,
-                   parNominal: Double, extCpuMax: Double,
-                   results: Map[String, Double],
-                   failedQueries: Seq[String], queryCanaries: Seq[Double],
-                   queriesContended: Boolean, queryAttempts: Int,
-                   queryFloor: Double, ptrChaseNs: Double,
-                   sfDir: String, loLevel: Int, hiLevel: Int): Unit = {
-    def statsJson(p: ReplayBench.PipelineStats): String = {
-      val stages = p.stageSec.map { case (k, v) => "\"" + k + "\":" + f3(v) }
-        .mkString("{", ",", "}")
-      s"""{"urls":${p.urlsSeen},"scheduled":${p.scheduled},"fetched":${p.fetched},""" +
-        s""""spans":${p.spans},"sec":${f3(p.wallSec)},""" +
-        s""""urls_per_sec":${f1(p.throughput)},"stages":$stages}"""
+  /** The artifact as (full, compact) JSON trees. */
+  private[graft] def emit(sc: Scaling, q: Sweep, ptrChaseNs: Double,
+                          sfDir: String): (ObjectNode, ObjectNode) = {
+    def stats(p: PipelineStats): ObjectNode = {
+      val o = Json.createObjectNode().put("urls", p.urlsSeen).put("scheduled", p.scheduled)
+        .put("fetched", p.fetched).put("spans", p.spans).put("sec", num(f3(p.wallSec)))
+        .put("urls_per_sec", num(f1(p.throughput)))
+      val stages = o.putObject("stages")
+      p.stageSec.foreach { case (k, v) => stages.put(k, num(f3(v))) }
+      o
     }
-
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + f3(v) }
-      .mkString("{", ",", "}")
-    val totalQ = results.values.sum
-    val failedJs = failedQueries.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val json =
-      s"""{"metric":"urls_scheduled_fetched_per_sec","value":${f1(hi.throughput)},""" +
-        s""""unit":"urls/sec","queries":$qs,"queries_total_sec":${f3(totalQ)},""" +
-        s""""failed":$failedJs,""" +
-        (if (queryCanaries.nonEmpty)
-          s""""query_spark_canary":[${queryCanaries.map(f3).mkString(",")}],"""
-         else "") +
-        (if (queryAttempts > 0)
-          s""""queries_contended":$queriesContended,"query_attempts":$queryAttempts,""" +
-            s""""query_canary_floor":${f3(queryFloor)},"""
-         else "") +
-        s""""ptr_chase_ns":${f1(ptrChaseNs)},""" +
-        s""""sf":"$sfDir",""" +
-        s""""anomalous":${anomalous.isDefined},""" +
-        anomalous.map(k => s""""anomalous_kind":"$k",""").getOrElse("") +
-        s""""contended":$contended,"cpu_inconsistent":$cpuInconsistent,""" +
-        s""""canary_par_nominal":${f3(parNominal)},""" +
-        s""""ext_cpu_max":${f3(extCpuMax)},""" +
-        s""""scaling":{"local$loLevel":${statsJson(lo)},"local$hiLevel":${statsJson(hi)},""" +
-        s""""n_lo":$loLevel,"n_hi":$hiLevel,"efficiency":${f3(efficiency)}""" +
-        decompositionJson(lo, hi, loLevel, hiLevel) + "}}"
-    // full JSON first, for humans and for the file artifact...
-    println(json)
-    // ...then the file artifact (sbt prefixes stdout with [info],
-    // which broke the round-1 driver parse — the file is unwrapped).
-    val outPath = java.nio.file.Paths.get(
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH/latest.json"))
-    Option(outPath.getParent).foreach(java.nio.file.Files.createDirectories(_))
-    java.nio.file.Files.writeString(outPath, json + "\n")
-    // ...and a COMPACT headline as the very LAST stdout line (VERDICT
-    // r5 #2): the driver's tail scrape clipped the ~2 KB full line at
-    // its head in round 5 ("parsed": null), so the machine-readable
-    // emission is a short line with no per-query map — small enough
-    // that any tail window keeps it whole. Same metric/value as the
-    // full JSON; the per-query detail lives above and in the file.
-    // slot_efficiency rides the headline too: raw efficiency moves
-    // with the lo leg's clock lottery on a shared box (same-HEAD 0.69
-    // vs 0.935), while the self-normalized slot ratio is stable — the
-    // adjudicator should not have to dig into scaling{} for it.
-    val slotEff = decomposition(lo, hi, loLevel, hiLevel)
-      .map(d => s""""slot_efficiency":${f3(d._4)},""").getOrElse("")
-    val compact =
-      s"""{"metric":"urls_scheduled_fetched_per_sec","value":${f1(hi.throughput)},""" +
-        s""""unit":"urls/sec","efficiency":${f3(efficiency)},""" + slotEff +
-        s""""contended":$contended,"cpu_inconsistent":$cpuInconsistent,""" +
-        s""""anomalous":${anomalous.isDefined},""" +
-        anomalous.map(k => s""""anomalous_kind":"$k",""").getOrElse("") +
-        s""""queries_total_sec":${f3(totalQ)},"failed_count":${failedQueries.size},""" +
-        s""""sf":"$sfDir"}"""
-    println(compact)
+    val full = Json.createObjectNode().put("metric", "urls_scheduled_fetched_per_sec")
+      .put("value", num(f1(sc.hi.throughput))).put("unit", "urls/sec")
+    val queries = full.putObject("queries")
+    q.times.foreach { case (k, v) => queries.put(k, num(f3(v))) }
+    full.put("queries_total_sec", num(f3(q.times.values.sum)))
+    q.failed.foldLeft(full.putArray("failed"))(_.add(_))
+    q.canaries.foldLeft(full.putArray("query_spark_canary"))((a, c) => a.add(num(f3(c))))
+    full.put("queries_contended", q.contended).put("query_attempts", q.attempts)
+      .put("query_canary_floor", num(f3(q.floor))).put("ptr_chase_ns", num(f1(ptrChaseNs)))
+      .put("sf", sfDir).put("anomalous", sc.anomalous.isDefined)
+    sc.anomalous.foreach(full.put("anomalous_kind", _))
+    full.put("contended", sc.contended).put("cpu_inconsistent", sc.cpuInconsistent)
+      .put("canary_par_nominal", num(f3(parNominal))).put("ext_cpu_max", num(f3(extCpuMax)))
+    val scaling = full.putObject("scaling")
+      .set[ObjectNode](s"local${sc.loLevel}", stats(sc.lo))
+      .set[ObjectNode](s"local${sc.hiLevel}", stats(sc.hi))
+      .put("n_lo", sc.loLevel).put("n_hi", sc.hiLevel).put("efficiency", num(f3(sc.efficiency)))
+      .setAll[ObjectNode](decompositionJson(sc.lo, sc.hi, sc.loLevel, sc.hiLevel))
+    // The COMPACT headline (VERDICT r5 #2): the round's tail scrape of stdout
+    // clipped the ~2 KB full line at its head in round 5 ("parsed":
+    // null), so the machine-readable emission is a short projection
+    // with no per-query map — small enough that any tail window keeps
+    // it whole. slot_efficiency rides the headline too: raw efficiency
+    // moves with the lo leg's clock lottery on a shared box (same-HEAD
+    // 0.69 vs 0.935), while the self-normalized slot ratio is stable —
+    // the adjudicator should not have to dig into scaling{} for it.
+    val compact = Json.createObjectNode()
+    def project(from: JsonNode, keys: String*): Unit =
+      keys.foreach(k => Option(from.get(k)).foreach(compact.set[ObjectNode](k, _)))
+    project(full, "metric", "value", "unit")
+    project(scaling, "efficiency", "slot_efficiency")
+    project(full, "contended", "cpu_inconsistent", "anomalous", "anomalous_kind",
+      "queries_total_sec")
+    compact.put("failed_count", q.failed.size)
+    project(full, "sf")
+    (full, compact)
   }
 }
 
@@ -648,8 +641,15 @@ object BenchLevel {
       // way every other canary here already does.
       val canaryChase = (1 to 3).map(_ => ptrChaseNs()).min
       val canarySpark = sparkCanary(s)
-      val cpuL = new TaskCpuListener
-      s.sparkContext.addSparkListener(cpuL)
+      // Task CPU and run time summed over the rep's stages. The task
+      // set is IDENTICAL at both levels (fixed input, fixed
+      // partitioning), so the CPU sum is level-invariant up to the
+      // measured ~1.3× per-task inflation at 8 concurrent tasks
+      // (BASELINE.md r3) — in-the-act contention evidence: a host
+      // neighbor slowing instruction retirement inflates CPU (r5's
+      // burned hi leg: task CPU +60%), while guest-invisible core
+      // starvation inflates run/wall with CPU flat.
+      val tasks = StageMetrics.start(s.sparkContext)
       val b0 = procBusySec(); val st0 = procStealSec()
       val (gcSec0, gcCount0) = gcStats()
       val o0 = ownCpuSec(); val t0 = System.nanoTime()
@@ -678,24 +678,7 @@ object BenchLevel {
       val (gcSec1, gcCount1) = gcStats()
       val gcSec = math.max(0.0, gcSec1 - gcSec0)
       val gcCount = math.max(0L, gcCount1 - gcCount0).toDouble
-      // drain the async listener bus before reading the CPU sums
-      // (wall was already captured — the sleep is off the clock)
-      // Positive listener-bus drain, not a fixed sleep: poll until the
-      // task sums are stable for two consecutive 100 ms windows (max
-      // 3 s). A fixed sleep undercounts task CPU exactly when the box
-      // is loud (bus lag grows with contention) — and an undercounted
-      // burned rep would win the min-task-CPU selection, inverting
-      // the selector's purpose.
-      locally {
-        var stable = 0; var waited = 0
-        var last = (cpuL.cpuSec, cpuL.runSec)
-        while (stable < 2 && waited < 3000) {
-          Thread.sleep(100); waited += 100
-          val cur = (cpuL.cpuSec, cpuL.runSec)
-          if (cur == last) stable += 1 else { stable = 0; last = cur }
-        }
-      }
-      s.sparkContext.removeSparkListener(cpuL)
+      val window = tasks.stop() // waits for the listener bus, off the clock
       // POST bracket (r7: a wave arriving MID-REP inflated the wall
       // while the pre canaries read clean — 3 of 5 full runs burned
       // with no retry fired). cpu/mem post readings are gated with
@@ -716,7 +699,7 @@ object BenchLevel {
         ("mem_canary_par" -> canaryMem) + ("spark_canary" -> canarySpark) +
         ("spark_canary_floor" -> sparkFloor) + ("ptr_chase_ns" -> canaryChase) +
         ("ext_cpu_cores" -> extCores) + ("steal_cores" -> stealCores) +
-        ("task_cpu_sec" -> cpuL.cpuSec) + ("task_run_sec" -> cpuL.runSec) +
+        ("task_cpu_sec" -> window.cpuSec) + ("task_run_sec" -> window.runSec) +
         ("cpu_canary_par_post" -> postPar) + ("mem_canary_par_post" -> postMem) +
         ("ptr_chase_ns_post" -> postChase) + ("spark_canary_post" -> postSpark) +
         ("gc_sec" -> gcSec) + ("gc_count" -> gcCount))
@@ -726,31 +709,6 @@ object BenchLevel {
         s"fetched=${p.fetched} spans=${p.spans} wall=${Bench.f3(p.wallSec)} $stages")
     }
     s.stop()
-  }
-
-  /** Sums task CPU and run time over every Spark stage completed
-    * while registered. The measured job's task set is IDENTICAL at
-    * both scaling levels (fixed input, fixed partitioning), so its
-    * task-CPU sum is level-invariant up to the measured ~1.3× per-
-    * task inflation at 8 concurrent tasks (memory contention,
-    * BASELINE.md r3) — which makes a rep's CPU sum in-the-act
-    * contention evidence: a host neighbor slowing instruction
-    * retirement inflates CPU (r5's burned hi leg: task CPU +60%),
-    * while guest-invisible core starvation inflates run/wall with
-    * CPU flat. Readings ride the artifact as `task_cpu_sec` /
-    * `task_run_sec`; the parent cross-checks the selected pair.
-    */
-  private[graft] final class TaskCpuListener
-      extends org.apache.spark.scheduler.SparkListener {
-    private val cpuNs = new java.util.concurrent.atomic.AtomicLong()
-    private val runMs = new java.util.concurrent.atomic.AtomicLong()
-    override def onStageCompleted(
-        sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-      cpuNs.addAndGet(sc.stageInfo.taskMetrics.executorCpuTime)
-      runMs.addAndGet(sc.stageInfo.taskMetrics.executorRunTime)
-    }
-    def cpuSec: Double = cpuNs.get / 1e9
-    def runSec: Double = runMs.get / 1e3
   }
 
   /** Box-wide busy CPU seconds since boot (`/proc/stat` cpu line:

@@ -106,9 +106,9 @@ object ReplayBench {
     val first = SeenFilter.firstWinsAgg(kept, Seq("seen_key"), "arrival_seq")
 
     // bloom split + exact confirm (A6 + J1) — SIZE-ADAPTIVE probe,
-    // the same strategy CrawlJob runs (Config.sketchBroadcastMaxBytes
-    // analog): this bench's sketch state (bloomP × 32 KB = 2 MB at the
-    // default) is far under the 8 MB broadcast threshold, so the
+    // the same strategy and threshold CrawlJob runs
+    // (Config.sketchBroadcastMaxBytes): this bench's sketch state
+    // (bloomP × 32 KB = 2 MB at the default) is far under it, so the
     // production path is collect+broadcast (narrow, zero shuffles);
     // the distributed cogroup engages above it (the 10^10 design point
     // where the state is ~12 GB). The cogroup costs a full-width
@@ -118,7 +118,7 @@ object ReplayBench {
     // the persist the probe shuffle (and everything upstream) runs twice
     val sketchStateBytes = bloomP.toLong * (params.numBits / 8)
     val probed =
-      (if (sketchStateBytes <= (8L << 20))
+      (if (sketchStateBytes <= graft.crawl.CrawlJob.Config().sketchBroadcastMaxBytes)
         SeenFilter.probeBloom(first, "seen_key", bloomP, params,
           SeenFilter.collectSketches(sketchDf))
       else

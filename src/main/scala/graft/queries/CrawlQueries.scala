@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
   * queries derive announcement-shaped inputs from the generic tables
   * with engine-portable expressions (md5 / ascii / modulo — identical
   * in Spark and DuckDB), then run the REAL library operators
-  * (Report.postprocessStage1, SeenFilter.firstWins,
+  * (Report.postprocessStage1, SeenFilter.firstWinsAgg,
   * Scheduler.assignVirtualTicks, Report.widen) on the Spark side and
   * a pure-SQL restatement on the oracle side. The stateful scheduler
   * is thereby checked against its closed form; the end-to-end frontier
@@ -46,6 +46,23 @@ object CrawlQueries {
       concat(lit("/final/"), m, lit(".pdf")).as("pdf_url"))
   }
 
+  /** The dup-heavy URL stream behind crawl_seen_firstwins and the two
+    * politeness entries — events → (event_id, url, host), 300 users ×
+    * 20 paths over 5 hosts — reduced to each URL's first arrival. The
+    * arrival ordinal `event_id` is unique in every corpus, so the
+    * aggregate [[SeenFilter.firstWinsAgg]] keeps exactly the rows a
+    * `row_number` window over it would (the oracles' formulation).
+    */
+  private def firstUrls(s: SparkSession, d: String): DataFrame = {
+    val k = get_json_object(col("props"), "$.k").try_cast("long")
+    val user = col("user_id") % 300
+    val stream = Tables.load(s, d, "events").select(
+      col("event_id"),
+      concat(lit("/doc/"), user.cast("string"), lit("/"), (k % 20).cast("string")).as("url"),
+      concat(lit("h"), (user % 5).cast("string")).as("host"))
+    SeenFilter.firstWinsAgg(stream, Seq("url"), "event_id")
+  }
+
   val entries: Map[String, QFn] = Map(
     // Stage-1 postprocess: F1+F2 filters, code canon, A2+A3 windows.
     // PUSHDOWN BARRIER on the derived title (guide ~ "mark expensive
@@ -65,28 +82,14 @@ object CrawlQueries {
     }),
 
     // A1: first-wins URL-seen semantics on a dup-heavy stream.
-    "crawl_seen_firstwins" -> ((s, d) => {
-      val k = get_json_object(col("props"), "$.k").try_cast("long")
-      val stream = Tables.load(s, d, "events").select(
-        col("event_id"),
-        concat(lit("/doc/"), (col("user_id") % 300).cast("string"),
-          lit("/"), (k % 20).cast("string")).as("url"))
-      SeenFilter.firstWins(stream, Seq("url"), "event_id")
-        .select(col("url"), col("event_id").as("first_seen"))
-    }),
+    "crawl_seen_firstwins" -> ((s, d) =>
+      firstUrls(s, d).select(col("url"), col("event_id").as("first_seen"))),
 
     // ST1: token-bucket politeness plan — the stateful
     // flatMapGroups scheduler vs its closed-form window oracle.
     "crawl_politeness_plan" -> ((s, d) => {
       import s.implicits._
-      val k = get_json_object(col("props"), "$.k").try_cast("long")
-      val stream = Tables.load(s, d, "events").select(
-        col("event_id"),
-        concat(lit("/doc/"), (col("user_id") % 300).cast("string"),
-          lit("/"), (k % 20).cast("string")).as("url"),
-        concat(lit("h"), ((col("user_id") % 300) % 5).cast("string")).as("host"))
-      val kept = SeenFilter.firstWins(stream, Seq("url"), "event_id")
-      val in = kept.select(col("url"), col("host"),
+      val in = firstUrls(s, d).select(col("url"), col("host"),
         col("event_id").as("priority"), lit("").as("tiebreak")).as[Scheduler.SchedIn]
       // saltCount=1 so the closed form is the pure per-host queue.
       Scheduler.assignVirtualTicks(in, saltCount = 1, tokensPerTick = 3, tickMs = 300)
@@ -100,14 +103,7 @@ object CrawlQueries {
     // the salt assignment and the per-(host,salt) queue rank exactly.
     "crawl_politeness_salted" -> ((s, d) => {
       import s.implicits._
-      val k = get_json_object(col("props"), "$.k").try_cast("long")
-      val stream = Tables.load(s, d, "events").select(
-        col("event_id"),
-        concat(lit("/doc/"), (col("user_id") % 300).cast("string"),
-          lit("/"), (k % 20).cast("string")).as("url"),
-        concat(lit("h"), ((col("user_id") % 300) % 5).cast("string")).as("host"))
-      val kept = SeenFilter.firstWins(stream, Seq("url"), "event_id")
-      val in = kept.select(col("url"), col("host"),
+      val in = firstUrls(s, d).select(col("url"), col("host"),
         col("event_id").as("priority"), lit("").as("tiebreak")).as[Scheduler.SchedIn]
       Scheduler.assignVirtualTicks(in, saltCount = 4, tokensPerTick = 3, tickMs = 300)
         .toDF()

@@ -9,10 +9,12 @@ import org.apache.spark.sql.functions._
 /** Stage-1 postprocess and stage-2 wide-report operators.
   *
   * Every keep-first semantic from the reference (pandas implicit row
-  * order) is a deterministic `row_number` window over an explicit
-  * arrival ordinal — Spark's dropDuplicates gives no ordering
-  * guarantee, so windows are the only faithful formulation
-  * (SURVEY.md §2.4-§2.5).
+  * order) is made deterministic by an explicit arrival ordinal —
+  * Spark's dropDuplicates gives no ordering guarantee (SURVEY.md
+  * §2.4-§2.5). Keep-first on the unique ordinal alone is the hash
+  * aggregate `SeenFilter.firstWinsAgg`; orders with no single min_by
+  * key (A3's date-then-arrival, A4's first-positive) are `row_number`
+  * windows.
   */
 object Report {
 

@@ -1,7 +1,6 @@
 package graft.seen
 
 import org.apache.spark.sql.{Column, DataFrame, Encoders}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** URL-seen filtering: the frontier's dedup identity (SURVEY.md §2.4
@@ -23,24 +22,16 @@ import org.apache.spark.sql.functions._
   */
 object SeenFilter {
 
-  /** A1/A2: first occurrence wins, deterministically — a row_number
-    * window over the explicit arrival ordinal (pandas keep='first'
-    * has no partition-stable Spark analog without it).
-    */
-  def firstWins(df: DataFrame, keyCols: Seq[String], seqCol: String): DataFrame = {
-    val w = Window.partitionBy(keyCols.map(col): _*).orderBy(col(seqCol).asc)
-    df.withColumn("__rn", row_number().over(w)).where(col("__rn") === 1).drop("__rn")
-  }
-
-  /** [[firstWins]] as a hash aggregate: min_by(row, seq) per key.
-    * Same semantics when `seqCol` is unique per key (the crawl's
-    * arrival ordinal is), but with MAP-SIDE PARTIAL AGGREGATION —
-    * each partition pre-collapses its duplicates before the
-    * exchange, where the window variant must shuffle+sort every raw
-    * row. The scalable choice for dup-heavy frontiers.
+  /** A1/A2: first occurrence wins, deterministically — per key, the
+    * row with the least `seqCol`, as one aggregate (min_by(row, seq))
+    * with MAP-SIDE PARTIAL AGGREGATION: each partition pre-collapses
+    * its duplicates before the exchange. `seqCol` must be unique per
+    * key (the crawl's arrival ordinal is); then this keeps exactly the
+    * rows of a `row_number` window over it. The struct buffer plans as
+    * a SortAggregate, not a hash aggregate.
     */
   def firstWinsAgg(df: DataFrame, keyCols: Seq[String], seqCol: String): DataFrame = {
-    val others = df.columns.filterNot(keyCols.contains)
+    val others = df.columns.toSeq.filterNot(keyCols.contains)
     val packed = df.groupBy(keyCols.map(col): _*)
       .agg(min_by(struct(others.map(col): _*), col(seqCol)).as("__row"))
     packed.select(keyCols.map(col) ++ others.map(c => col(s"__row.$c").as(c)): _*)

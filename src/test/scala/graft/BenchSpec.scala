@@ -1,6 +1,12 @@
 package graft
 
+import com.fasterxml.jackson.databind.JsonNode
+import graft.bench.ReplayBench.PipelineStats
+import graft.bench.StageMetrics
+import graft.snapshot.SnapshotLog.Json
 import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import scala.jdk.CollectionConverters._
 
 /** Bench protocol units (the scaling phase itself is exercised by the
   * per-round driver run — here the testable seams).
@@ -23,18 +29,25 @@ class BenchSpec extends SparkSpec {
     assert(times("ok") > 0.0)
   }
 
-  test("TaskCpuListener sums task CPU and run time across stages") {
-    val l = new BenchLevel.TaskCpuListener
-    spark.sparkContext.addSparkListener(l)
-    try {
-      import org.apache.spark.sql.functions._
-      // a job with a shuffle, so at least two stages complete
-      spark.range(1L << 18).groupBy(pmod(col("id"), lit(64))).count()
-        .write.format("noop").mode("overwrite").save()
-      Thread.sleep(500) // drain the async listener bus
-      assert(l.cpuSec > 0.0, s"cpuSec=${l.cpuSec}")
-      assert(l.runSec >= l.cpuSec / 64, s"runSec=${l.runSec} cpuSec=${l.cpuSec}")
-    } finally spark.sparkContext.removeSparkListener(l)
+  test("StageMetrics: an exact window sums task CPU, run time and shuffle bytes") {
+    import org.apache.spark.sql.functions._
+    val sc = spark.sparkContext
+    // a job with a shuffle, so at least two stages complete
+    def job(): Unit = spark.range(1L << 18).groupBy(pmod(col("id"), lit(64))).count()
+      .write.format("noop").mode("overwrite").save()
+    job()
+    // stages that completed before start are never counted
+    assert(StageMetrics.start(sc).stop().stages.isEmpty)
+    val m = StageMetrics.start(sc)
+    job()
+    val w = m.stop()
+    assert(w.stages.size >= 2, w.toString)
+    assert(w.cpuSec > 0.0, s"cpuSec=${w.cpuSec}")
+    assert(w.runSec >= w.cpuSec / 64, s"runSec=${w.runSec} cpuSec=${w.cpuSec}")
+    assert(w.shuffleBytes > 0, w.toString)
+    // nor are stages that complete after stop
+    job()
+    assert(m.stop() == w)
   }
 
   test("decompositionJson: identity eff = retire_ratio x slot_util ratio") {
@@ -44,16 +57,15 @@ class BenchSpec extends SparkSpec {
     // wall, 67 CPU — the r7 cpuprobe reading
     val lo = stats(26.005, 52.014)
     val hi = stats(9.378, 67.056)
-    val js = Bench.decompositionJson(lo, hi, 2, 8)
-    val kv = js.drop(1).split(",").map(_.split(":")).map(a =>
-      a(0).replace("\"", "") -> a(1).toDouble).toMap
+    val kv = Bench.decompositionJson(lo, hi, 2, 8).properties.asScala
+      .map(e => e.getKey -> e.getValue.asDouble).toMap
     val rawEff = (lo.wallSec * 2) / (hi.wallSec * 8)
     val recomposed = kv("cpu_retire_ratio") * kv("slot_util_hi") / kv("slot_util_lo")
     assert(math.abs(recomposed - rawEff) < 0.01, s"$recomposed vs $rawEff")
     assert(kv("slot_util_lo") > 0.95 && kv("slot_util_lo") <= 1.05)
     assert(kv("slot_util_hi") > 0.85 && kv("slot_util_hi") < 0.95)
     // missing task CPU on either side: no decomposition fields
-    assert(Bench.decompositionJson(stats(1, 0), hi, 2, 8) == "")
+    assert(Bench.decompositionJson(stats(1, 0), hi, 2, 8).isEmpty)
   }
 
   test("selectRep: min task-CPU wins over min wall; wall tie-breaks; CPU-less reps sort last") {
@@ -82,5 +94,67 @@ class BenchSpec extends SparkSpec {
     assert(Bench.canaryBound(1.44, 1.52) == 1.52)
     // a floor taken on a loud box can't blind the gate: capped at 2x
     assert(Bench.canaryBound(1.44, 9.0) == 2.88)
+  }
+
+  // the r7 cpuprobe pair of the decomposition test, plus one phase mark
+  private def leg(wall: Double, cpu: Double) =
+    PipelineStats(100, 50, 40, 10, wall, Map("task_cpu_sec" -> cpu, "state_setup" -> 0.5))
+  private val sweep = Bench.Sweep(Map("q1" -> 1.25, "q2" -> 0.5), Seq("bad"), Seq(1.4, 1.5),
+    contended = false, attempts = 1, floor = 1.3)
+  private def keys(n: JsonNode): Seq[String] = n.fieldNames.asScala.toSeq
+
+  test("emit: full and compact artifacts keep their keys, nesting and digits") {
+    val (full, compact) = Bench.emit(
+      Bench.Scaling(leg(26.005, 52.014), leg(9.378, 67.056), 2, 8, contended = false),
+      sweep, 200.0, "/x/sf")
+    // both lines byte-for-byte as the string-built emitter wrote them
+    // for these inputs
+    assert(Json.writeValueAsString(full) ==
+      """{"metric":"urls_scheduled_fetched_per_sec","value":9.6,"unit":"urls/sec",""" +
+      """"queries":{"q1":1.250,"q2":0.500},"queries_total_sec":1.750,"failed":["bad"],""" +
+      """"query_spark_canary":[1.400,1.500],"queries_contended":false,"query_attempts":1,""" +
+      """"query_canary_floor":1.300,"ptr_chase_ns":200.0,"sf":"/x/sf","anomalous":false,""" +
+      """"contended":false,"cpu_inconsistent":false,"canary_par_nominal":0.150,""" +
+      """"ext_cpu_max":1.000,"scaling":{"local2":{"urls":100,"scheduled":50,"fetched":40,""" +
+      """"spans":10,"sec":26.005,"urls_per_sec":3.5,"stages":{"task_cpu_sec":52.014,""" +
+      """"state_setup":0.500}},"local8":{"urls":100,"scheduled":50,"fetched":40,"spans":10,""" +
+      """"sec":9.378,"urls_per_sec":9.6,"stages":{"task_cpu_sec":67.056,"state_setup":0.500}},""" +
+      """"n_lo":2,"n_hi":8,"efficiency":0.693,"slot_util_lo":1.000,"slot_util_hi":0.894,""" +
+      """"cpu_retire_ratio":0.776,"slot_efficiency":0.894}}""")
+    assert(Json.writeValueAsString(compact) ==
+      """{"metric":"urls_scheduled_fetched_per_sec","value":9.6,"unit":"urls/sec",""" +
+      """"efficiency":0.693,"slot_efficiency":0.894,"contended":false,"cpu_inconsistent":false,""" +
+      """"anomalous":false,"queries_total_sec":1.750,"failed_count":1,"sf":"/x/sf"}""")
+  }
+
+  test("emit: an anomalous, contended, CPU-inconsistent pair adds only anomalous_kind") {
+    // hi retires the task set in ~2x lo's CPU at 13x lo's rate
+    val (full, compact) = Bench.emit(
+      Bench.Scaling(leg(26.005, 52.014), leg(2.0, 100.0), 2, 8, contended = true),
+      sweep, 200.0, "/x/sf")
+    assert(keys(full) == Seq("metric", "value", "unit", "queries", "queries_total_sec",
+      "failed", "query_spark_canary", "queries_contended", "query_attempts",
+      "query_canary_floor", "ptr_chase_ns", "sf", "anomalous", "anomalous_kind", "contended",
+      "cpu_inconsistent", "canary_par_nominal", "ext_cpu_max", "scaling"))
+    assert(keys(full.get("scaling")) == Seq("local2", "local8", "n_lo", "n_hi", "efficiency",
+      "slot_util_lo", "slot_util_hi", "cpu_retire_ratio", "slot_efficiency"))
+    Seq("local2", "local8").foreach(l => assert(keys(full.get("scaling").get(l)) ==
+      Seq("urls", "scheduled", "fetched", "spans", "sec", "urls_per_sec", "stages")))
+    assert(keys(compact) == Seq("metric", "value", "unit", "efficiency", "slot_efficiency",
+      "contended", "cpu_inconsistent", "anomalous", "anomalous_kind", "queries_total_sec",
+      "failed_count", "sf"))
+    Seq(full, compact).foreach { n =>
+      assert(n.get("anomalous_kind").asText == "high")
+      assert(n.get("contended").asBoolean && n.get("cpu_inconsistent").asBoolean)
+    }
+  }
+
+  test("emit: an sfDir with quotes and backslashes stays valid JSON") {
+    val sf = "/x/\"q\"\\sf"
+    val (full, compact) = Bench.emit(
+      Bench.Scaling(leg(26.005, 52.014), leg(9.378, 67.056), 2, 8, contended = false),
+      sweep, 200.0, sf)
+    Seq(full, compact).foreach(n =>
+      assert(Json.readTree(Json.writeValueAsString(n)).get("sf").asText == sf))
   }
 }

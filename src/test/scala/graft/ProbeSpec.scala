@@ -5,9 +5,12 @@ import graft.bench.Probe
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
-/** `graft.bench.Probe`'s three modes, each run once on sf0.001 against
-  * one cheap query on the shared session, plus the guard that keeps
+/** `graft.bench.Probe`'s modes, each run once against one cheap query
+  * on the shared session (`time`, `plan` and `stages` on sf0.001,
+  * `scale` on its own tiny generated corpus), plus the guard that keeps
   * single-use mains from accumulating under `graft.bench` undocumented.
+  * `canary` is not run here: it allocates ~0.8 GB of probe buffers and
+  * builds and stops sessions of its own.
   */
 class ProbeSpec extends SparkSpec {
 
@@ -42,6 +45,22 @@ class ProbeSpec extends SparkSpec {
     val lines = captured(Probe.stages(spark, q, d))
     assert(lines.exists(_.startsWith("[probe] stage id=")), lines.mkString("\n"))
     assert(lines.exists(_.startsWith(s"[probe] stages $q warm_wall=")), lines.mkString("\n"))
+  }
+
+  test("Probe scale: one tiny run per count, one parseable JSON artifact") {
+    val out = Files.createTempDirectory("probe-scale").resolve("scale.json")
+    val lines = captured(Probe.scale(spark, Seq(200L, 400L), out.toString, Seq("dedup_exact")))
+    assert(lines.count(_.startsWith("[curatescale] n=")) == 2, lines.mkString("\n"))
+    val js = graft.snapshot.SnapshotLog.Json.readTree(Files.readString(out))
+    assert(js.get("probe").asText == "curate_scale")
+    assert(js.get("n_lo").asLong == 200 && js.get("n_hi").asLong == 400, js.toString)
+    assert(js.get("spark_canary").size == 2, js.toString)
+    val q = js.get("queries").get("dedup_exact")
+    assert(q.fieldNames.asScala.toSeq == Seq("sec_lo", "sec_hi", "wall_ratio", "rows_lo",
+      "rows_hi", "rows_ratio", "shuffle_mb_lo", "shuffle_mb_hi", "shuffle_ratio",
+      "linear_would_be"), js.toString)
+    assert(q.get("rows_hi").asLong > q.get("rows_lo").asLong, js.toString)
+    assert(q.get("linear_would_be").asDouble == 2.0, js.toString)
   }
 
   test("every main under graft.bench is named in README") {

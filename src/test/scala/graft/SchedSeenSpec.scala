@@ -111,7 +111,7 @@ class SchedSeenSpec extends SparkSpec {
     val s = spark; import s.implicits._
     val rows = (1 to 400).map(i => (s"k${i % 40}", i.toLong))
     val df = rows.toDF("k", "seq").repartition(7) // scramble physical order
-    val got = SeenFilter.firstWins(df, Seq("k"), "seq")
+    val got = SeenFilter.firstWinsAgg(df, Seq("k"), "seq")
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     val want = rows.groupBy(_._1).view.mapValues(_.map(_._2).min).toMap
     assert(got == want)

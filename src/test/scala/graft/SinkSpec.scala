@@ -49,7 +49,7 @@ class SinkSpec extends SparkSpec {
     val pw = Report.presentWide(wide)
     assert(pw.columns.toSeq == Seq("证券代码", "公司名称", "报告名称", "报告日期",
       "存货", "无形资产", "开发支出", "是否包含数据资产", "PDF链接"))
-    assert(pw.select("是否包含数据资产").head.getInt(0) == 1)
+    assert(pw.select("是否包含数据资产").head().getInt(0) == 1)
     // missing columns are dropped, order preserved (reference keeps
     // only existing final_columns)
     val partial = Seq(("d1", "7", false)).toDF("doc_id", "存货", "has_data_resource")
@@ -64,7 +64,7 @@ class SinkSpec extends SparkSpec {
     val got = Seq((bad, "2024年年度报告", "2024-04-30"))
       .toDF("company", "title", "report_date")
       .select(Canon.pdfFileName(col("company"), col("title"), col("report_date")))
-      .head.getString(0)
+      .head().getString(0)
     assert(got == Canon.sanitizeFilenameScala(s"$bad：2024年年度报告_[2024-04-30]") + ".pdf")
     assert(got.endsWith(".pdf") && !got.exists("\\/:*?\"<>|".contains(_)))
   }

@@ -158,13 +158,13 @@ class ResumeSpec extends SparkSpec {
     // INSERT INTO = delta commit through the atomic manifest protocol
     spark.sql("INSERT INTO graftcat.t VALUES ('b', 2)")
     assert(log.latest().get.id == s0.id + 1)
-    assert(spark.sql("SELECT count(*) FROM graftcat.t").head.getLong(0) == 2)
+    assert(spark.sql("SELECT count(*) FROM graftcat.t").head().getLong(0) == 2)
     // INSERT into a not-yet-existing table creates it (first commit)
     spark.sql("INSERT INTO graftcat.fresh VALUES (7)")
-    assert(spark.sql("SELECT * FROM graftcat.fresh").head.getInt(0) == 7)
+    assert(spark.sql("SELECT * FROM graftcat.fresh").head().getInt(0) == 7)
     // time travel by snapshot id
     assert(spark.sql(s"SELECT count(*) FROM graftcat.t VERSION AS OF ${s0.id}")
-      .head.getLong(0) == 1)
+      .head().getLong(0) == 1)
     // SHOW TABLES sees the committed tables
     val shown = spark.sql("SHOW TABLES IN graftcat").collect().map(_.getString(1)).toSet
     assert(shown.contains("t") && shown.contains("fresh"), shown.toString)
