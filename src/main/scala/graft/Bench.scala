@@ -175,6 +175,12 @@ object Bench {
   private val Array(sparkNomLo, sparkNomHi) =
     sys.env.getOrElse("SPARK_GRAFT_CANARY_SPARK_NOMINALS", "6.5,1.7")
       .split(",").map(_.trim.toDouble)
+  // The query session runs at local[cpus] like the hi scaling
+  // level, but on a different workload mix; its own quiet nominal
+  // (local[32] ≈ 1.44, BENCH/BASELINE.md) is observed tighter than
+  // the scaling hi-leg's 1.7.
+  private val queryNominal =
+    sys.env.getOrElse("SPARK_GRAFT_CANARY_QUERY_NOMINAL", "1.44").toDouble
   private val extCpuMax = sys.env.getOrElse("SPARK_GRAFT_EXT_CPU_MAX", "1.0").toDouble
   private val contendedFactor = 1.3
   // CROSS-LEVEL CPU CONSISTENCY (r7): the measured job's task set
@@ -416,12 +422,6 @@ object Bench {
     // all three r7 sweep attempts on a quiet box. Sustained
     // contention still inflates all three readings of a bracket.
     def canary3() = (1 to 3).map(_ => BenchLevel.sparkCanary(s1)).min
-    // the query session runs at local[cpus] like the hi scaling
-    // level, but on a different workload mix; its own quiet
-    // nominal (local[32] ≈ 1.44, BENCH/BASELINE.md) is observed
-    // tighter than the scaling hi-leg's 1.7
-    val queryNominal =
-      sys.env.getOrElse("SPARK_GRAFT_CANARY_QUERY_NOMINAL", "1.44").toDouble
     // Same-session measured floor (rationale: canaryBound) —
     // ships in the artifact as "query_canary_floor".
     val floor = canary3()
@@ -581,6 +581,11 @@ object Bench {
     sc.anomalous.foreach(full.put("anomalous_kind", _))
     full.put("contended", sc.contended).put("cpu_inconsistent", sc.cpuInconsistent)
       .put("canary_par_nominal", num(f3(parNominal))).put("ext_cpu_max", num(f3(extCpuMax)))
+    // calibration context: nominals from the 32-thread box class
+    full.put("host_cpus", Runtime.getRuntime.availableProcessors)
+    full.putArray("spark_canary_nominals").add(num(f3(sparkNomLo))).add(num(f3(sparkNomHi)))
+    full.putArray("mem_canary_nominals").add(num(f3(memNomLo))).add(num(f3(memNomHi)))
+    full.put("query_canary_nominal", num(f3(queryNominal)))
     val scaling = full.putObject("scaling")
       .set[ObjectNode](s"local${sc.loLevel}", stats(sc.lo))
       .set[ObjectNode](s"local${sc.hiLevel}", stats(sc.hi))

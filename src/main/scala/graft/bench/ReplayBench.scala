@@ -102,23 +102,23 @@ object ReplayBench {
       // single biggest exchange in the job; prune at the source.
       .select("seen_key", "url", "epoch_day", "sec_code_raw", "arrival_seq")
 
-    // first-wins dedup (A1): hash agg with map-side combine
+    // first-wins dedup (A1): one min_by aggregate, partial + final
+    // SortAggregate around its exchange
     val first = SeenFilter.firstWinsAgg(kept, Seq("seen_key"), "arrival_seq")
 
-    // bloom split + exact confirm (A6 + J1) — SIZE-ADAPTIVE probe,
-    // the same strategy and threshold CrawlJob runs
-    // (Config.sketchBroadcastMaxBytes): this bench's sketch state
-    // (bloomP × 32 KB = 2 MB at the default) is far under it, so the
-    // production path is collect+broadcast (narrow, zero shuffles);
-    // the distributed cogroup engages above it (the 10^10 design point
-    // where the state is ~12 GB). The cogroup costs a full-width
-    // candidate shuffle — A/B at 2M URLs: broadcast 13.9s / cogroup
-    // 19.9s at local[8], N→4N efficiency 0.80 vs 0.64.
+    // bloom split + exact confirm (A6 + J1) — the probe regime
+    // CrawlJob runs, decided by the same SeenFilter.broadcastable:
+    // this bench's sketch state (bloomP × 32 KB = 2 MB at the default)
+    // is under the bound, so the production path is collect+broadcast
+    // (narrow, zero shuffles); the distributed cogroup runs above it
+    // (the 10^10 design point where the state is ~12 GB). The cogroup
+    // costs a full-width candidate shuffle — A/B at 2M URLs:
+    // broadcast 13.9s / cogroup 19.9s at local[8], N→4N efficiency
+    // 0.80 vs 0.64.
     // persisted: BOTH branches of the bloom split consume it — without
     // the persist the probe shuffle (and everything upstream) runs twice
-    val sketchStateBytes = bloomP.toLong * (params.numBits / 8)
     val probed =
-      (if (sketchStateBytes <= graft.crawl.CrawlJob.Config().sketchBroadcastMaxBytes)
+      (if (SeenFilter.broadcastable(bloomP, params))
         SeenFilter.probeBloom(first, "seen_key", bloomP, params,
           SeenFilter.collectSketches(sketchDf))
       else

@@ -78,17 +78,12 @@ object CrawlJob {
       saltCount: Int = 8,
       tokensPerTick: Int = 4,        // ST1 budget per (host,salt) per tick
       ticksPerRound: Int = 8,        // politeness ticks per round
-      bloomP: Int = 32,              // seen-domain partition count
-      bloomBits: Int = 1 << 16,      // bits per partition sketch
+      // Seen-domain partition count and bits per partition sketch;
+      // their product fixes the crawl's probe regime
+      // (SeenFilter.broadcastable).
+      bloomP: Int = 32,
+      bloomBits: Int = 1 << 16,
       commitFiles: Int = 8,          // file fan-in for small round tables
-      // Probe-strategy threshold, the exact analog of Spark's
-      // autoBroadcastJoinThreshold: when the WHOLE sketch state fits
-      // under this, collect+broadcast it (narrow probe, zero extra
-      // stages); above it, the distributed cogroup probe engages so
-      // no sketch bytes ever pass through the driver. At the 10^10
-      // design point (P=4096 × ~3 MB ≈ 12 GB) the distributed path is
-      // always chosen; 0 forces it for tests.
-      sketchBroadcastMaxBytes: Long = 8L << 20,
       // Per-round shuffle partition override (0 = leave the session
       // setting). A round's batch is BUDGET-BOUNDED (≤ saltCount ×
       // tokensPerTick × ticksPerRound fetches plus the listing fan),
@@ -123,8 +118,9 @@ object CrawlJob {
                                 // consecutive empty pages
   val TickMs = 300L             // reference politeness delay (:331)
   val BloomHashes = 4           // hash functions per seen-key probe
-  val SketchCompactEvery = 4    // OR-merge sketch deltas when the
-                                // table reaches this many dirs
+  val SketchCompactEvery = 4    // distributed regime: OR-merge the
+                                // sketch deltas when the table
+                                // reaches this many dirs
 
   /** Global lineage totals for one round (the per-partition rows live
     * in the metrics table; these are the reconciliation sums).
@@ -134,12 +130,14 @@ object CrawlJob {
                           invalid: Long, deferred: Long)
 
   /** Driver-side state carried between rounds of one run() loop —
-    * all COUNTER-SIZED: the listing (O(streams) metadata) and, on the
-    * broadcast probe regime only, the collected sketch map (≤
-    * sketchBroadcastMaxBytes by the regime's definition). Both are
-    * byte-identical to what a re-read of the committed snapshot would
-    * return, so a resume (carry empty) is indistinguishable — the
-    * carry only skips the per-round parquet read-back.
+    * all COUNTER-SIZED: the listing (O(streams) metadata) and, in the
+    * broadcast regime only (SeenFilter.broadcastable), the merged
+    * sketch map (≤ SeenFilter.BroadcastMaxBytes by the regime's
+    * definition; defined from round 0 on, empty before any key is
+    * seen). Both are byte-identical to what a re-read of the
+    * committed snapshot would return, so a resume (carry empty) is
+    * indistinguishable — the carry only skips the per-round parquet
+    * read-back.
     */
   final case class Carry(listing: Option[Seq[ListingTask]] = None,
                          sketch: Option[Map[Int, Array[Long]]] = None)
@@ -397,48 +395,36 @@ object CrawlJob {
         concat_ws("", col("sec_code_raw"), col("title"), col("time_ms"),
           col("time_str"), col("adjunct_url")).as("seen_key"))
 
-    // ---- 3. within-batch first-wins (A1) — hash aggregate with
-    // map-side combine (not a window: dup-heavy batches shrink
-    // before the exchange). Width prune first: url/seen_key are
-    // derived, nothing downstream reads adjunct_url or the filter
-    // flag — and min_by's struct buffer would otherwise carry them
-    // through the shuffle (nested-column pruning does not reach into
-    // agg buffers; measured at the 10x bench point).
+    // ---- 3. within-batch first-wins (A1) — one min_by aggregate,
+    // planned as a partial + final SortAggregate around its exchange
+    // (dup-heavy batches shrink before it). Width prune first:
+    // url/seen_key are derived, nothing downstream reads adjunct_url
+    // or the filter flag — and min_by's struct buffer would otherwise
+    // carry them through the shuffle (nested-column pruning does not
+    // reach into agg buffers; measured at the 10x bench point).
     val batchFirst = SeenFilter.firstWinsAgg(
       kept.drop("adjunct_url", "__passes"), Seq("seen_key"), "arrival_seq")
     mark("pb_filters")
 
     // ---- 4. bloom pre-filter + exact anti-join vs seen --------------
-    // Size-adaptive probe (see Config.sketchBroadcastMaxBytes): small
-    // sketch state → collect P rows + broadcast (narrow, no extra
-    // stages); large → distributed cogroup on bloom_pid (no sketch
-    // bytes through the driver, each task holds one pid's sketch).
+    // One probe regime per crawl, fixed by the config
+    // (SeenFilter.broadcastable). Broadcast: the merged sketch map
+    // rides the Carry, so steady-state rounds probe narrow with ZERO
+    // sketch I/O or jobs; a resume (no carry) collects it from the
+    // snapshot once. Distributed: cogroup on bloom_pid, no sketch
+    // bytes through the driver, each task holds one pid's sketch.
     val seenPrev = log.readTable(spark, snap, SeenTable)
     lazy val sketchPrev = log.readTable(spark, snap, SketchTable)
-    val sketchDirs = snap.tables.getOrElse(SketchTable, Nil).size
-    val sketchStateBytes =
-      sketchDirs.toLong * cfg.bloomP * (cfg.bloomBits / 8)
-    val broadcastRegime = sketchStateBytes <= cfg.sketchBroadcastMaxBytes
-    // Broadcast regime: the collected sketch map rides the Carry, so
-    // steady-state rounds probe with ZERO sketch I/O or jobs; a
-    // resume (no carry) collects it from the snapshot once. The
-    // distributed regime never collects — unchanged.
+    val broadcastRegime = SeenFilter.broadcastable(cfg.bloomP, params)
     val sketchMap: Option[Map[Int, Array[Long]]] =
       if (!broadcastRegime) None
       else carry.sketch.orElse(
         sketchPrev.map(skDf =>
           SeenFilter.collectSketches(SeenFilter.mergeSketches(skDf))))
     val probed = (sketchMap match {
-      case Some(m) =>
-        SeenFilter.probeBloom(batchFirst, "seen_key", cfg.bloomP, params, m)
-      case None =>
-        sketchPrev match {
-          case Some(skDf) =>
-            SeenFilter.probeBloomDistributed(batchFirst, "seen_key",
-              cfg.bloomP, params, skDf)
-          case None =>
-            batchFirst.withColumn("might_be_seen", lit(false))
-        }
+      case Some(m) => SeenFilter.probeBloom(batchFirst, "seen_key", cfg.bloomP, params, m)
+      case None => sketchPrev.fold(batchFirst.withColumn("might_be_seen", lit(false)))(
+        SeenFilter.probeBloomDistributed(batchFirst, "seen_key", cfg.bloomP, params, _))
     }).persist(StorageLevel.MEMORY_AND_DISK)
     val definitelyNew = probed.where(!col("might_be_seen")).drop("might_be_seen")
     val possibleDup = probed.where(col("might_be_seen")).drop("might_be_seen")
@@ -641,35 +627,34 @@ object CrawlJob {
     val done = listingPending == 0 && deferredCnt == 0
     val totals = Totals(urlsSeenCnt, filtered, dupDropped, newUnique,
       deniedCnt, fetchedCnt, invalidCnt, deferredCnt)
-    // Sketch-table compaction: delta dirs accumulate one per round;
-    // once `SketchCompactEvery` exist, OR-merge them (one row per
-    // pid) and re-commit as a full rewrite, so reads stay O(P) rows
-    // however long the crawl runs.
-    val compactSketch = sketchDirs > 0 && sketchDirs + 1 >= SketchCompactEvery
-    // Broadcast regime: the round's sketch delta is COLLECTED once
-    // (one small job over the cached new keys — the map also feeds
-    // the next round's carry) and committed as a locally-built frame,
-    // so the commit runs zero distributed sketch jobs. Distributed
-    // regime: the delta/compaction stay fully executor-side.
-    val deltaBits: Option[Map[Int, Array[Long]]] =
-      if (broadcastRegime && newUnique > 0)
-        Some(SeenFilter.collectSketches(sketchDelta))
-      else None
-    def orMerge(a: Map[Int, Array[Long]], b: Map[Int, Array[Long]]): Map[Int, Array[Long]] =
-      (a.keySet ++ b.keySet).iterator.map { pid =>
-        (a.get(pid), b.get(pid)) match {
-          case (Some(x), Some(y)) =>
-            val m = x.clone(); var i = 0; while (i < m.length) { m(i) |= y(i); i += 1 }
-            pid -> m
-          case (x, y) => pid -> x.orElse(y).get
-        }
-      }.toMap
+    // Sketch commit. Broadcast regime: the round's delta is COLLECTED
+    // once (one small job over the cached new keys) and OR-ed into
+    // the carried map; that merged map is the next round's carry AND
+    // the whole committed table, one `replaced` dir built locally —
+    // no distributed sketch job, no deltas, nothing to compact.
+    // Distributed regime: the delta stays executor-side, one dir per
+    // round, and once `SketchCompactEvery` dirs exist they are
+    // OR-merged (one row per pid) and re-committed as a full rewrite,
+    // so reads stay O(P) rows however long the crawl runs.
     val nextSketchMap: Option[Map[Int, Array[Long]]] =
       if (!broadcastRegime) None
-      else Some(orMerge(sketchMap.getOrElse(Map.empty), deltaBits.getOrElse(Map.empty)))
-    def localSketchDf(m: Map[Int, Array[Long]]): DataFrame =
-      m.toSeq.sortBy(_._1).map { case (pid, bits) => (pid.toLong, bits) }
-        .toDF("bloom_pid", "bits")
+      else Some {
+        val prev = sketchMap.getOrElse(Map.empty[Int, Array[Long]])
+        if (newUnique == 0) prev
+        else SeenFilter.collectSketches(sketchDelta).foldLeft(prev) { case (m, (pid, bits)) =>
+          m.updated(pid, m.get(pid).fold(bits)(SeenFilter.orBits(_, bits)))
+        }
+      }
+    val sketchDirs = snap.tables.getOrElse(SketchTable, Nil).size
+    val (sketchAppend, sketchReplace): (Option[DataFrame], Option[DataFrame]) =
+      nextSketchMap match {
+        case Some(m) =>
+          (None, Option.when(newUnique > 0)(m.toSeq.sortBy(_._1)
+            .map { case (pid, bits) => (pid.toLong, bits) }.toDF("bloom_pid", "bits")))
+        case None if sketchDirs > 0 && sketchDirs + 1 >= SketchCompactEvery =>
+          (None, Some(SeenFilter.mergeSketches(sketchPrev.get.unionByName(sketchDelta))))
+        case None => (Option.when(newUnique > 0)(sketchDelta), None)
+      }
     // Deltas known (from the counters) to be empty are omitted — no
     // wasted write jobs, no empty dirs in the manifest. Small round
     // tables coalesce to a few files (they are counter/frontier-sized;
@@ -685,19 +670,13 @@ object CrawlJob {
         small(newUniqueDf.select("seen_key", "url", "arrival_seq"))),
       (fetchedCnt > 0, ResultsTable, small(resultsDelta)),
       (fetchedCnt > 0, DocsTable, fetchedDocs),
-      (true, MetricsTable, metricsLocal),
-      (!compactSketch && newUnique > 0, SketchTable,
-        deltaBits.map(localSketchDf).getOrElse(sketchDelta)))
+      (true, MetricsTable, metricsLocal))
       .collect { case (nonEmpty, name, df) if nonEmpty => name -> df }
-      .toMap
+      .toMap ++ sketchAppend.map(SketchTable -> _)
     val replaced = Map(
       ListingTable -> small(nextTasks.toDS().toDF()),
       DocsFrontierTable -> small(deferredNow)) ++
-      (if (compactSketch)
-         Map(SketchTable ->
-           (nextSketchMap.map(localSketchDf).getOrElse(
-             SeenFilter.mergeSketches(sketchPrev.get.unionByName(sketchDelta)))))
-       else Map.empty[String, DataFrame])
+      sketchReplace.map(SketchTable -> _)
     mark("growth")
     val next = log.commit(
       deltas = deltas,

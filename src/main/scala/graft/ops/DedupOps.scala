@@ -285,8 +285,66 @@ object DedupOps {
     */
   def connectedComponents(ids: DataFrame, idCol: String, pairs: DataFrame,
                           aCol: String, bCol: String,
-                          maxIter: Int = 25,
-                          smallGraphMaxPairs: Long = 1L << 20): DataFrame = {
+                          maxIter: Int = 25): DataFrame = {
+    import org.apache.spark.storage.StorageLevel
+    // the symmetric edge build references `pairs` TWICE (forward +
+    // swapped) — persist the projection first or an expensive pair
+    // generator (LSH over a filtered corpus) runs twice
+    val prs = pairs.select(col(aCol).cast("long").as("a"), col(bCol).cast("long").as("b"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    // SIZE-ADAPTIVE STRATEGY (round 8; the analog of
+    // SeenFilter.broadcastable and Spark's own
+    // autoBroadcastJoinThreshold): the distributed loop costs
+    // O(log n) ROUNDS of joins+aggregates+fixpoint actions — ~10-15
+    // Spark jobs of pure sequencing latency when the pair graph is
+    // small (the common curation case: near-dup pairs ≪ corpus).
+    // Up to SmallGraphMaxPairs (one count over the persisted
+    // projection), collect the edges and run UNION-FIND driver-side:
+    // min-id roots give labels IDENTICAL to the loop's fixpoint, and
+    // singletons rejoin as in the loop. Above it the loop runs — at
+    // the 100 TB design point it is the only correct shape.
+    try {
+      if (prs.count() > SmallGraphMaxPairs) pointerJumping(ids, idCol, prs, "a", "b", maxIter)
+      else {
+        val parent = scala.collection.mutable.LongMap.empty[Long]
+        def find(x: Long): Long = {
+          var r = x
+          while (parent.getOrElse(r, r) != r) r = parent(r)
+          var c = x // path compression
+          while (parent.getOrElse(c, c) != r) { val nx = parent(c); parent(c) = r; c = nx }
+          r
+        }
+        prs.collect().foreach { row =>
+          val a = row.getLong(0); val b = row.getLong(1)
+          if (!parent.contains(a)) parent.update(a, a)
+          if (!parent.contains(b)) parent.update(b, b)
+          val ra = find(a); val rb = find(b)
+          // min root wins ⇒ every component's root is its min id
+          if (ra < rb) parent.update(rb, ra)
+          else if (rb < ra) parent.update(ra, rb)
+        }
+        val spark = ids.sparkSession
+        import spark.implicits._
+        val labelsLocal = parent.keys.toArray.sorted.map(k => (k, find(k))).toSeq
+          .toDF("id", "label")
+        val singletons = ids.select(col(idCol).cast("long").as("id"))
+          .join(broadcast(labelsLocal.select("id")), Seq("id"), "left_anti")
+          .select(col("id"), col("id").as("label"))
+        labelsLocal.unionByName(singletons)
+          .select(col("id").as(idCol), col("label").as("cluster_rep"))
+      }
+    } finally prs.unpersist()
+  }
+
+  // 2^20 pairs = 16 MB collected, ≤ 2·2^20 participant ids
+  val SmallGraphMaxPairs: Long = 1L << 20
+
+  /** [[connectedComponents]]' distributed loop over long id pairs, for
+    * any pair count; the specs pin it against union-find directly.
+    */
+  private[ops] def pointerJumping(ids: DataFrame, idCol: String, pairs: DataFrame,
+                                  aCol: String, bCol: String,
+                                  maxIter: Int = 25): DataFrame = {
     import org.apache.spark.storage.StorageLevel
     val spark = ids.sparkSession
     // reliable mode when the context has a checkpoint dir (a cluster
@@ -295,60 +353,8 @@ object DedupOps {
     def truncated(df: DataFrame): DataFrame =
       if (reliable) df.checkpoint(eager = false)
       else spark.createDataFrame(df.rdd, df.schema)
-    // the symmetric edge build references `pairs` TWICE (forward +
-    // swapped) — persist the projection first or an expensive pair
-    // generator (LSH over a filtered corpus) runs twice
-    val prs = pairs.select(col(aCol).cast("long").as("a"), col(bCol).cast("long").as("b"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // SIZE-ADAPTIVE STRATEGY (round 8; the exact analog of
-    // Config.sketchBroadcastMaxBytes and Spark's own
-    // autoBroadcastJoinThreshold): the distributed loop costs
-    // O(log n) ROUNDS of joins+aggregates+fixpoint actions — ~10-15
-    // Spark jobs of pure sequencing latency when the pair graph is
-    // small (the common curation case: near-dup pairs ≪ corpus).
-    // When the pair count is bounded (default 2^20 pairs = 16 MB
-    // collected, ≤ 2·2^20 participant ids), collect the edge list and
-    // run UNION-FIND driver-side — min-id roots, so the labels are
-    // IDENTICAL to the loop's min-reachable fixpoint — then rejoin
-    // singletons exactly as the loop does (participants broadcast to
-    // the anti-join). The count() gate is one partial-aggregated job
-    // over the (already persisted) pair projection; above the
-    // threshold the distributed loop runs unchanged — at the 100 TB
-    // design point pair counts exceed any driver bound and the loop
-    // is the only correct shape. Both paths are pinned equal in
-    // DedupSkewSpec/OpsSpec (threshold 0 forces the loop).
-    val nPairs = prs.count()
-    if (nPairs <= smallGraphMaxPairs) {
-      val edgeRows = prs.collect()
-      prs.unpersist()
-      val parent = scala.collection.mutable.LongMap.empty[Long]
-      def find(x: Long): Long = {
-        var r = x
-        while (parent.getOrElse(r, r) != r) r = parent(r)
-        var c = x // path compression
-        while (parent.getOrElse(c, c) != r) { val nx = parent(c); parent(c) = r; c = nx }
-        r
-      }
-      edgeRows.foreach { row =>
-        val a = row.getLong(0); val b = row.getLong(1)
-        if (!parent.contains(a)) parent.update(a, a)
-        if (!parent.contains(b)) parent.update(b, b)
-        val ra = find(a); val rb = find(b)
-        // min root wins ⇒ every component's root is its min id
-        if (ra < rb) parent.update(rb, ra)
-        else if (rb < ra) parent.update(ra, rb)
-      }
-      val labelRows = parent.keys.toArray.sorted.map(k => (k, find(k))).toSeq
-      import spark.implicits._
-      val labelsLocal = labelRows.toDF("id", "label")
-      val singletons = ids.select(col(idCol).cast("long").as("id"))
-        .join(broadcast(labelsLocal.select("id")), Seq("id"), "left_anti")
-        .select(col("id"), col("id").as("label"))
-      return labelsLocal.unionByName(singletons)
-        .select(col("id").as(idCol), col("label").as("cluster_rep"))
-    }
-    val edges = prs.select(col("a").as("src"), col("b").as("dst"))
-      .unionByName(prs.select(col("b").as("src"), col("a").as("dst")))
+    val edges = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
+      .unionByName(pairs.select(col(bCol).as("src"), col(aCol).as("dst")))
       .distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
     // The LOOP runs over PAIR PARTICIPANTS only (round 6): an id in no
@@ -396,7 +402,6 @@ object DedupOps {
       System.err.println(s"[graft] WARNING: connectedComponents hit maxIter=$maxIter " +
         "without converging — cluster_rep labels are NOT a fixpoint")
     edges.unpersist()
-    prs.unpersist()
     // Singletons rejoin as their own representatives (see the loop
     // note above); the anti-join's build side is the participant set.
     // labels is already materialized (labelSum forced it), so the

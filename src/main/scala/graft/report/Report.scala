@@ -11,10 +11,10 @@ import org.apache.spark.sql.functions._
   * Every keep-first semantic from the reference (pandas implicit row
   * order) is made deterministic by an explicit arrival ordinal —
   * Spark's dropDuplicates gives no ordering guarantee (SURVEY.md
-  * §2.4-§2.5). Keep-first on the unique ordinal alone is the hash
-  * aggregate `SeenFilter.firstWinsAgg`; orders with no single min_by
-  * key (A3's date-then-arrival, A4's first-positive) are `row_number`
-  * windows.
+  * §2.4-§2.5). Keep-first on the unique ordinal alone is the min_by
+  * aggregate `SeenFilter.firstWinsAgg` (a partial + final
+  * SortAggregate); orders with no single min_by key (A3's
+  * date-then-arrival, A4's first-positive) are `row_number` windows.
   */
 object Report {
 
@@ -53,10 +53,10 @@ object Report {
       .where(f1(col("title")))
       .where(!col("title").contains("摘要") && !col("title").contains("英文版"))
       .withColumn("sec_code", Canon.classifyExchange(Canon.padCode(col("sec_code_raw"))))
-    // A2: keep first arrival per (code, company, title) — hash agg
-    // with MAP-SIDE COMBINE (min_by over the unique arrival ordinal
-    // ≡ the row_number window, which would shuffle AND sort every
-    // raw row; dup-heavy inputs collapse before the exchange)
+    // A2: keep first arrival per (code, company, title) — min_by
+    // over the unique arrival ordinal (≡ a row_number window), planned
+    // as a partial + final SortAggregate: the partial side collapses
+    // dup-heavy inputs before the exchange
     val deduped = graft.seen.SeenFilter.firstWinsAgg(
       filtered, Seq("sec_code", "company", "title"), "arrival_seq")
     // A3: latest report per code (date desc nulls last, arrival asc)

@@ -108,14 +108,18 @@ class BenchSpec extends SparkSpec {
       Bench.Scaling(leg(26.005, 52.014), leg(9.378, 67.056), 2, 8, contended = false),
       sweep, 200.0, "/x/sf")
     // both lines byte-for-byte as the string-built emitter wrote them
-    // for these inputs
+    // for these inputs, plus the calibration context before "scaling"
+    val cpus = Runtime.getRuntime.availableProcessors
     assert(Json.writeValueAsString(full) ==
       """{"metric":"urls_scheduled_fetched_per_sec","value":9.6,"unit":"urls/sec",""" +
       """"queries":{"q1":1.250,"q2":0.500},"queries_total_sec":1.750,"failed":["bad"],""" +
       """"query_spark_canary":[1.400,1.500],"queries_contended":false,"query_attempts":1,""" +
       """"query_canary_floor":1.300,"ptr_chase_ns":200.0,"sf":"/x/sf","anomalous":false,""" +
       """"contended":false,"cpu_inconsistent":false,"canary_par_nominal":0.150,""" +
-      """"ext_cpu_max":1.000,"scaling":{"local2":{"urls":100,"scheduled":50,"fetched":40,""" +
+      """"ext_cpu_max":1.000,""" +
+      s""""host_cpus":$cpus,"spark_canary_nominals":[6.500,1.700],""" +
+      """"mem_canary_nominals":[0.050,0.060],"query_canary_nominal":1.440,""" +
+      """"scaling":{"local2":{"urls":100,"scheduled":50,"fetched":40,""" +
       """"spans":10,"sec":26.005,"urls_per_sec":3.5,"stages":{"task_cpu_sec":52.014,""" +
       """"state_setup":0.500}},"local8":{"urls":100,"scheduled":50,"fetched":40,"spans":10,""" +
       """"sec":9.378,"urls_per_sec":9.6,"stages":{"task_cpu_sec":67.056,"state_setup":0.500}},""" +
@@ -135,7 +139,8 @@ class BenchSpec extends SparkSpec {
     assert(keys(full) == Seq("metric", "value", "unit", "queries", "queries_total_sec",
       "failed", "query_spark_canary", "queries_contended", "query_attempts",
       "query_canary_floor", "ptr_chase_ns", "sf", "anomalous", "anomalous_kind", "contended",
-      "cpu_inconsistent", "canary_par_nominal", "ext_cpu_max", "scaling"))
+      "cpu_inconsistent", "canary_par_nominal", "ext_cpu_max", "host_cpus",
+      "spark_canary_nominals", "mem_canary_nominals", "query_canary_nominal", "scaling"))
     assert(keys(full.get("scaling")) == Seq("local2", "local8", "n_lo", "n_hi", "efficiency",
       "slot_util_lo", "slot_util_hi", "cpu_retire_ratio", "slot_efficiency"))
     Seq("local2", "local8").foreach(l => assert(keys(full.get("scaling").get(l)) ==

@@ -11,12 +11,14 @@ import java.nio.file.Files
   */
 class ResumeSpec extends SparkSpec {
 
-  // sketchBroadcastMaxBytes = 0 forces the DISTRIBUTED cogroup probe
-  // so the golden resume equality also covers the at-scale probe path
-  // (CrawlReplaySpec's default config covers the broadcast path).
+  // bloomP × bloomBits/8 = 32768 × 512 B = 16 MiB is above
+  // SeenFilter.BroadcastMaxBytes, so every round runs the DISTRIBUTED
+  // cogroup probe and the golden resume equality also covers the
+  // at-scale probe path (CrawlReplaySpec's config covers the
+  // broadcast path).
   private val cfg = CrawlJob.Config(
-    saltCount = 4, tokensPerTick = 3, ticksPerRound = 4, bloomP = 8,
-    bloomBits = 1 << 12, sketchBroadcastMaxBytes = 0L, maxRounds = 100)
+    saltCount = 4, tokensPerTick = 3, ticksPerRound = 4, bloomP = 1 << 15,
+    bloomBits = 1 << 12, maxRounds = 100)
   private val seeds = CrawlJob.expandSeeds(19810, 19810).filter(_.exchangeRank < 2)
 
   private def tableRows(root: String, name: String): Set[String] = {

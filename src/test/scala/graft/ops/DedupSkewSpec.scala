@@ -87,11 +87,10 @@ class DedupSkewSpec extends SparkSpec {
     // local-checkpoint path
     s.sparkContext.setCheckpointDir(ckDir)
     try {
-      // smallGraphMaxPairs = 0 forces the DISTRIBUTED loop so reliable
-      // checkpointing is actually exercised (the default path would run
-      // the driver union-find and write no checkpoint files)
-      val gotCk = DedupOps.connectedComponents(ids, "doc_id", pairs, "id_a", "id_b",
-          smallGraphMaxPairs = 0L)
+      // the DISTRIBUTED loop, so reliable checkpointing is actually
+      // exercised (the default path would run the driver union-find
+      // and write no checkpoint files)
+      val gotCk = DedupOps.pointerJumping(ids, "doc_id", pairs, "id_a", "id_b")
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(gotCk == want, "checkpoint mode diverged from union-find oracle")
       // the size-adaptive driver path must agree as well

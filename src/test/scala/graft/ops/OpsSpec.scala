@@ -50,9 +50,8 @@ class OpsSpec extends SparkSpec {
     val got = DedupOps.connectedComponents(ids, "doc_id", pairs, "id_a", "id_b")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == want)
-    // forced distributed pointer-jumping loop (smallGraphMaxPairs = 0)
-    val gotLoop = DedupOps.connectedComponents(ids, "doc_id", pairs, "id_a", "id_b",
-        smallGraphMaxPairs = 0L)
+    // the distributed pointer-jumping loop
+    val gotLoop = DedupOps.pointerJumping(ids, "doc_id", pairs, "id_a", "id_b")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(gotLoop == want)
   }
@@ -78,8 +77,7 @@ class OpsSpec extends SparkSpec {
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(got == want, s"trial $trial (n=$n)")
       // the distributed loop must agree with the driver union-find path
-      val gotLoop = DedupOps.connectedComponents(ids, "doc_id", pairs, "id_a", "id_b",
-          smallGraphMaxPairs = 0L)
+      val gotLoop = DedupOps.pointerJumping(ids, "doc_id", pairs, "id_a", "id_b")
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(gotLoop == want, s"trial $trial (n=$n) loop path")
     }
