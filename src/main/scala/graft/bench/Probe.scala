@@ -54,8 +54,8 @@ object Probe {
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     names.foreach { name =>
       // crawl_replay RUNS the whole multi-round loop on construction;
-      // this dumps the final-report plan shape only (the loop's
-      // per-round plans are covered by the round-debug marks instead).
+      // this dumps the final-report plan shape only (the loop times
+      // its own rounds as `phase:<name>` rows of its metrics table).
       val (txt, summary) =
         try {
           val qe = graft.SparkEntry.queries(name)(s, sfDir).queryExecution

@@ -90,9 +90,7 @@ object ReplayBench {
     val t0 = System.nanoTime()
 
     // F1/F2 filters (regex-free F1 — Report.titleFilter scaladoc)
-    val kept = cand.where(
-      graft.report.Report.titleFilter(Seq(2023, 2024))(col("title")) &&
-        !col("title").contains("摘要") && !col("title").contains("英文版"))
+    val kept = cand.where(graft.report.Report.stage1Filter(Seq(2023, 2024))(col("title")))
       // EXPLICIT width prune before the dedup exchange: min_by's
       // struct buffer defeats nested-column pruning, so without this
       // the first-wins exchange ships every generator column — title

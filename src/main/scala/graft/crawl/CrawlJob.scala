@@ -7,10 +7,11 @@ import graft.seen.SeenFilter
 import graft.snapshot.SnapshotLog
 import java.util.{Collections, WeakHashMap}
 import java.util.concurrent.ConcurrentHashMap
-import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.{AnalysisException, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+import scala.collection.mutable
 
 /** The end-to-end URL-frontier crawl (the north rule's core job):
   * seed expansion → paginated listing scan → F1/F2 filters → bloom +
@@ -138,9 +139,17 @@ object CrawlJob {
     * committed snapshot would return, so a resume (carry empty) is
     * indistinguishable — the carry only skips the per-round parquet
     * read-back.
+    *
+    * `commitMicros` is the one member that is NOT a re-readable
+    * snapshot value: the microseconds round r spent in its commit,
+    * which round r+1 commits as the metrics row
+    * `(r, "phase:commit", -1, µs)` (a round cannot time its own commit
+    * inside that commit). A resume and the final round each leave out
+    * that one reading.
     */
   final case class Carry(listing: Option[Seq[ListingTask]] = None,
-                         sketch: Option[Map[Int, Array[Long]]] = None)
+                         sketch: Option[Map[Int, Array[Long]]] = None,
+                         commitMicros: Option[Long] = None)
 
   final case class RoundResult(round: Int, totals: Totals, snapshotId: Long,
                                listingPending: Long, docsPending: Long,
@@ -314,14 +323,28 @@ object CrawlJob {
   private val roundSessions = Collections.synchronizedMap(
     new WeakHashMap[SparkSession, ConcurrentHashMap[Map[String, String], SparkSession]]())
 
-  /** Env-gated round tracing (SPARK_GRAFT_ROUND_DEBUG=1): stderr
-    * timing of the three blocking driver actions per round.
+  /** Per-partition lineage counts of `df`: `labels` names the counters
+    * a row adds one to, and each partition emits one `(round, counter,
+    * partition_id, n)` row per counter it saw, so n > 0. Counting
+    * inside the partitions keeps the metrics job narrow. `df` should
+    * carry only the columns `labels` reads.
     */
-  private val roundDebug = sys.env.get("SPARK_GRAFT_ROUND_DEBUG").contains("1")
+  private def partitionCounts(df: DataFrame, round: Int)(labels: Row => Seq[String]): DataFrame = {
+    import df.sparkSession.implicits._
+    df.mapPartitions { it =>
+      val counts = mutable.LinkedHashMap.empty[String, Long]
+      it.foreach(r => labels(r).foreach(l => counts(l) = counts.getOrElse(l, 0L) + 1))
+      val pid = TaskContext.getPartitionId()
+      counts.iterator.map { case (l, n) => (round, l, pid, n) }
+    }.toDF("round", "counter", "partition_id", "n")
+  }
 
   /** One scheduler round: expand listings, filter, dedup, gate,
     * schedule under the politeness budget, fetch, commit. Runs on
-    * [[roundSession]]`(caller, cfg)`.
+    * [[roundSession]]`(caller, cfg)`. The round's lineage counters
+    * and the microseconds of each of its phases are committed as rows
+    * of its one metrics delta; every Dataset it persists is unpersisted
+    * whether it returns or throws.
     */
   def runRound(caller: SparkSession, cfg: Config, log: SnapshotLog,
                snap: SnapshotLog.Snapshot, round: Int,
@@ -329,371 +352,339 @@ object CrawlJob {
                carry: Carry = Carry()): RoundResult = {
     val spark = roundSession(caller, cfg)
     import spark.implicits._
+    val phases = mutable.ArrayBuffer.empty[(String, Long)]
     var tMark = System.nanoTime()
-    def mark(what: String): Unit = if (roundDebug) {
+    def mark(phase: String): Unit = {
       val now = System.nanoTime()
-      System.err.println(f"[round $round] $what ${(now - tMark) / 1e9}%.2fs")
+      phases += phase -> (now - tMark) / 1000
       tMark = now
     }
-    val params = bloomParams(cfg)
-
-    // The LISTING state is O(active streams) — exchange × date ×
-    // category tasks, i.e. bounded METADATA (thousands of rows at the
-    // 10^10-URL design point), the same class as robots rules and the
-    // lineage counters. It lives driver-side within a round: page
-    // growth needs this round's per-stream new-unique counts (the
-    // reference's empty_pages_count), and a distributed join for a
-    // counter-sized decision measured 3x the round's fixed cost. The
-    // page EXPANSION below (the O(announcements) fan-out) stays fully
-    // distributed.
-    val listingTasks: Seq[ListingTask] = carry.listing.getOrElse(
-      log.readTable(spark, snap, ListingTable)
-        .map(_.as[ListingTask].collect().toSeq).getOrElse(Seq.empty))
-    // partition cap: a budget-bounded round sizes its NARROW lineage
-    // to the round override too — parallelize at defaultParallelism
-    // would pay a 32-task wave per tiny stage
-    val narrowParts =
-      if (cfg.roundShufflePartitions > 0) cfg.roundShufflePartitions
-      else spark.sparkContext.defaultParallelism
-    val listing = spark.createDataset(spark.sparkContext.parallelize(
-      listingTasks, math.max(1, math.min(narrowParts, listingTasks.size))))
-    // the frontier read is skipped when the committed props already
-    // say it is empty (the common case without deferral) — one fewer
-    // parquet listing+scan per round
-    val deferredPrev =
-      if (snap.props.get("deferred").contains("0")) spark.emptyDataset[DocTask]
-      else log.readTable(spark, snap, DocsFrontierTable).map(_.as[DocTask])
-        .getOrElse(spark.emptyDataset[DocTask])
-    mark("listing_read")
-
-    // ---- 1. listing expansion (synthetic S1 scan) -------------------
-    // The whole per-(exchange,date,category) stream state is one row;
-    // rows are generated executor-side from the pure generator. Page
-    // GROWTH is decided after dedup (step 9b).
-    val anns = listing.flatMap { t =>
-      net.announcementsFor(t).map { a =>
-        (t.exchangeRank, t.epochDay, t.category, a.secCode, a.secName, a.title,
-          a.timeMs, a.timeStr, a.adjunctUrl, a.arrivalSeq, t.page)
-      }
-    }.toDF("exchange_rank", "epoch_day", "category", "sec_code_raw", "company",
-        "title", "time_ms", "time_str", "adjunct_url", "arrival_seq", "page_depth")
-
-    // ---- 2. filters F1/F2 + canonicalization ------------------------
-    // F1 via Report.titleFilter (regex-free; see its scaladoc)
-    val passes = graft.report.Report.titleFilter(cfg.targetYears)(col("title")) &&
-      !col("title").contains("摘要") && !col("title").contains("英文版")
-    val candidates = anns
-      .withColumn("__passes", passes)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-
-    // single select, not chained withColumns: every DataFrame op
-    // re-analyzes the whole accumulated tree, and the round loop pays
-    // that per round (round 8 driver-latency cut; same plan)
-    val kept = candidates.where(col("__passes"))
-      .select(col("*"),
-        concat(lit(net.urlBase), col("adjunct_url")).as("url"),
-        concat_ws("", col("sec_code_raw"), col("title"), col("time_ms"),
-          col("time_str"), col("adjunct_url")).as("seen_key"))
-
-    // ---- 3. within-batch first-wins (A1) — one min_by aggregate,
-    // planned as a partial + final SortAggregate around its exchange
-    // (dup-heavy batches shrink before it). Width prune first:
-    // url/seen_key are derived, nothing downstream reads adjunct_url
-    // or the filter flag — and min_by's struct buffer would otherwise
-    // carry them through the shuffle (nested-column pruning does not
-    // reach into agg buffers; measured at the 10x bench point).
-    val batchFirst = SeenFilter.firstWinsAgg(
-      kept.drop("adjunct_url", "__passes"), Seq("seen_key"), "arrival_seq")
-    mark("pb_filters")
-
-    // ---- 4. bloom pre-filter + exact anti-join vs seen --------------
-    // One probe regime per crawl, fixed by the config
-    // (SeenFilter.broadcastable). Broadcast: the merged sketch map
-    // rides the Carry, so steady-state rounds probe narrow with ZERO
-    // sketch I/O or jobs; a resume (no carry) collects it from the
-    // snapshot once. Distributed: cogroup on bloom_pid, no sketch
-    // bytes through the driver, each task holds one pid's sketch.
-    val seenPrev = log.readTable(spark, snap, SeenTable)
-    lazy val sketchPrev = log.readTable(spark, snap, SketchTable)
-    val broadcastRegime = SeenFilter.broadcastable(cfg.bloomP, params)
-    val sketchMap: Option[Map[Int, Array[Long]]] =
-      if (!broadcastRegime) None
-      else carry.sketch.orElse(
-        sketchPrev.map(skDf =>
-          SeenFilter.collectSketches(SeenFilter.mergeSketches(skDf))))
-    val probed = (sketchMap match {
-      case Some(m) => SeenFilter.probeBloom(batchFirst, "seen_key", cfg.bloomP, params, m)
-      case None => sketchPrev.fold(batchFirst.withColumn("might_be_seen", lit(false)))(
-        SeenFilter.probeBloomDistributed(batchFirst, "seen_key", cfg.bloomP, params, _))
-    }).persist(StorageLevel.MEMORY_AND_DISK)
-    val definitelyNew = probed.where(!col("might_be_seen")).drop("might_be_seen")
-    val possibleDup = probed.where(col("might_be_seen")).drop("might_be_seen")
-    val confirmedNew = seenPrev match {
-      case Some(seen) => possibleDup.join(seen.select("seen_key"), Seq("seen_key"), "left_anti")
-      case None => possibleDup
+    val cached = mutable.ArrayBuffer.empty[Dataset[_]]
+    def cache[T](ds: Dataset[T]): Dataset[T] = {
+      cached += ds
+      ds.persist(StorageLevel.MEMORY_AND_DISK)
     }
-    val newUniqueDf = definitelyNew.unionByName(confirmedNew)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    mark("pb_seen")
+    try {
+      val params = bloomParams(cfg)
 
-    // ---- 5. build this round's sketch delta over new keys ----------
-    val sketchDelta = SeenFilter.buildPartitionedBloom(
-      newUniqueDf.select("seen_key"), "seen_key", cfg.bloomP, params)
+      // The LISTING state is O(active streams) — exchange × date ×
+      // category tasks, i.e. bounded METADATA (thousands of rows at the
+      // 10^10-URL design point), the same class as robots rules and the
+      // lineage counters. It lives driver-side within a round: page
+      // growth needs this round's per-stream new-unique counts (the
+      // reference's empty_pages_count), and a distributed join for a
+      // counter-sized decision measured 3x the round's fixed cost. The
+      // page EXPANSION below (the O(announcements) fan-out) stays fully
+      // distributed.
+      val listingTasks: Seq[ListingTask] = carry.listing.getOrElse(
+        log.readTable(spark, snap, ListingTable)
+          .map(_.as[ListingTask].collect().toSeq).getOrElse(Seq.empty))
+      // partition cap: a budget-bounded round sizes its NARROW lineage
+      // to the round override too — parallelize at defaultParallelism
+      // would pay a 32-task wave per tiny stage
+      val narrowParts =
+        if (cfg.roundShufflePartitions > 0) cfg.roundShufflePartitions
+        else spark.sparkContext.defaultParallelism
+      val listing = spark.createDataset(spark.sparkContext.parallelize(
+        listingTasks, math.max(1, math.min(narrowParts, listingTasks.size))))
+      // the frontier read is skipped when the committed props already
+      // say it is empty (the common case without deferral) — one fewer
+      // parquet listing+scan per round
+      val deferredPrev =
+        if (snap.props.get("deferred").contains("0")) spark.emptyDataset[DocTask]
+        else log.readTable(spark, snap, DocsFrontierTable).map(_.as[DocTask])
+          .getOrElse(spark.emptyDataset[DocTask])
+      mark("listing_read")
 
-    // ---- 6. doc frontier: new tasks ∪ deferred, robots gate ---------
-    // The stage-1 result payload rides on the task (see DocTask): a
-    // results row is emitted only when its fetch VALIDATES (step 8),
-    // matching the reference's total_valid semantics
-    // (cninfo_report_crawler.py:479-493) — discovery alone puts
-    // nothing in the results table.
-    val newTasks = newUniqueDf.select(
-      col("url"),
-      lit(net.host).as("host"),
-      col("epoch_day").as("announceEpochDay"),
-      col("sec_code_raw").as("secCode"),
-      col("page_depth").as("pageDepth"),
-      col("seen_key").as("seenKey"),
-      col("arrival_seq").as("arrivalSeq"),
-      col("company"), col("title"),
-      col("time_ms").as("timeMs"),
-      col("time_str").as("timeStr"))
-      .as[DocTask]
-    val allTasks = newTasks.unionByName(deferredPrev).toDF()
-
-    val rulesDf = net.robotsRules.toDF("host", "path_prefix", "allow")
-    val gated = Scheduler.robotsGate(allTasks, rulesDf)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val denied = gated.where(col("robots_denied"))
-    val allowed = gated.where(!col("robots_denied")).drop("robots_denied")
-
-    // ---- 7. politeness scheduling under the round budget ------------
-    // north-star priority: (announce date, stock code, page depth).
-    // The FULL task row rides through the scheduler (column-generic
-    // pass-through), so the deferred set is a plain projection — no
-    // re-join on url, which is not unique (two announcements can share
-    // an adjunctUrl; the dedup identity is the 4-tuple seenKey).
-    val schedIn = allowed.select(col("*"),
-      col("announceEpochDay").cast("long").as("priority"),
-      concat_ws("|", col("secCode"), lpad(col("pageDepth").cast("string"), 6, "0"),
-        col("seenKey")).as("tiebreak"))
-    val assigned = Scheduler
-      .assignVirtualTicksCols(schedIn, cfg.saltCount, cfg.tokensPerTick, TickMs)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    mark("pb_sched")
-    val docTaskCols = Seq("url", "host", "announceEpochDay", "secCode",
-      "pageDepth", "seenKey", "arrivalSeq", "company", "title", "timeMs", "timeStr")
-    val toFetch = assigned.where(col("tick_index") < cfg.ticksPerRound)
-    val deferredNow = assigned.where(col("tick_index") >= cfg.ticksPerRound)
-      .select(docTaskCols.map(col): _*)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-
-    // ---- 8. validate (S2/S3/F4) then fetch (S4) ---------------------
-    // HEAD-probe metadata first (status / content-type / magic bytes
-    // as plain columns), payload fetch only for survivors — the
-    // reference's total_valid semantics: HEAD 200 + application/pdf,
-    // with the %PDF byte-sniff rescuing mislabeled content types.
-    // The full task row rides through the probe so the validated
-    // survivors directly yield BOTH the docs delta and the stage-1
-    // results delta (reference: all_valid_reports is appended only for
-    // validate_pdf_access survivors, cninfo_report_crawler.py:479-493).
-    // NARROW probe columns via scalar UDFs on url (the synthetic
-    // network edge — a real fetcher is the same shape): an
-    // `as[DocTask].map` round-trip here costs a full object
-    // (de)serialization of every task row and measured ~2x the
-    // round's fixed cost with per-round codegen off.
-    val probeStatus = udf(net.fetchStatus _)
-    val probeCt = udf(net.fetchContentType _)
-    val probeMagic = udf(net.fetchMagic _)
-    val probedFetch = toFetch
-      .select(col("url"), col("arrivalSeq"), col("secCode"), col("company"),
-        col("title"), col("timeMs"), col("timeStr"),
-        probeStatus(col("url")).as("status"),
-        probeCt(col("url")).as("content_type"),
-        probeMagic(col("url")).as("magic"))
-      .withColumn("__valid",
-        Validate.isValid(col("status"), col("content_type"), col("magic")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val invalidFetch = probedFetch.where(!col("__valid"))
-    val validFetch = probedFetch.where(col("__valid"))
-    val resultsDelta = validFetch.select(
-      col("arrivalSeq").as("arrival_seq"),
-      col("secCode").as("sec_code_raw"),
-      col("company"), col("title"),
-      graft.canon.Canon.announceDate(
-        when(col("timeMs") >= 0, col("timeMs")), col("timeStr")).as("report_date"),
-      col("url").as("pdf_url"))
-    val fetchedDocs = validFetch.select("url").as[String]
-      .map { url =>
-        val d = net.docFor(url)
-        (d.doc_id, d.spans, round)
-      }.toDF("doc_id", "spans", "fetch_round")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    mark("pb_fetch")
-
-    // ---- 9. per-partition lineage metrics ----------------------------
-    // ONE action materializes every persisted stage and yields every
-    // scalar the round needs (totals, stop flags, reconciliation) —
-    // the per-counter count() jobs this replaces were the dominant
-    // round overhead (~8 extra job submissions per round). Each
-    // branch counts inside its own partitions (mapPartitions), so the
-    // whole metrics job is NARROW: zero exchanges, one barrier; the
-    // per-counter totals sum driver-side over ≤ counters×partitions
-    // rows.
-    def partCounts(df: DataFrame, counter: String): DataFrame =
-      df.mapPartitions { it =>
-        var n = 0L
-        while (it.hasNext) { it.next(); n += 1 }
-        if (n == 0) Iterator.empty
-        else Iterator((round, counter, org.apache.spark.TaskContext.getPartitionId(), n))
-      }.toDF("round", "counter", "partition_id", "n")
-    // Branches sharing a SOURCE are one pass (round-7 attribution,
-    // BASELINE.md: plan_build + metrics_action were ~50% of a warm
-    // replay round, and the two biggest cached tables were each
-    // scanned twice by sibling counter branches — at the design point
-    // candidates is the O(announcements) table, so the second scan is
-    // a real per-round corpus cost, not just driver latency):
-    //  - urls_seen + filtered fold over candidates ONCE, reading only
-    //    the __passes flag (emitting a filtered row only when > 0, so
-    //    the committed rows are byte-identical to the two-branch form)
-    //  - new_unique + per-stream stream_new:* fold over newUniqueDf's
-    //    three stream columns ONCE (same narrow partitioning, same
-    //    rows as the two branches they replace)
-    val seenAndFiltered = candidates.select(col("__passes"))
-      .mapPartitions { it =>
-        var n = 0L; var f = 0L
-        it.foreach { r => n += 1; if (!r.isNullAt(0) && !r.getBoolean(0)) f += 1 }
-        val pid = org.apache.spark.TaskContext.getPartitionId()
-        if (n == 0) Iterator.empty
-        else if (f == 0) Iterator((round, "urls_seen", pid, n))
-        else Iterator((round, "urls_seen", pid, n), (round, "filtered", pid, f))
-      }.toDF("round", "counter", "partition_id", "n")
-    // Per-STREAM new-unique counts ride the same narrow job as
-    // `stream_new:<exchange>:<day>:<category>` counter rows — the
-    // listing-growth feedback (reference empty_pages_count input).
-    // Rows ≤ streams × partitions: counter-sized.
-    val newAndStream = newUniqueDf.select("exchange_rank", "epoch_day", "category")
-      .mapPartitions { it =>
-        val m = scala.collection.mutable.HashMap.empty[String, Long]
-        var n = 0L
-        it.foreach { r =>
-          n += 1
-          val k = s"stream_new:${r.getInt(0)}:${r.getInt(1)}:${r.getString(2)}"
-          m.update(k, m.getOrElse(k, 0L) + 1)
+      // ---- 1. listing expansion (synthetic S1 scan) -------------------
+      // The whole per-(exchange,date,category) stream state is one row;
+      // rows are generated executor-side from the pure generator. Page
+      // GROWTH is decided after dedup (step 9b).
+      val anns = listing.flatMap { t =>
+        net.announcementsFor(t).map { a =>
+          (t.exchangeRank, t.epochDay, t.category, a.secCode, a.secName, a.title,
+            a.timeMs, a.timeStr, a.adjunctUrl, a.arrivalSeq, t.page)
         }
-        val pid = org.apache.spark.TaskContext.getPartitionId()
-        val head = if (n == 0) Iterator.empty
-                   else Iterator((round, "new_unique", pid, n))
-        head ++ m.iterator.map { case (k, c) => (round, k, pid, c) }
-      }.toDF("round", "counter", "partition_id", "n")
-    val metricsDelta =
-      seenAndFiltered
-        .unionByName(newAndStream)
-        .unionByName(partCounts(fetchedDocs, "fetched"))
-        .unionByName(partCounts(invalidFetch, "invalid"))
-        .unionByName(partCounts(deferredNow, "deferred"))
-        .unionByName(partCounts(denied, "robots_denied"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    mark("plan_build")
-    val metricsRows = metricsDelta.collect()
-    mark("metrics_action")
-    val totalsByCounter = metricsRows
-      .groupBy(_.getString(1))
-      .view.mapValues(_.map(_.getLong(3)).sum).toMap
-      .withDefaultValue(0L)
-    val urlsSeenCnt = totalsByCounter("urls_seen")
-    val filtered = totalsByCounter("filtered")
-    val newUnique = totalsByCounter("new_unique")
-    val fetchedCnt = totalsByCounter("fetched")
-    val invalidCnt = totalsByCounter("invalid")
-    val deferredCnt = totalsByCounter("deferred")
-    val deniedCnt = totalsByCounter("robots_denied")
-    val dupDropped = urlsSeenCnt - filtered - newUnique
+      }.toDF("exchange_rank", "epoch_day", "category", "sec_code_raw", "company",
+          "title", "time_ms", "time_str", "adjunct_url", "arrival_seq", "page_depth")
 
-    // ---- 9b. listing frontier growth (driver-side, counter-fed) -----
-    val keptByStream: Map[(Int, Int, String), Long] = totalsByCounter
-      .collect { case (k, n) if k.startsWith("stream_new:") =>
-        val Array(_, ex, day, cat) = k.split(":", 4)
-        (ex.toInt, day.toInt, cat) -> n
-      }.toMap
-    val nextTasks: Seq[ListingTask] = listingTasks.flatMap { t =>
-      nextListingTask(t,
-        net.rowsOnPage(t.exchangeRank, t.epochDay, t.category, t.page),
-        keptByStream.getOrElse((t.exchangeRank, t.epochDay, t.category), 0L),
-        net.totalPages(t.exchangeRank, t.epochDay, t.category), cfg)
-    }
-    val listingPending = nextTasks.size.toLong
+      // ---- 2. filters F1/F2 + canonicalization ------------------------
+      val candidates = cache(anns.withColumn("__passes",
+        graft.report.Report.stage1Filter(cfg.targetYears)(col("title"))))
 
-    // ---- 10. atomic snapshot commit ---------------------------------
-    val done = listingPending == 0 && deferredCnt == 0
-    val totals = Totals(urlsSeenCnt, filtered, dupDropped, newUnique,
-      deniedCnt, fetchedCnt, invalidCnt, deferredCnt)
-    // Sketch commit. Broadcast regime: the round's delta is COLLECTED
-    // once (one small job over the cached new keys) and OR-ed into
-    // the carried map; that merged map is the next round's carry AND
-    // the whole committed table, one `replaced` dir built locally —
-    // no distributed sketch job, no deltas, nothing to compact.
-    // Distributed regime: the delta stays executor-side, one dir per
-    // round, and once `SketchCompactEvery` dirs exist they are
-    // OR-merged (one row per pid) and re-committed as a full rewrite,
-    // so reads stay O(P) rows however long the crawl runs.
-    val nextSketchMap: Option[Map[Int, Array[Long]]] =
-      if (!broadcastRegime) None
-      else Some {
-        val prev = sketchMap.getOrElse(Map.empty[Int, Array[Long]])
-        if (newUnique == 0) prev
-        else SeenFilter.collectSketches(sketchDelta).foldLeft(prev) { case (m, (pid, bits)) =>
-          m.updated(pid, m.get(pid).fold(bits)(SeenFilter.orBits(_, bits)))
+      // single select, not chained withColumns: every DataFrame op
+      // re-analyzes the whole accumulated tree, and the round loop pays
+      // that per round (round 8 driver-latency cut; same plan)
+      val kept = candidates.where(col("__passes"))
+        .select(col("*"),
+          concat(lit(net.urlBase), col("adjunct_url")).as("url"),
+          concat_ws("", col("sec_code_raw"), col("title"), col("time_ms"),
+            col("time_str"), col("adjunct_url")).as("seen_key"))
+
+      // ---- 3. within-batch first-wins (A1) — one min_by aggregate,
+      // planned as a partial + final SortAggregate around its exchange
+      // (dup-heavy batches shrink before it). Width prune first:
+      // url/seen_key are derived, nothing downstream reads adjunct_url
+      // or the filter flag — and min_by's struct buffer would otherwise
+      // carry them through the shuffle (nested-column pruning does not
+      // reach into agg buffers; measured at the 10x bench point).
+      val batchFirst = SeenFilter.firstWinsAgg(
+        kept.drop("adjunct_url", "__passes"), Seq("seen_key"), "arrival_seq")
+      mark("pb_filters")
+
+      // ---- 4. bloom pre-filter + exact anti-join vs seen --------------
+      // One probe regime per crawl, fixed by the config
+      // (SeenFilter.broadcastable). Broadcast: the merged sketch map
+      // rides the Carry, so steady-state rounds probe narrow with ZERO
+      // sketch I/O or jobs; a resume (no carry) collects it from the
+      // snapshot once. Distributed: cogroup on bloom_pid, no sketch
+      // bytes through the driver, each task holds one pid's sketch.
+      val seenPrev = log.readTable(spark, snap, SeenTable)
+      lazy val sketchPrev = log.readTable(spark, snap, SketchTable)
+      val broadcastRegime = SeenFilter.broadcastable(cfg.bloomP, params)
+      val sketchMap: Option[Map[Int, Array[Long]]] =
+        if (!broadcastRegime) None
+        else carry.sketch.orElse(
+          sketchPrev.map(skDf =>
+            SeenFilter.collectSketches(SeenFilter.mergeSketches(skDf))))
+      val probed = cache(sketchMap match {
+        case Some(m) => SeenFilter.probeBloom(batchFirst, "seen_key", cfg.bloomP, params, m)
+        case None => sketchPrev.fold(batchFirst.withColumn("might_be_seen", lit(false)))(
+          SeenFilter.probeBloomDistributed(batchFirst, "seen_key", cfg.bloomP, params, _))
+      })
+      val definitelyNew = probed.where(!col("might_be_seen")).drop("might_be_seen")
+      val possibleDup = probed.where(col("might_be_seen")).drop("might_be_seen")
+      val confirmedNew = seenPrev match {
+        case Some(seen) => possibleDup.join(seen.select("seen_key"), Seq("seen_key"), "left_anti")
+        case None => possibleDup
+      }
+      val newUniqueDf = cache(definitelyNew.unionByName(confirmedNew))
+      mark("pb_seen")
+
+      // ---- 5. build this round's sketch delta over new keys ----------
+      val sketchDelta = SeenFilter.buildPartitionedBloom(
+        newUniqueDf.select("seen_key"), "seen_key", cfg.bloomP, params)
+
+      // ---- 6. doc frontier: new tasks ∪ deferred, robots gate ---------
+      // The stage-1 result payload rides on the task (see DocTask): a
+      // results row is emitted only when its fetch VALIDATES (step 8),
+      // matching the reference's total_valid semantics
+      // (cninfo_report_crawler.py:479-493) — discovery alone puts
+      // nothing in the results table.
+      val newTasks = newUniqueDf.select(
+        col("url"),
+        lit(net.host).as("host"),
+        col("epoch_day").as("announceEpochDay"),
+        col("sec_code_raw").as("secCode"),
+        col("page_depth").as("pageDepth"),
+        col("seen_key").as("seenKey"),
+        col("arrival_seq").as("arrivalSeq"),
+        col("company"), col("title"),
+        col("time_ms").as("timeMs"),
+        col("time_str").as("timeStr"))
+        .as[DocTask]
+      val allTasks = newTasks.unionByName(deferredPrev).toDF()
+
+      val rulesDf = net.robotsRules.toDF("host", "path_prefix", "allow")
+      val gated = cache(Scheduler.robotsGate(allTasks, rulesDf))
+      val denied = gated.where(col("robots_denied"))
+      val allowed = gated.where(!col("robots_denied")).drop("robots_denied")
+
+      // ---- 7. politeness scheduling under the round budget ------------
+      // north-star priority: (announce date, stock code, page depth).
+      // The FULL task row rides through the scheduler (column-generic
+      // pass-through), so the deferred set is a plain projection — no
+      // re-join on url, which is not unique (two announcements can share
+      // an adjunctUrl; the dedup identity is the 4-tuple seenKey).
+      val schedIn = allowed.select(col("*"),
+        col("announceEpochDay").cast("long").as("priority"),
+        concat_ws("|", col("secCode"), lpad(col("pageDepth").cast("string"), 6, "0"),
+          col("seenKey")).as("tiebreak"))
+      val assigned = cache(Scheduler
+        .assignVirtualTicksCols(schedIn, cfg.saltCount, cfg.tokensPerTick, TickMs))
+      mark("pb_sched")
+      val docTaskCols = Seq("url", "host", "announceEpochDay", "secCode",
+        "pageDepth", "seenKey", "arrivalSeq", "company", "title", "timeMs", "timeStr")
+      val toFetch = assigned.where(col("tick_index") < cfg.ticksPerRound)
+      val deferredNow = cache(assigned.where(col("tick_index") >= cfg.ticksPerRound)
+        .select(docTaskCols.map(col): _*))
+
+      // ---- 8. validate (S2/S3/F4) then fetch (S4) ---------------------
+      // HEAD-probe metadata first (status / content-type / magic bytes
+      // as plain columns), payload fetch only for survivors — the
+      // reference's total_valid semantics: HEAD 200 + application/pdf,
+      // with the %PDF byte-sniff rescuing mislabeled content types.
+      // The full task row rides through the probe so the validated
+      // survivors directly yield BOTH the docs delta and the stage-1
+      // results delta (reference: all_valid_reports is appended only for
+      // validate_pdf_access survivors, cninfo_report_crawler.py:479-493).
+      // NARROW probe columns via scalar UDFs on url (the synthetic
+      // network edge — a real fetcher is the same shape): an
+      // `as[DocTask].map` round-trip here costs a full object
+      // (de)serialization of every task row and measured ~2x the
+      // round's fixed cost with per-round codegen off.
+      val probeStatus = udf(net.fetchStatus _)
+      val probeCt = udf(net.fetchContentType _)
+      val probeMagic = udf(net.fetchMagic _)
+      val probedFetch = cache(toFetch
+        .select(col("url"), col("arrivalSeq"), col("secCode"), col("company"),
+          col("title"), col("timeMs"), col("timeStr"),
+          probeStatus(col("url")).as("status"),
+          probeCt(col("url")).as("content_type"),
+          probeMagic(col("url")).as("magic"))
+        .withColumn("__valid",
+          Validate.isValid(col("status"), col("content_type"), col("magic"))))
+      val invalidFetch = probedFetch.where(!col("__valid"))
+      val validFetch = probedFetch.where(col("__valid"))
+      val resultsDelta = validFetch.select(
+        col("arrivalSeq").as("arrival_seq"),
+        col("secCode").as("sec_code_raw"),
+        col("company"), col("title"),
+        graft.canon.Canon.announceDate(
+          when(col("timeMs") >= 0, col("timeMs")), col("timeStr")).as("report_date"),
+        col("url").as("pdf_url"))
+      val fetchedDocs = cache(validFetch.select("url").as[String]
+        .map { url =>
+          val d = net.docFor(url)
+          (d.doc_id, d.spans, round)
+        }.toDF("doc_id", "spans", "fetch_round"))
+      mark("pb_fetch")
+
+      // ---- 9. per-partition lineage metrics ----------------------------
+      // ONE action materializes every persisted stage and yields every
+      // scalar the round needs (totals, stop flags, reconciliation) —
+      // the per-counter count() jobs this replaces were the dominant
+      // round overhead (~8 extra job submissions per round). Each
+      // branch counts inside its own partitions (partitionCounts), so
+      // the whole metrics job is NARROW: zero exchanges, one barrier;
+      // the per-counter totals sum driver-side over ≤
+      // counters×partitions rows. Each source is scanned once, narrowed
+      // to the columns its labels read (round-7 attribution,
+      // BASELINE.md: sibling counter branches scanning the biggest
+      // cached tables twice were a real per-round corpus cost):
+      //  - urls_seen and filtered (a non-null false __passes) fold over
+      //    candidates;
+      //  - new_unique and the per-STREAM
+      //    `stream_new:<exchange>:<day>:<category>` counts — the
+      //    listing-growth feedback (reference empty_pages_count input),
+      //    ≤ streams × partitions rows — fold over newUniqueDf.
+      val metricsDelta = Seq(
+        partitionCounts(candidates.select("__passes"), round) { r =>
+          if (!r.isNullAt(0) && !r.getBoolean(0)) Seq("urls_seen", "filtered")
+          else Seq("urls_seen")
+        },
+        partitionCounts(newUniqueDf.select("exchange_rank", "epoch_day", "category"), round) {
+          r => Seq("new_unique", s"stream_new:${r.getInt(0)}:${r.getInt(1)}:${r.getString(2)}")
+        },
+        partitionCounts(fetchedDocs.select(), round)(_ => Seq("fetched")),
+        partitionCounts(invalidFetch.select(), round)(_ => Seq("invalid")),
+        partitionCounts(deferredNow.select(), round)(_ => Seq("deferred")),
+        partitionCounts(denied.select(), round)(_ => Seq("robots_denied")))
+        .reduce(_ unionByName _)
+      mark("plan_build")
+      val metricsRows = metricsDelta.collect()
+      mark("metrics_action")
+      val totalsByCounter = metricsRows
+        .groupBy(_.getString(1))
+        .view.mapValues(_.map(_.getLong(3)).sum).toMap
+        .withDefaultValue(0L)
+      val urlsSeenCnt = totalsByCounter("urls_seen")
+      val filtered = totalsByCounter("filtered")
+      val newUnique = totalsByCounter("new_unique")
+      val fetchedCnt = totalsByCounter("fetched")
+      val invalidCnt = totalsByCounter("invalid")
+      val deferredCnt = totalsByCounter("deferred")
+      val deniedCnt = totalsByCounter("robots_denied")
+      val dupDropped = urlsSeenCnt - filtered - newUnique
+
+      // ---- 9b. listing frontier growth (driver-side, counter-fed) -----
+      val keptByStream: Map[(Int, Int, String), Long] = totalsByCounter
+        .collect { case (k, n) if k.startsWith("stream_new:") =>
+          val Array(_, ex, day, cat) = k.split(":", 4)
+          (ex.toInt, day.toInt, cat) -> n
+        }.toMap
+      val nextTasks: Seq[ListingTask] = listingTasks.flatMap { t =>
+        nextListingTask(t,
+          net.rowsOnPage(t.exchangeRank, t.epochDay, t.category, t.page),
+          keptByStream.getOrElse((t.exchangeRank, t.epochDay, t.category), 0L),
+          net.totalPages(t.exchangeRank, t.epochDay, t.category), cfg)
+      }
+      val listingPending = nextTasks.size.toLong
+
+      // ---- 10. atomic snapshot commit ---------------------------------
+      val done = listingPending == 0 && deferredCnt == 0
+      val totals = Totals(urlsSeenCnt, filtered, dupDropped, newUnique,
+        deniedCnt, fetchedCnt, invalidCnt, deferredCnt)
+      // Sketch commit. Broadcast regime: the round's delta is COLLECTED
+      // once (one small job over the cached new keys) and OR-ed into
+      // the carried map; that merged map is the next round's carry AND
+      // the whole committed table, one `replaced` dir built locally —
+      // no distributed sketch job, no deltas, nothing to compact.
+      // Distributed regime: the delta stays executor-side, one dir per
+      // round, and once `SketchCompactEvery` dirs exist they are
+      // OR-merged (one row per pid) and re-committed as a full rewrite,
+      // so reads stay O(P) rows however long the crawl runs.
+      val nextSketchMap: Option[Map[Int, Array[Long]]] =
+        if (!broadcastRegime) None
+        else Some {
+          val prev = sketchMap.getOrElse(Map.empty[Int, Array[Long]])
+          if (newUnique == 0) prev
+          else SeenFilter.collectSketches(sketchDelta).foldLeft(prev) { case (m, (pid, bits)) =>
+            m.updated(pid, m.get(pid).fold(bits)(SeenFilter.orBits(_, bits)))
+          }
         }
-      }
-    val sketchDirs = snap.tables.getOrElse(SketchTable, Nil).size
-    val (sketchAppend, sketchReplace): (Option[DataFrame], Option[DataFrame]) =
-      nextSketchMap match {
-        case Some(m) =>
-          (None, Option.when(newUnique > 0)(m.toSeq.sortBy(_._1)
-            .map { case (pid, bits) => (pid.toLong, bits) }.toDF("bloom_pid", "bits")))
-        case None if sketchDirs > 0 && sketchDirs + 1 >= SketchCompactEvery =>
-          (None, Some(SeenFilter.mergeSketches(sketchPrev.get.unionByName(sketchDelta))))
-        case None => (Option.when(newUnique > 0)(sketchDelta), None)
-      }
-    // Deltas known (from the counters) to be empty are omitted — no
-    // wasted write jobs, no empty dirs in the manifest. Small round
-    // tables coalesce to a few files (they are counter/frontier-sized;
-    // the payload-bearing docs table keeps its write parallelism).
-    def small(df: DataFrame): DataFrame = df.coalesce(cfg.commitFiles)
-    // the metrics rows were already collected for the totals — commit
-    // them as a LOCAL one-partition frame instead of re-running a
-    // distributed write over the cached branches
-    val metricsLocal = spark.createDataFrame(
-      spark.sparkContext.parallelize(metricsRows.toSeq, 1), metricsDelta.schema)
-    val deltas = Seq(
-      (newUnique > 0, SeenTable,
-        small(newUniqueDf.select("seen_key", "url", "arrival_seq"))),
-      (fetchedCnt > 0, ResultsTable, small(resultsDelta)),
-      (fetchedCnt > 0, DocsTable, fetchedDocs),
-      (true, MetricsTable, metricsLocal))
-      .collect { case (nonEmpty, name, df) if nonEmpty => name -> df }
-      .toMap ++ sketchAppend.map(SketchTable -> _)
-    val replaced = Map(
-      ListingTable -> small(nextTasks.toDS().toDF()),
-      DocsFrontierTable -> small(deferredNow)) ++
-      sketchReplace.map(SketchTable -> _)
-    mark("growth")
-    val next = log.commit(
-      deltas = deltas,
-      replaced = replaced,
-      props = Map(
-        "round" -> round.toString, "done" -> done.toString,
-        "urls_seen" -> urlsSeenCnt.toString, "filtered" -> filtered.toString,
-        "dup_dropped" -> dupDropped.toString, "new_unique" -> newUnique.toString,
-        "robots_denied" -> deniedCnt.toString, "fetched" -> fetchedCnt.toString,
-        "invalid" -> invalidCnt.toString, "deferred" -> deferredCnt.toString))
+      val sketchDirs = snap.tables.getOrElse(SketchTable, Nil).size
+      val (sketchAppend, sketchReplace): (Option[DataFrame], Option[DataFrame]) =
+        nextSketchMap match {
+          case Some(m) =>
+            (None, Option.when(newUnique > 0)(m.toSeq.sortBy(_._1)
+              .map { case (pid, bits) => (pid.toLong, bits) }.toDF("bloom_pid", "bits")))
+          case None if sketchDirs > 0 && sketchDirs + 1 >= SketchCompactEvery =>
+            (None, Some(SeenFilter.mergeSketches(sketchPrev.get.unionByName(sketchDelta))))
+          case None => (Option.when(newUnique > 0)(sketchDelta), None)
+        }
+      // Deltas known (from the counters) to be empty are omitted — no
+      // wasted write jobs, no empty dirs in the manifest. Small round
+      // tables coalesce to a few files (they are counter/frontier-sized;
+      // the payload-bearing docs table keeps its write parallelism).
+      def small(df: DataFrame): DataFrame = df.coalesce(cfg.commitFiles)
+      val replaced = Map(
+        ListingTable -> small(nextTasks.toDS().toDF()),
+        DocsFrontierTable -> small(deferredNow)) ++
+        sketchReplace.map(SketchTable -> _)
+      mark("growth")
+      // the metrics rows were already collected for the totals — commit
+      // them as a LOCAL one-partition frame instead of re-running a
+      // distributed write over the cached branches. The phase rows ride
+      // along with partition_id -1: this round's phases so far, and the
+      // previous round's commit, which that round could not time inside
+      // its own commit.
+      val phaseRows =
+        carry.commitMicros.map(us => Row(round - 1, "phase:commit", -1, us)).toSeq ++
+          phases.map { case (phase, us) => Row(round, s"phase:$phase", -1, us) }
+      val metricsLocal = spark.createDataFrame(spark.sparkContext.parallelize(
+        metricsRows.toSeq ++ phaseRows, 1), metricsDelta.schema)
+      val deltas = Seq(
+        (newUnique > 0, SeenTable,
+          small(newUniqueDf.select("seen_key", "url", "arrival_seq"))),
+        (fetchedCnt > 0, ResultsTable, small(resultsDelta)),
+        (fetchedCnt > 0, DocsTable, fetchedDocs),
+        (true, MetricsTable, metricsLocal))
+        .collect { case (nonEmpty, name, df) if nonEmpty => name -> df }
+        .toMap ++ sketchAppend.map(SketchTable -> _)
+      val next = log.commit(
+        deltas = deltas,
+        replaced = replaced,
+        props = Map(
+          "round" -> round.toString, "done" -> done.toString,
+          "urls_seen" -> urlsSeenCnt.toString, "filtered" -> filtered.toString,
+          "dup_dropped" -> dupDropped.toString, "new_unique" -> newUnique.toString,
+          "robots_denied" -> deniedCnt.toString, "fetched" -> fetchedCnt.toString,
+          "invalid" -> invalidCnt.toString, "deferred" -> deferredCnt.toString))
 
-    mark("commit")
-    Seq(candidates, probed, newUniqueDf, gated, assigned,
-      deferredNow, probedFetch, fetchedDocs, metricsDelta)
-      .foreach(_.unpersist())
-    RoundResult(round, totals, next.id, listingPending, deferredCnt,
-      Carry(Some(nextTasks), nextSketchMap))
+      RoundResult(round, totals, next.id, listingPending, deferredCnt,
+        Carry(Some(nextTasks), nextSketchMap, Some((System.nanoTime() - tMark) / 1000)))
+    } finally cached.foreach(_.unpersist())
   }
 
   /** Final stage-1 output: the reference's postprocess over the

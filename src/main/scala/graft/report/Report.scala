@@ -41,6 +41,15 @@ object Report {
         translate(c, "0123456789", "") === c
   }
 
+  /** The stage-1 title rule: F1 ([[titleFilter]]) and the F2 摘要/英文版
+    * exclusion (cninfo_report_crawler.py:111-126). The crawl applies
+    * it to every listed title, the postprocess to the results table.
+    */
+  def stage1Filter(targetYears: Seq[Int]) = {
+    val f1 = titleFilter(targetYears)
+    (c: org.apache.spark.sql.Column) => f1(c) && (!c.contains("摘要") && !c.contains("英文版"))
+  }
+
   /** Stage-1 postprocess (cninfo_report_crawler.py:515-537):
     * F1 year filter → F2 摘要/英文版 exclusion → code canonicalization
     * → A2 3-key keep-first dedup → A3 latest-per-code top-1 →
@@ -48,10 +57,8 @@ object Report {
     * company, title, report_date, pdf_url).
     */
   def postprocessStage1(ann: DataFrame, targetYears: Seq[Int]): DataFrame = {
-    val f1 = titleFilter(targetYears)
     val filtered = ann
-      .where(f1(col("title")))
-      .where(!col("title").contains("摘要") && !col("title").contains("英文版"))
+      .where(stage1Filter(targetYears)(col("title")))
       .withColumn("sec_code", Canon.classifyExchange(Canon.padCode(col("sec_code_raw"))))
     // A2: keep first arrival per (code, company, title) — min_by
     // over the unique arrival ordinal (≡ a row_number window), planned

@@ -7,8 +7,9 @@ import scala.jdk.CollectionConverters._
 
 /** `graft.bench.Probe`'s modes, each run once against one cheap query
   * on the shared session (`time`, `plan` and `stages` on sf0.001,
-  * `scale` on its own tiny generated corpus), plus the guard that keeps
-  * single-use mains from accumulating under `graft.bench` undocumented.
+  * `scale` on its own tiny generated corpus), plus two source guards:
+  * single-use mains do not accumulate under `graft.bench`
+  * undocumented, and library code reads no environment variable.
   * `canary` is not run here: it allocates ~0.8 GB of probe buffers and
   * builds and stops sessions of its own.
   */
@@ -77,5 +78,16 @@ class ProbeSpec extends SparkSpec {
     val undocumented = mains.filterNot(n => s"\\b$n\\b".r.findFirstIn(readme).nonEmpty)
     assert(undocumented.isEmpty,
       s"graft.bench mains missing from README (document or delete them): $undocumented")
+  }
+
+  test("only the entry points read environment variables") {
+    val root = Paths.get("src/main/scala")
+    val entryPoints = Set("graft/Bench.scala", "graft/Verify.scala", "graft/bench/Probe.scala")
+    val files = Files.walk(root).iterator.asScala.filter(_.toString.endsWith(".scala")).toSeq
+    assert(files.size > entryPoints.size, files)
+    val readers = files.filterNot(f => entryPoints(root.relativize(f).toString))
+      .filter(f => "sys\\.env|System\\.getenv".r.findFirstIn(Files.readString(f)).nonEmpty)
+    assert(readers.isEmpty,
+      s"library code reading the environment (take the value as a parameter): $readers")
   }
 }

@@ -2,8 +2,8 @@ package graft.crawl
 
 import graft.SparkSpec
 import graft.gen.Fixtures
-import graft.model.Span
-import java.nio.file.Files
+import graft.model.{Doc, Span}
+import java.nio.file.{Files, Paths}
 
 /** Seed-list replay golden tests (SURVEY.md §5.1-§5.2, the north
   * rule's verification): the distributed crawl must equal the
@@ -12,8 +12,9 @@ import java.nio.file.Files
   *   (b) the final URL-seen set,
   *   (c) per-row span-sequence equality (kind, text, media_ref, order)
   *       for every fetched document,
-  *   (d) lineage-counter reconciliation,
-  *   (e) the final postprocessed report.
+  *   (d) lineage-counter reconciliation and the committed phase rows,
+  *   (e) the final postprocessed report,
+  * and that a round which throws leaves nothing cached.
   */
 class CrawlReplaySpec extends SparkSpec {
 
@@ -104,6 +105,58 @@ class CrawlReplaySpec extends SparkSpec {
     assert(m("robots_denied") == t.map(_.robotsDenied).sum)
     assert(m("filtered") == filtered)
     assert(m.getOrElse("deferred", 0L) == t.map(_.deferred).sum)
+    // a partition that saw no row of a counter commits no row for it
+    val zero = log.readTable(spark, snap, CrawlJob.MetricsTable).get
+      .where("n = 0 AND counter NOT LIKE 'phase:%'").count()
+    assert(zero == 0)
+  }
+
+  test("every round commits its phase seconds as metrics rows, queryable with SQL") {
+    val phases = Set("listing_read", "pb_filters", "pb_seen", "pb_sched", "pb_fetch",
+      "plan_build", "metrics_action", "growth")
+    val rows = log.readTable(spark, log.latest().get, CrawlJob.MetricsTable).get
+      .where("counter LIKE 'phase:%'").collect()
+      .map(r => (r.getInt(0), r.getString(1).stripPrefix("phase:"), r.getInt(2), r.getLong(3)))
+    assert(rows.forall { case (_, _, pid, n) => pid == -1 && n >= 0 }, rows.mkString("\n"))
+    val last = jobRounds.last.round
+    jobRounds.map(_.round).foreach { r =>
+      val names = rows.collect { case (`r`, p, _, _) => p }.toSeq
+      // round r's commit is timed by round r + 1, so the last has none
+      val want = if (r == last) phases else phases + "commit"
+      assert(names.sorted == want.toSeq.sorted, s"round $r phases")
+    }
+
+    // the phase table in README, run through SnapshotCatalog
+    val readme = Files.readString(Paths.get("README.md"))
+    val sql = "(?m)^\\s*(SELECT .* FROM graft\\.metrics .*)$".r
+      .findFirstMatchIn(readme).getOrElse(fail("no phase-table SQL in README")).group(1)
+    val s = spark.newSession()
+    s.conf.set("spark.sql.catalog.graft", classOf[graft.snapshot.SnapshotCatalog].getName)
+    s.conf.set("spark.sql.catalog.graft.root", root)
+    val table = s.sql(sql).collect().map(r => r.getString(0) -> r.getLong(2)).toMap
+    assert(table == phases.map(_ -> jobRounds.size.toLong).toMap + ("commit" -> (jobRounds.size - 1L)))
+  }
+
+  test("a round that throws unpersists every Dataset it cached") {
+    // FixtureNet, except that fetching a document fails
+    val failing = new CrawlNet {
+      def urlBase: String = FixtureNet.urlBase
+      def host: String = FixtureNet.host
+      def totalPages(ex: Int, day: Int, cat: String): Int = FixtureNet.totalPages(ex, day, cat)
+      def rowsOnPage(ex: Int, day: Int, cat: String, page: Int): Int =
+        FixtureNet.rowsOnPage(ex, day, cat, page)
+      def announcementsFor(t: graft.model.ListingTask) = FixtureNet.announcementsFor(t)
+      def fetchStatus(url: String): Int = FixtureNet.fetchStatus(url)
+      def fetchContentType(url: String): String = FixtureNet.fetchContentType(url)
+      def fetchMagic(url: String): String = FixtureNet.fetchMagic(url)
+      def docFor(url: String): Doc = throw new IllegalStateException(s"docFor failed: $url")
+      def robotsRules: Seq[(String, String, Boolean)] = FixtureNet.robotsRules
+    }
+    spark.catalog.clearCache()
+    val failRoot = Files.createTempDirectory("crawl-fail").toString
+    val e = intercept[Exception](CrawlJob.run(spark, seeds, cfg, failRoot, failing))
+    assert(e.getMessage.contains("docFor failed"), e.getMessage)
+    assert(spark.sharedState.cacheManager.isEmpty)
   }
 
   test("final postprocessed report equals the oracle postprocess") {
