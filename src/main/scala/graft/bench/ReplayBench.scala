@@ -11,8 +11,9 @@ import org.apache.spark.sql.functions._
 
 /** The measured job for the north-star metric: URLs scheduled +
   * fetched per second over the seed-list replay pipeline, run
-  * identically at two parallelism levels (local[8] vs local[32]
-  * stands in for N vs 4N executors — BASELINE.md).
+  * identically at two parallelism levels ([[graft.Bench]]'s default
+  * local[2] vs local[8] stands in for N vs 4N executors —
+  * BASELINE.md).
   *
   * This is one Catalyst-planned pass over the full scheduling
   * pipeline — candidate generation → F1/F2 filters → first-wins
@@ -67,7 +68,7 @@ object ReplayBench {
       stages(name) = (now - tPrev) / 1e9
       tPrev = now
     }
-    val params = SeenFilter.BloomParams(1 << 18, 4)
+    val bloomBits = 1 << 18
 
     val cand = candidates(spark, n)
       .withColumn("url", concat(lit(Fixtures.UrlBase), col("adjunct_url")))
@@ -83,7 +84,8 @@ object ReplayBench {
     val preSeen = cand.where(pmod(xxhash64(col("seen_key")), lit(10)) === 0)
       .select("seen_key").distinct()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val sketchDf = SeenFilter.buildPartitionedBloom(preSeen, "seen_key", bloomP, params)
+    val sketchDf = SeenFilter.buildPartitionedBloom(preSeen, "seen_key", bloomP,
+      SeenFilter.bloomParams(bloomBits))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     sketchDf.count() // materialize the prior-round state before the clock
     mark("state_setup")
@@ -104,27 +106,15 @@ object ReplayBench {
     // SortAggregate around its exchange
     val first = SeenFilter.firstWinsAgg(kept, Seq("seen_key"), "arrival_seq")
 
-    // bloom split + exact confirm (A6 + J1) — the probe regime
-    // CrawlJob runs, decided by the same SeenFilter.broadcastable:
-    // this bench's sketch state (bloomP × 32 KB = 2 MB at the default)
-    // is under the bound, so the production path is collect+broadcast
-    // (narrow, zero shuffles); the distributed cogroup runs above it
-    // (the 10^10 design point where the state is ~12 GB). The cogroup
-    // costs a full-width candidate shuffle — A/B at 2M URLs:
-    // broadcast 13.9s / cogroup 19.9s at local[8], N→4N efficiency
-    // 0.80 vs 0.64.
+    // bloom split + exact confirm (A6 + J1): CrawlJob's seen step over
+    // one committed sketch dir (bloomP × 32 KB: 2 MB at the default,
+    // within the broadcast bound; above 256 it cogroups on bloom_pid).
     // persisted: BOTH branches of the bloom split consume it — without
     // the persist the probe shuffle (and everything upstream) runs twice
-    val probed =
-      (if (SeenFilter.broadcastable(bloomP, params))
-        SeenFilter.probeBloom(first, "seen_key", bloomP, params,
-          SeenFilter.collectSketches(sketchDf))
-      else
-        SeenFilter.probeBloomDistributed(first, "seen_key", bloomP, params, sketchDf))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val newKeys = probed.where(!col("might_be_seen")).drop("might_be_seen")
-      .unionByName(probed.where(col("might_be_seen")).drop("might_be_seen")
-        .join(preSeen, Seq("seen_key"), "left_anti"))
+    val probed = SeenFilter.Sketch(bloomP, bloomBits, None, Some(sketchDf), 1)
+      .probe(first, "seen_key")
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val newKeys = SeenFilter.confirmNew(probed, "seen_key", Some(preSeen))
 
     // robots gate (ST3)
     val rules = Fixtures.robotsRules.toDF("host", "path_prefix", "allow")

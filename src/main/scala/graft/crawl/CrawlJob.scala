@@ -23,11 +23,8 @@ import scala.collection.mutable
   * exactly from its last checkpoint.
   *
   * Scale design (10^10-URL frontier, SURVEY.md §4.2):
-  *  - seen check: candidates split by the partitioned Bloom sketch
-  *    into definitely-new (NO join at all — the common case for a
-  *    frontier) vs possible-dup (exact anti-join). False negatives
-  *    are impossible, so the seen set stays exact; false positives
-  *    only cost the exact probe.
+  *  - seen check: [[SeenFilter]]'s Bloom front over the exact seen
+  *    set — only possible dups pay the exact anti-join.
   *  - politeness shuffles on the salted host key (ST2) — the one hot
   *    host spreads over saltCount sub-queues sharing the divided
   *    budget; per-round group state is bounded by the budget, so the
@@ -80,8 +77,7 @@ object CrawlJob {
       tokensPerTick: Int = 4,        // ST1 budget per (host,salt) per tick
       ticksPerRound: Int = 8,        // politeness ticks per round
       // Seen-domain partition count and bits per partition sketch;
-      // their product fixes the crawl's probe regime
-      // (SeenFilter.broadcastable).
+      // their product fixes the crawl's probe regime (SeenFilter.Sketch)
       bloomP: Int = 32,
       bloomBits: Int = 1 << 16,
       commitFiles: Int = 8,          // file fan-in for small round tables
@@ -110,18 +106,13 @@ object CrawlJob {
 
   // Constants, not Config knobs: the O4 listing guards and the tick
   // quantum are fixed by reference parity (see Config and
-  // nextListingTask); the Bloom hash count and the sketch compaction
-  // cadence are internal sizing choices.
+  // nextListingTask).
   val EmptyRunLimit = 3         // O4 consecutive-empty stop
   val OvershootPages = 3        // O4: keep paging past totalpages up
                                 // to +3 (the API lies about totals)
   val OvershootEmptyLimit = 2   // O4: past-end soft stop after 2
                                 // consecutive empty pages
   val TickMs = 300L             // reference politeness delay (:331)
-  val BloomHashes = 4           // hash functions per seen-key probe
-  val SketchCompactEvery = 4    // distributed regime: OR-merge the
-                                // sketch deltas when the table
-                                // reaches this many dirs
 
   /** Global lineage totals for one round (the per-partition rows live
     * in the metrics table; these are the reconciliation sums).
@@ -132,11 +123,10 @@ object CrawlJob {
 
   /** Driver-side state carried between rounds of one run() loop —
     * all COUNTER-SIZED: the listing (O(streams) metadata) and, in the
-    * broadcast regime only (SeenFilter.broadcastable), the merged
-    * sketch map (≤ SeenFilter.BroadcastMaxBytes by the regime's
-    * definition; defined from round 0 on, empty before any key is
-    * seen). Both are byte-identical to what a re-read of the
-    * committed snapshot would return, so a resume (carry empty) is
+    * broadcast regime only (SeenFilter.Sketch), the merged sketch map
+    * (≤ SeenFilter.BroadcastMaxBytes; defined from round 0 on, empty
+    * before any key is seen). Both are byte-identical to a re-read of
+    * the committed snapshot, so a resume (carry empty) is
     * indistinguishable — the carry only skips the per-round parquet
     * read-back.
     *
@@ -227,8 +217,6 @@ object CrawlJob {
       day <- startDay to endDay
       cat <- Fixtures.Categories
     } yield Seed(rank, ex, day, cat)
-
-  private def bloomParams(cfg: Config) = SeenFilter.BloomParams(cfg.bloomBits, BloomHashes)
 
   /** Run (or resume) the crawl to frontier exhaustion. `net` is the
     * crawl's network edge (see [[CrawlNet]]) — the default is the
@@ -365,8 +353,6 @@ object CrawlJob {
       ds.persist(StorageLevel.MEMORY_AND_DISK)
     }
     try {
-      val params = bloomParams(cfg)
-
       // The LISTING state is O(active streams) — exchange × date ×
       // category tasks, i.e. bounded METADATA (thousands of rows at the
       // 10^10-URL design point), the same class as robots rules and the
@@ -375,10 +361,14 @@ object CrawlJob {
       // reference's empty_pages_count), and a distributed join for a
       // counter-sized decision measured 3x the round's fixed cost. The
       // page EXPANSION below (the O(announcements) fan-out) stays fully
-      // distributed.
+      // distributed. Read back, it is sorted by stream key (a multi-file
+      // table reads back in file-listing order, and the task order fixes
+      // which partition counts a stream's rows); nextTasks keeps it.
       val listingTasks: Seq[ListingTask] = carry.listing.getOrElse(
         log.readTable(spark, snap, ListingTable)
-          .map(_.as[ListingTask].collect().toSeq).getOrElse(Seq.empty))
+          .map(_.as[ListingTask].collect().toSeq
+            .sortBy(t => (t.exchangeRank, t.epochDay, t.category)))
+          .getOrElse(Seq.empty))
       // partition cap: a budget-bounded round sizes its NARROW lineage
       // to the round override too — parallelize at defaultParallelism
       // would pay a 32-task wave per tiny stage
@@ -399,7 +389,7 @@ object CrawlJob {
       // ---- 1. listing expansion (synthetic S1 scan) -------------------
       // The whole per-(exchange,date,category) stream state is one row;
       // rows are generated executor-side from the pure generator. Page
-      // GROWTH is decided after dedup (step 9b).
+      // GROWTH is decided after dedup (step 8b).
       val anns = listing.flatMap { t =>
         net.announcementsFor(t).map { a =>
           (t.exchangeRank, t.epochDay, t.category, a.secCode, a.secName, a.title,
@@ -433,39 +423,15 @@ object CrawlJob {
       mark("pb_filters")
 
       // ---- 4. bloom pre-filter + exact anti-join vs seen --------------
-      // One probe regime per crawl, fixed by the config
-      // (SeenFilter.broadcastable). Broadcast: the merged sketch map
-      // rides the Carry, so steady-state rounds probe narrow with ZERO
-      // sketch I/O or jobs; a resume (no carry) collects it from the
-      // snapshot once. Distributed: cogroup on bloom_pid, no sketch
-      // bytes through the driver, each task holds one pid's sketch.
-      val seenPrev = log.readTable(spark, snap, SeenTable)
-      lazy val sketchPrev = log.readTable(spark, snap, SketchTable)
-      val broadcastRegime = SeenFilter.broadcastable(cfg.bloomP, params)
-      val sketchMap: Option[Map[Int, Array[Long]]] =
-        if (!broadcastRegime) None
-        else carry.sketch.orElse(
-          sketchPrev.map(skDf =>
-            SeenFilter.collectSketches(SeenFilter.mergeSketches(skDf))))
-      val probed = cache(sketchMap match {
-        case Some(m) => SeenFilter.probeBloom(batchFirst, "seen_key", cfg.bloomP, params, m)
-        case None => sketchPrev.fold(batchFirst.withColumn("might_be_seen", lit(false)))(
-          SeenFilter.probeBloomDistributed(batchFirst, "seen_key", cfg.bloomP, params, _))
-      })
-      val definitelyNew = probed.where(!col("might_be_seen")).drop("might_be_seen")
-      val possibleDup = probed.where(col("might_be_seen")).drop("might_be_seen")
-      val confirmedNew = seenPrev match {
-        case Some(seen) => possibleDup.join(seen.select("seen_key"), Seq("seen_key"), "left_anti")
-        case None => possibleDup
-      }
-      val newUniqueDf = cache(definitelyNew.unionByName(confirmedNew))
+      // the sketch advances at the commit (step 9)
+      val sketch = SeenFilter.Sketch(cfg.bloomP, cfg.bloomBits, carry.sketch,
+        log.readTable(spark, snap, SketchTable), snap.tables.getOrElse(SketchTable, Nil).size)
+      val probed = cache(sketch.probe(batchFirst, "seen_key"))
+      val newUniqueDf = cache(SeenFilter.confirmNew(probed, "seen_key",
+        log.readTable(spark, snap, SeenTable)))
       mark("pb_seen")
 
-      // ---- 5. build this round's sketch delta over new keys ----------
-      val sketchDelta = SeenFilter.buildPartitionedBloom(
-        newUniqueDf.select("seen_key"), "seen_key", cfg.bloomP, params)
-
-      // ---- 6. doc frontier: new tasks ∪ deferred, robots gate ---------
+      // ---- 5. doc frontier: new tasks ∪ deferred, robots gate ---------
       // The stage-1 result payload rides on the task (see DocTask): a
       // results row is emitted only when its fetch VALIDATES (step 8),
       // matching the reference's total_valid semantics
@@ -490,7 +456,7 @@ object CrawlJob {
       val denied = gated.where(col("robots_denied"))
       val allowed = gated.where(!col("robots_denied")).drop("robots_denied")
 
-      // ---- 7. politeness scheduling under the round budget ------------
+      // ---- 6. politeness scheduling under the round budget ------------
       // north-star priority: (announce date, stock code, page depth).
       // The FULL task row rides through the scheduler (column-generic
       // pass-through), so the deferred set is a plain projection — no
@@ -509,7 +475,7 @@ object CrawlJob {
       val deferredNow = cache(assigned.where(col("tick_index") >= cfg.ticksPerRound)
         .select(docTaskCols.map(col): _*))
 
-      // ---- 8. validate (S2/S3/F4) then fetch (S4) ---------------------
+      // ---- 7. validate (S2/S3/F4) then fetch (S4) ---------------------
       // HEAD-probe metadata first (status / content-type / magic bytes
       // as plain columns), payload fetch only for survivors — the
       // reference's total_valid semantics: HEAD 200 + application/pdf,
@@ -550,7 +516,7 @@ object CrawlJob {
         }.toDF("doc_id", "spans", "fetch_round"))
       mark("pb_fetch")
 
-      // ---- 9. per-partition lineage metrics ----------------------------
+      // ---- 8. per-partition lineage metrics ----------------------------
       // ONE action materializes every persisted stage and yields every
       // scalar the round needs (totals, stop flags, reconciliation) —
       // the per-counter count() jobs this replaces were the dominant
@@ -597,7 +563,7 @@ object CrawlJob {
       val deniedCnt = totalsByCounter("robots_denied")
       val dupDropped = urlsSeenCnt - filtered - newUnique
 
-      // ---- 9b. listing frontier growth (driver-side, counter-fed) -----
+      // ---- 8b. listing frontier growth (driver-side, counter-fed) -----
       val keptByStream: Map[(Int, Int, String), Long] = totalsByCounter
         .collect { case (k, n) if k.startsWith("stream_new:") =>
           val Array(_, ex, day, cat) = k.split(":", 4)
@@ -611,38 +577,12 @@ object CrawlJob {
       }
       val listingPending = nextTasks.size.toLong
 
-      // ---- 10. atomic snapshot commit ---------------------------------
+      // ---- 9. atomic snapshot commit ---------------------------------
       val done = listingPending == 0 && deferredCnt == 0
       val totals = Totals(urlsSeenCnt, filtered, dupDropped, newUnique,
         deniedCnt, fetchedCnt, invalidCnt, deferredCnt)
-      // Sketch commit. Broadcast regime: the round's delta is COLLECTED
-      // once (one small job over the cached new keys) and OR-ed into
-      // the carried map; that merged map is the next round's carry AND
-      // the whole committed table, one `replaced` dir built locally —
-      // no distributed sketch job, no deltas, nothing to compact.
-      // Distributed regime: the delta stays executor-side, one dir per
-      // round, and once `SketchCompactEvery` dirs exist they are
-      // OR-merged (one row per pid) and re-committed as a full rewrite,
-      // so reads stay O(P) rows however long the crawl runs.
-      val nextSketchMap: Option[Map[Int, Array[Long]]] =
-        if (!broadcastRegime) None
-        else Some {
-          val prev = sketchMap.getOrElse(Map.empty[Int, Array[Long]])
-          if (newUnique == 0) prev
-          else SeenFilter.collectSketches(sketchDelta).foldLeft(prev) { case (m, (pid, bits)) =>
-            m.updated(pid, m.get(pid).fold(bits)(SeenFilter.orBits(_, bits)))
-          }
-        }
-      val sketchDirs = snap.tables.getOrElse(SketchTable, Nil).size
-      val (sketchAppend, sketchReplace): (Option[DataFrame], Option[DataFrame]) =
-        nextSketchMap match {
-          case Some(m) =>
-            (None, Option.when(newUnique > 0)(m.toSeq.sortBy(_._1)
-              .map { case (pid, bits) => (pid.toLong, bits) }.toDF("bloom_pid", "bits")))
-          case None if sketchDirs > 0 && sketchDirs + 1 >= SketchCompactEvery =>
-            (None, Some(SeenFilter.mergeSketches(sketchPrev.get.unionByName(sketchDelta))))
-          case None => (Option.when(newUnique > 0)(sketchDelta), None)
-        }
+      val (sketchAppend, sketchReplace, nextSketchMap) =
+        sketch.advance(newUniqueDf, "seen_key", newUnique > 0)
       // Deltas known (from the counters) to be empty are omitted — no
       // wasted write jobs, no empty dirs in the manifest. Small round
       // tables coalesce to a few files (they are counter/frontier-sized;
@@ -675,12 +615,8 @@ object CrawlJob {
       val next = log.commit(
         deltas = deltas,
         replaced = replaced,
-        props = Map(
-          "round" -> round.toString, "done" -> done.toString,
-          "urls_seen" -> urlsSeenCnt.toString, "filtered" -> filtered.toString,
-          "dup_dropped" -> dupDropped.toString, "new_unique" -> newUnique.toString,
-          "robots_denied" -> deniedCnt.toString, "fetched" -> fetchedCnt.toString,
-          "invalid" -> invalidCnt.toString, "deferred" -> deferredCnt.toString))
+        props = Map("round" -> round.toString, "done" -> done.toString,
+          "deferred" -> deferredCnt.toString))
 
       RoundResult(round, totals, next.id, listingPending, deferredCnt,
         Carry(Some(nextTasks), nextSketchMap, Some((System.nanoTime() - tMark) / 1000)))

@@ -19,8 +19,15 @@ import org.apache.spark.sql.functions._
   *     3 MB — executor-cache friendly. False positives cost an extra
   *     exact probe; false negatives are impossible, so the exact
   *     layer sees every true duplicate.
+  *
+  * A round's seen step is [[Sketch]]'s probe, [[confirmNew]], then the
+  * sketch's advance; no caller acts on the probe regime itself.
   */
 object SeenFilter {
+
+  val BloomHashes = 4          // hash functions per seen-key probe
+  val SketchCompactEvery = 4   // cogroup: OR-merge the deltas at 4 dirs
+  def bloomParams(bits: Int): BloomParams = BloomParams(bits, BloomHashes)
 
   /** A1/A2: first occurrence wins, deterministically — per key, the
     * row with the least `seqCol`, as one aggregate (min_by(row, seq))
@@ -176,8 +183,7 @@ object SeenFilter {
 
   /** OR-merge accumulated sketch deltas to one row per pid — all
     * executor-side (groupByKey + reduceGroups; the reduce buffer is a
-    * single bit array). Used to compact the snapshot's sketch table so
-    * reads stay O(P) rows however many rounds have committed deltas.
+    * single bit array).
     */
   def mergeSketches(sketchDf: DataFrame): DataFrame = {
     val spark = sketchDf.sparkSession
@@ -192,8 +198,7 @@ object SeenFilter {
   }
 
   /** Broadcast-map probe — the SMALL-state fast path (narrow, no
-    * exchange), for configs that are [[broadcastable]]; above the
-    * bound the round loop uses [[probeBloomDistributed]].
+    * exchange) for configs that are [[broadcastable]].
     */
   def probeBloom(candidates: DataFrame, urlCol: String, p: Int, params: BloomParams,
                  sketches: Map[Int, Array[Long]]): DataFrame = {
@@ -213,4 +218,72 @@ object SeenFilter {
     */
   def collectSketches(bloomDf: DataFrame): Map[Int, Array[Long]] =
     bloomDf.collect().map(r => r.getLong(0).toInt -> r.getSeq[Long](1).toArray).toMap
+
+  /** The rows the sketch cleared, plus the possible duplicates the
+    * exact anti-join against `seen` clears. The caller persists
+    * `probed`: both branches read it.
+    */
+  def confirmNew(probed: DataFrame, key: String, seen: Option[DataFrame]): DataFrame = {
+    val definitelyNew = probed.where(!col("might_be_seen")).drop("might_be_seen")
+    val possibleDup = probed.where(col("might_be_seen")).drop("might_be_seen")
+    definitelyNew.unionByName(
+      seen.fold(possibleDup)(s => possibleDup.join(s.select(key), Seq(key), "left_anti")))
+  }
+
+  /** One round's sketch state in the crawl's one probe regime
+    * ([[broadcastable]]). Broadcast: the merged map, carried or (on
+    * resume) collected once, is probed narrow and, OR-ed with the
+    * round's delta, is both the next carry and the whole committed
+    * table as one replaced dir. Cogroup: the committed table is probed
+    * on bloom_pid, no sketch bytes reach the driver, each round
+    * appends its delta dir, and at `SketchCompactEvery` dirs they are
+    * OR-merged to one row per pid.
+    */
+  final class Sketch private (p: Int, params: BloomParams,
+                              map: Option[Map[Int, Array[Long]]],
+                              table: Option[DataFrame], dirs: Int) {
+    private val broadcast = broadcastable(p, params)
+
+    /** `df` with `might_be_seen`, false while nothing is committed. */
+    def probe(df: DataFrame, key: String): DataFrame =
+      map.map(probeBloom(df, key, p, params, _))
+        .orElse(table.map(probeBloomDistributed(df, key, p, params, _)))
+        .getOrElse(df.withColumn("might_be_seen", lit(false)))
+
+    /** The round's new keys → (delta, replacement, next carried map). */
+    def advance(newKeys: DataFrame, key: String, anyNew: Boolean)
+        : (Option[DataFrame], Option[DataFrame], Option[Map[Int, Array[Long]]]) = {
+      val delta = buildPartitionedBloom(newKeys.select(key), key, p, params)
+      if (broadcast) {
+        val prev = map.getOrElse(Map.empty[Int, Array[Long]])
+        val next =
+          if (!anyNew) prev
+          else collectSketches(delta).foldLeft(prev) { case (m, (pid, bits)) =>
+            m.updated(pid, m.get(pid).fold(bits)(orBits(_, bits)))
+          }
+        val spark = newKeys.sparkSession
+        import spark.implicits._
+        (None, Option.when(anyNew)(next.toSeq.sortBy(_._1)
+          .map { case (pid, bits) => (pid.toLong, bits) }.toDF("bloom_pid", "bits")), Some(next))
+      } else table match {
+        case Some(t) if dirs + 1 >= SketchCompactEvery =>
+          (None, Some(mergeSketches(t.unionByName(delta))), None)
+        case _ => (Option.when(anyNew)(delta), None, None)
+      }
+    }
+  }
+
+  object Sketch {
+    /** `committed` is not read by a broadcast round that carries its
+      * map. One dir holds one row per pid; more are merged first.
+      */
+    def apply(p: Int, bits: Int, carried: Option[Map[Int, Array[Long]]],
+              committed: => Option[DataFrame], dirs: Int): Sketch = {
+      val params = bloomParams(bits)
+      if (broadcastable(p, params))
+        new Sketch(p, params, carried.orElse(committed.map(t =>
+          collectSketches(if (dirs > 1) mergeSketches(t) else t))), None, dirs)
+      else new Sketch(p, params, None, committed, dirs)
+    }
+  }
 }

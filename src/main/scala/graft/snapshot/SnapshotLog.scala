@@ -359,7 +359,7 @@ final class SnapshotLog(val root: String) {
     * list shrinks. At the design point an accumulating table gains a
     * dir per round, so un-compacted reads pay O(rounds) directory
     * listings and footer fetches — run this (or the sketch table's
-    * automatic equivalent, CrawlJob.SketchCompactEvery) on a
+    * automatic equivalent, SeenFilter.SketchCompactEvery) on a
     * maintenance cadence. `targetFiles` bounds the rewrite fan-in.
     * Returns the new snapshot (None if the table is absent/empty).
     */

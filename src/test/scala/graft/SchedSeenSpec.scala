@@ -1,13 +1,19 @@
 package graft
 
+import graft.bench.ReplayBench
 import graft.crawl.CrawlJob
+import graft.gen.Fixtures
+import graft.report.Report
 import graft.sched.Scheduler
 import graft.seen.SeenFilter
+import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
+import scala.jdk.CollectionConverters._
 
 /** Scheduler (ST1/ST2/ST3) and seen-filter (A1/A6/J1) unit +
-  * property tests.
+  * property tests, the replay pass in both probe regimes, and a source
+  * guard keeping the probe regime inside `graft.seen`.
   */
 class SchedSeenSpec extends SparkSpec {
 
@@ -168,6 +174,47 @@ class SchedSeenSpec extends SparkSpec {
     val probed2 = SeenFilter.probeBloomDistributed(cands, "url", 8, params, merged)
       .collect().map(r => r.getString(0) -> r.getBoolean(1)).toMap
     assert(probed2 == probed)
+  }
+
+  test("ReplayBench: both probe regimes schedule the sketch-free restatement") {
+    val s = spark; import s.implicits._
+    val n = 20000L
+    // ReplayBench's sketches are 1 << 18 bits = 32 KB per pid
+    val params = SeenFilter.bloomParams(1 << 18)
+    assert(SeenFilter.broadcastable(64, params), "64 × 32 KB must broadcast")
+    assert(!SeenFilter.broadcastable(512, params), "512 × 32 KB = 16 MiB must cogroup")
+    val broadcast = ReplayBench.run(s, n)
+    val cogroup = ReplayBench.run(s, n, bloomP = 512)
+    def counts(p: ReplayBench.PipelineStats) = (p.urlsSeen, p.scheduled, p.fetched, p.spans)
+    assert(counts(broadcast) == counts(cogroup))
+    // no sketch: the F1/F2-kept distinct keys, minus the pre-seen
+    // tenth of the key space, minus the robots-denied URLs
+    val cand = ReplayBench.candidates(s, n).withColumn("seen_key", concat_ws("\u0001",
+      col("sec_code_raw"), col("title"), col("time_ms"), col("time_str"), col("adjunct_url")))
+    val preSeen = cand.where(pmod(xxhash64(col("seen_key")), lit(10)) === 0)
+      .select("seen_key").as[String].collect().toSet
+    val kept = cand.where(Report.stage1Filter(Seq(2023, 2024))(col("title")))
+      .select("seen_key", "adjunct_url").distinct().as[(String, String)].collect()
+    assert(kept.map(_._1).distinct.length == kept.length, "one URL per seen key")
+    val want = kept.count { case (k, adj) =>
+      !preSeen(k) && Fixtures.robotsAllowed(Fixtures.docUrl(adj))
+    }
+    assert(want > 0 && broadcast.scheduled == want)
+  }
+
+  test("only graft.seen acts on the probe regime") {
+    val root = Paths.get("src/main/scala")
+    val files = Files.walk(root).iterator.asScala.filter(_.toString.endsWith(".scala"))
+      .filterNot(f => root.relativize(f).toString.startsWith("graft/seen/")).toSeq
+    assert(files.exists(_.endsWith("CrawlJob.scala")), files)
+    val regime = Seq("probeBloom(", "probeBloomDistributed(", "mergeSketches(",
+      "collectSketches(", "\"might_be_seen\"")
+    val actors = files.flatMap { f =>
+      val src = Files.readString(f)
+      regime.filter(src.contains).map(m => s"${root.relativize(f)}: $m")
+    }
+    assert(actors.isEmpty,
+      s"seen-step code outside graft.seen (call SeenFilter.Sketch / confirmNew): $actors")
   }
 
   test("scheduler places each (host,salt) queue on its computed partition — uniform") {

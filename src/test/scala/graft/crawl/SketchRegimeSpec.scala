@@ -23,7 +23,7 @@ class SketchRegimeSpec extends SparkSpec {
     (cfg, CrawlJob.run(spark, seeds, cfg, root), new SnapshotLog(root))
   }
   private def broadcastable(cfg: CrawlJob.Config) = SeenFilter.broadcastable(
-    cfg.bloomP, SeenFilter.BloomParams(cfg.bloomBits, CrawlJob.BloomHashes))
+    cfg.bloomP, SeenFilter.bloomParams(cfg.bloomBits))
 
   // 32768 × 512 B = 16 MiB: above the bound (many small sketches, the
   // design point's shape: only the pids that hold keys carry bytes)
